@@ -1,13 +1,14 @@
 #!/usr/bin/env python
 """Per-query isolation bench (guide §1.4): times individual declared
 queries with the noop sink, optionally dumps `.explain("formatted")`
-to plans/r06/.  NOT the driver-facing bench — that is bench.py, frozen.
+to the gitignored _work/plans/.  NOT the driver-facing bench — that is
+bench.py, frozen.
 
 Usage:
   python bench_extra.py [--sf DIR] [--trials N] [--explain TAG] q1 q2 ...
 
-  --explain before   -> writes plans/r06/<query>_before.txt
-  --explain after    -> writes plans/r06/<query>_after.txt
+  --explain before   -> writes _work/plans/<query>_before.txt
+  --explain after    -> writes _work/plans/<query>_after.txt
 """
 
 from __future__ import annotations
@@ -47,7 +48,7 @@ def main() -> None:
     for name in args.queries:
         fn = registry[name]
         if args.explain:
-            plans_dir = REPO / "plans" / "r06"
+            plans_dir = REPO / "_work" / "plans"
             plans_dir.mkdir(parents=True, exist_ok=True)
             df = fn(spark, args.sf)
             txt = df._jdf.queryExecution().explainString(

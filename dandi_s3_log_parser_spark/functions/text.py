@@ -145,11 +145,6 @@ def lang_id(text: Column) -> Column:
     )
 
 
-def fingerprint64(text: Column) -> Column:
-    """Deterministic 64-bit document fingerprint (xxhash64 of the text)."""
-    return F.xxhash64(text)
-
-
 # ---------------------------------------------------------------------------
 # PII detection / redaction
 # ---------------------------------------------------------------------------

@@ -30,6 +30,9 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
+from .dedup import word_tokens
+
 # ---------------------------------------------------------------------------
 # Gopher-style repetition metrics
 # ---------------------------------------------------------------------------
@@ -112,7 +115,7 @@ def top_bigram_fraction(
     bigram), take max/sum per doc.  Shuffle keys are (doc_id, bigram)
     then doc_id — narrow rows, perfectly partitionable.
     """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
+    toks = word_tokens(F.col(text_col))
     bigrams = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -502,8 +505,6 @@ def oov_rate(
     boundary break on (count desc, token asc) so the kept set is a
     deterministic total order both engines replay.
     """
-    from ..operators.dedup import word_tokens
-
     toks = docs.select(
         F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("_tok")
     )
@@ -560,8 +561,6 @@ def unigram_logprob(
     small SF).  The grand total rides a one-row broadcast cross join,
     not a ``collect``.
     """
-    from ..operators.dedup import word_tokens
-
     toks = docs.select(
         F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("_tok")
     )
@@ -614,8 +613,6 @@ def bigram_logprob(
     falls to the backoff term) changes only the two count inputs, not
     this plan.  The grand total rides a one-row broadcast cross join.
     """
-    from ..operators.dedup import word_tokens
-
     if not (0.0 < lam < 1.0):
         raise ValueError("lam must be in (0, 1)")
     toks_arr = word_tokens(F.col(text_col))
@@ -691,8 +688,6 @@ def encode_tokens(
     never a per-doc window).  The text is tokenized once;
     ``posexplode_outer`` keeps empty docs without a restore join.
     """
-    from ..operators.dedup import word_tokens
-
     toks = docs.select(
         F.col(id_col),
         F.posexplode_outer(word_tokens(F.col(text_col))).alias(
@@ -1069,8 +1064,6 @@ def chunk_documents(
     """
     if not 0 < stride <= window:
         raise ValueError(f"need 0 < stride <= window, got {stride}/{window}")
-    from .dedup import word_tokens
-
     toks = docs.select(
         F.col(id_col), word_tokens(F.col(text_col)).alias("_toks")
     )
@@ -1133,8 +1126,6 @@ def tfidf_top_terms(
     so a hot document cannot flood the shuffle.  Ranking uses the
     ROUNDED score on both engines, so rounding cannot reorder ties.
     """
-    from ..operators.dedup import word_tokens
-
     toks = docs.select(
         F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("term")
     )
@@ -1350,8 +1341,6 @@ def dsir_importance(
     token-keyed shuffle join (not broadcast); the three scalars
     (two totals + union-vocab size) ride a one-row broadcast.
     """
-    from ..operators.dedup import word_tokens
-
     toks = docs.select(
         F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("_tok")
     )
@@ -1473,8 +1462,6 @@ def inverted_index(
     """
     if max_postings < 1:
         raise ValueError(f"max_postings must be >= 1, got {max_postings}")
-    from .dedup import word_tokens
-
     pairs = docs.select(
         F.explode(word_tokens(F.col(text_col))).alias("token"),
         F.col(id_col).alias("_id"),
@@ -1596,7 +1583,7 @@ def boilerplate_strip(
     b = block_words
 
     def _blocks_of(p):
-        w = F.filter(F.split(p, r"\s+"), lambda t: t != "")
+        w = tokens(p)
         n = F.size(w)
         idx = F.when(
             n > 0,
@@ -1781,9 +1768,7 @@ def pmi_collocations(
     the pair table, sharing its exchange via Spark's ReusedExchange.
     The final top-k is ``TakeOrderedAndProject`` (no global sort).
     """
-    toks_arr = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks_arr = word_tokens(F.col(text_col))
     n = F.size(toks_arr)
     bg = F.zip_with(
         F.slice(toks_arr, 1, F.greatest(n - 1, F.lit(0))),
@@ -1921,7 +1906,7 @@ def chunk_fixed_windows(
             f"need 0 <= overlap < chunk_tokens; got overlap={overlap}"
         )
     step = chunk_tokens - overlap
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
+    toks = tokens(F.col(text_col))
     ln = F.size("_toks")
     n_chunks = F.when(ln <= chunk_tokens, F.lit(1)).otherwise(
         F.ceil((ln - chunk_tokens) / F.lit(step)).cast("int") + 1
@@ -2060,8 +2045,6 @@ def source_divergence(
     small side is one row per source.  The grand total is a one-row
     broadcast cross join, not a ``collect``.
     """
-    from ..operators.dedup import word_tokens
-
     toks = docs.select(
         F.col(source_col).alias("source"),
         F.explode(word_tokens(F.col(text_col))).alias("_tok"),
@@ -2128,8 +2111,6 @@ def vocab_growth(
     carry (token, long) / (doc_id, long) — never text.  The max-doc-id
     scalar rides a one-row broadcast cross join.
     """
-    from ..operators.dedup import word_tokens
-
     spark = docs.sparkSession
     toks = docs.select(
         F.col(id_col).alias("_doc"),
@@ -2212,8 +2193,6 @@ def zipf_fit(
     summation order is fixed, so the statistic is bit-deterministic
     across partitionings.
     """
-    from ..operators.dedup import word_tokens
-
     vocab = (
         docs.select(F.explode(word_tokens(F.col(text_col))).alias("_tok"))
         .groupBy("_tok")

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.text import tokens
+
 
 def _shuffle_partitions(spark) -> int:
     """``spark.sql.shuffle.partitions`` as an int, falling back to the
@@ -39,7 +41,7 @@ def _shuffle_partitions(spark) -> int:
 
 
 def word_tokens(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+    return tokens(F.lower(text))
 
 
 def exact_dedup(
@@ -1139,9 +1141,7 @@ def remove_repeated_spans(
     per_doc = spans.groupBy(id_col).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )
-    orig_toks = F.filter(
-        F.split(F.col(text_col), r"\s+"), lambda t: t != ""
-    )
+    orig_toks = tokens(F.col(text_col))
     kept = F.filter(
         orig_toks,
         lambda t, i: ~F.exists(

@@ -738,26 +738,6 @@ def decode_gif_stats(media: DataFrame) -> DataFrame:
     return media.mapInPandas(batches_fn, schema=GIF_STATS_SCHEMA)
 
 
-FRAME_SCHEMA = "media_id long, frame_index int, frame_ms long"
-
-
-def sample_frames(decoded: DataFrame, *, every_n: int = 4) -> DataFrame:
-    """Frame-sampling plumbing: one row per sampled frame index, native
-    (sequence + explode); the actual pixel grab happens at the decode
-    stub boundary on a real cluster."""
-    frames = F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
-    return decoded.filter(F.col("n_frames") > 0).select(
-        "media_id",
-        F.explode(frames).alias("frame_index"),
-        F.when(
-            F.col("n_frames") > 1,
-            (F.col("frame_index") * F.col("duration_ms") / F.col("n_frames")).cast("long"),
-        )
-        .otherwise(F.lit(0))
-        .alias("frame_ms"),
-    )
-
-
 def media_from_pages(pages: DataFrame) -> DataFrame:
     """Derive a media table from the pages table (html bytes as payload)
     — exercises binary-column plumbing against the real graft input."""

@@ -86,17 +86,3 @@ def route_binned(
         "timestamp", "bytes_sent", "ip_address", "object_key", "key_parent", "key_shard",
         *extra_cluster_cols,
     )
-
-
-def binned_rows_for_key(binned: DataFrame, object_key: str) -> DataFrame:
-    """Read the routed rows of one key — directory-pruned on
-    ``key_parent`` (a partition column), then row-group-pruned on the
-    ``key_shard``/``object_key`` sort columns' min/max stats before the
-    key equality filter evaluates."""
-    parent = object_key.split("/")[0]
-    shard = object_key.split("/")[1] if parent == "blobs" else object_key.split("/")[1][:3]
-    return binned.filter(
-        (F.col("key_parent") == parent)
-        & (F.col("key_shard") == shard)
-        & (F.col("object_key") == object_key)
-    ).select("timestamp", "bytes_sent", "ip_address")

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import word_tokens
+
 __all__ = [
     "word_counts", "bpe_pair_counts", "bpe_train", "bpe_encode_counts"
 ]
@@ -38,9 +40,7 @@ def word_counts(
 ) -> DataFrame:
     """``(word, n)`` for lowercase whitespace-delimited words — the
     distinct-word table every BPE pass runs over."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = word_tokens(F.col(text_col))
     return (
         docs.select(F.explode(toks).alias("word"))
         .groupBy("word")
@@ -203,9 +203,7 @@ def bpe_encode_counts(
     Documents with no words produce no output row (explode semantics),
     matching the SQL oracle's inner join.
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = word_tokens(F.col(text_col))
     words = docs.select(F.col(id_col), F.explode(toks).alias("word"))
     enc = (
         words.select("word")

@@ -23,12 +23,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import (
     DEFAULT_KEY_PARENTS,
     DEFAULT_OPERATION_TYPE,
+    ERROR_STATUS_PREFIX,
     OK_STATUSES,
     TEST_IP_HASH_SALT,
 )
@@ -120,6 +121,59 @@ def read_reduce_errors(catalog: Catalog) -> DataFrame:
     )
 
 
+def classify_reduced(
+    parsed: DataFrame,
+    day: str,
+    observation: Observation,
+    metrics: list[Column],
+    *,
+    passthrough: tuple[str, ...] = (),
+) -> DataFrame:
+    """Classify parsed rows into ``rclass`` ok/error, null ``url`` on
+    kept rows and drop the rest; the batch and streaming reduce share it.
+
+    ONE scan, ONE write: ok rows and error rows land in the same
+    day-partitioned table under an ``rclass`` partition column (writing
+    kept and errors as two separate actions would re-run the whole
+    parse — 2x the scan at 100 TB).  Downstream reads partition-prune
+    on rclass='ok'; the error side-channel is the rclass='error' slice
+    (replaces the reference's per-process error files,
+    _error_collection.py:7-40).  Well-formed-but-rejected rows (drop_*)
+    are filtered out entirely, matching the bad-lines golden semantics.
+
+    The caller's ``metrics`` are observed through ``observation`` on the
+    write action itself — no post-write re-scan.  The CollectMetrics
+    node sits BETWEEN the parse projection and the rclass keep-filter on
+    purpose: it is also an optimizer barrier.  Without it Catalyst
+    pushes the filter through the parse projection by substituting the
+    whole parse expression tree into the predicate — every row then pays
+    the native parse twice plus a second ArrowEvalPython (observed in
+    the round-1 physical plan).  ``passthrough`` columns are visible to
+    the metrics and dropped after the filter.
+    """
+    is_error = F.col("parse_status").startswith(ERROR_STATUS_PREFIX)
+    full = parsed.withColumn(
+        "rclass",
+        F.when(is_error, "error").when(F.col("parse_status").isin(*OK_STATUSES), "ok"),
+    ).select(
+        "timestamp",
+        "ip_address",
+        "object_key",
+        "bytes_sent",
+        # url only matters on the error side-channel (the reference
+        # error-collects the raw line, _error_collection.py:20-28);
+        # for kept rows it is dead weight in the write and the bin
+        # shuffle, so null it out — parquet RLE-nulls cost ~nothing
+        F.when(is_error, F.col("url")).alias("url"),
+        "parse_status",
+        day,
+        "rclass",
+        *passthrough,
+    )
+    full = full.observe(observation, *metrics)
+    return full.filter(F.col("rclass").isNotNull()).drop(*passthrough)
+
+
 def run_reduce_stage(
     spark: SparkSession,
     catalog: Catalog,
@@ -202,8 +256,6 @@ def _reduce_day_chunk(
     # itself: an Observation attached before the parse filters counts
     # input rows per day during the write action (the chunked work list
     # keeps the metric list inside Spark's 64-expression observe cap)
-    from pyspark.sql import Observation
-
     obs_in = Observation(f"reduce_in_{run_id}_{lo}")
     batch = batch.observe(
         obs_in, *[F.count(F.when(F.col(day) == d, 1)).alias(d) for d in days]
@@ -224,53 +276,14 @@ def _reduce_day_chunk(
         truncate_zarr=cfg.truncate_zarr,
         passthrough=("url", day, "_tz_nonstd"),
     )
-    # ONE scan, ONE write: ok rows and error rows land in the same
-    # day-partitioned table under an `rclass` partition column (writing
-    # kept and errors as two separate actions would re-run the whole
-    # parse — 2x the scan at 100 TB).  Downstream reads partition-prune
-    # on rclass='ok'; the error side-channel is the rclass='error' slice
-    # (replaces the reference's per-process error files,
-    # _error_collection.py:7-40).  Well-formed-but-rejected rows
-    # (drop_*) are filtered out entirely, matching the bad-lines golden
-    # semantics.
-    full = parsed.withColumn(
-        "rclass",
-        F.when(F.col("parse_status").startswith("error_"), "error").when(
-            F.col("parse_status").isin(*OK_STATUSES), "ok"
-        ),
-    ).select(
-        "timestamp",
-        "ip_address",
-        "object_key",
-        "bytes_sent",
-        # url only matters on the error side-channel (the reference
-        # error-collects the raw line, _error_collection.py:20-28);
-        # for kept rows it is dead weight in the write and the bin
-        # shuffle, so null it out — parquet RLE-nulls cost ~nothing
-        F.when(F.col("parse_status").startswith("error_"), F.col("url")).alias("url"),
-        "parse_status",
-        day,
-        "rclass",
-        "_tz_nonstd",
-    )
-    # rows_out per day rides the write action itself via observe() — no
-    # post-write re-scan of the output.  The CollectMetrics node sits
-    # BETWEEN the parse projection and the rclass keep-filter on
-    # purpose: it is also an optimizer barrier.  Without it Catalyst
-    # pushes the filter through the parse projection by substituting
-    # the whole parse expression tree into the predicate — every row
-    # then pays the native parse twice plus a second ArrowEvalPython
-    # (observed in the round-1 physical plan).
-    from pyspark.sql import Observation
-
+    # rows_out per day and the tz-warning count ride the write action
     obs = Observation(f"reduce_out_{run_id}_{lo}")
     metric_cols = [
         F.count(F.when((F.col(day) == d) & (F.col("rclass") == "ok"), 1)).alias(d)
         for d in days
     ]
     metric_cols.append(F.count(F.when(F.col("_tz_nonstd"), 1)).alias("_tz_warn"))
-    full = full.observe(obs, *metric_cols)
-    out = full.filter(F.col("rclass").isNotNull()).drop("_tz_nonstd")
+    out = classify_reduced(parsed, day, obs, metric_cols, passthrough=("_tz_nonstd",))
     catalog.write(out, "reduced", partition_by=(day, "rclass"), mode="overwrite")
     tz_warn = obs.get.get("_tz_warn", 0)
     if tz_warn:

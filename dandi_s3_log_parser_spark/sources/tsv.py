@@ -10,9 +10,7 @@ and golden-parity testing:
 * binned tree   — one file per object key at
   ``blobs/<id[:3]>/<id[3:6]>/<id>.tsv`` / ``zarr/<id>.tsv`` with columns
   ``timestamp\tbytes_sent\tip_address``
-  (reference ``_bin_all_reduced_s3_logs_by_object_key.py:94-113``);
-* mapped per-asset — indexed, timestamp-sorted
-  (reference ``_map_binned_s3_logs_to_dandisets.py:183-193``).
+  (reference ``_bin_all_reduced_s3_logs_by_object_key.py:94-113``).
 
 Export writers are driver-side (guarded by ``max_rows``): they exist for
 small result sets and fixtures — at scale the partitioned table IS the
@@ -106,30 +104,4 @@ def export_binned_tsv_tree(
         grp_out = grp[["timestamp", "bytes_sent", "ip_address"]]
         grp_out.to_csv(target, sep="\t", index=False)
         written.append(rel)
-    return written
-
-
-def export_mapped_asset_tsvs(
-    mapped: DataFrame, out_dir: str | Path, *, max_rows: int = _EXPORT_GUARD
-) -> list[Path]:
-    """Per-asset mapped logs: ``<dandiset>/<version>/<asset>.tsv`` with the
-    unnamed 0-based index column the reference writes (filename mangling
-    ``name.replace('.', '_')``, ``_map...py:154``)."""
-    pdf = mapped.limit(max_rows + 1).toPandas()
-    if len(pdf) > max_rows:
-        raise ValueError(f"export exceeds max_rows={max_rows}; use the parquet table")
-    out_dir = Path(out_dir)
-    written: list[Path] = []
-    keys = ["dandiset_id", "version_id", "asset_path"]
-    for (ds, ver, asset), grp in pdf.groupby(keys, sort=True):
-        fname = Path(asset).name.replace(".", "_") + ".tsv"
-        target = out_dir / ds / ver / fname
-        target.parent.mkdir(parents=True, exist_ok=True)
-        grp_out = grp.sort_values("index").set_index("index")[
-            ["timestamp", "bytes_sent", "region"]
-        ]
-        # index=True with empty label reproduces the reference's unnamed
-        # first column (to_csv(..., index=True), _map...py:191-193)
-        grp_out.to_csv(target, sep="\t", index=True, index_label="")
-        written.append(target.relative_to(out_dir))
     return written

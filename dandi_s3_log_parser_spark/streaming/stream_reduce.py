@@ -33,14 +33,14 @@ back with :func:`read_stream_reduced` / :func:`read_stream_errors`.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import ERROR_STATUS_PREFIX, OK_STATUSES, PAGES_SCHEMA
+from ..config import PAGES_SCHEMA
 from ..functions.text import with_header_and_text
 from ..operators.reduce import parse_and_filter_log_lines
 from ..plans.lineage import LineageLog
-from ..plans.pipeline import PipelineConfig
+from ..plans.pipeline import PipelineConfig, classify_reduced
 from ..sources.tables import Catalog
 
 
@@ -87,8 +87,6 @@ def stream_reduce(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
         day = cfg.day_col
         batch = batch_df.withColumn(day, F.date_format("warc_ts", "yyyy-MM-dd"))
         # per-batch lineage counts ride the ONE write action via
@@ -106,39 +104,18 @@ def stream_reduce(
             passthrough=("url", day),
         )
         # ONE scan, ONE write (batch-reduce parity): ok + error rows
-        # under an rclass partition column.  The observe sits BETWEEN
-        # the parse projection and the rclass keep-filter: it counts
-        # kept/error rows AND blocks Catalyst from pushing the filter
-        # through the parse projection (which would duplicate the whole
-        # parse expression tree — see plans/pipeline.py reduce stage)
-        full = parsed.withColumn(
-            "rclass",
-            F.when(
-                F.col("parse_status").startswith(ERROR_STATUS_PREFIX), "error"
-            ).when(F.col("parse_status").isin(*OK_STATUSES), "ok"),
-        ).select(
-            "timestamp",
-            "ip_address",
-            "object_key",
-            "bytes_sent",
-            # url only matters on the error side-channel (the reference
-            # error-collects the raw line); null it out on kept rows —
-            # dead weight in the write otherwise (parquet RLE-null)
-            F.when(
-                F.col("parse_status").startswith(ERROR_STATUS_PREFIX),
-                F.col("url"),
-            ).alias("url"),
-            "parse_status",
-            day,
-            "rclass",
-        )
+        # under an rclass partition column, kept/error counts observed
+        # on the write itself
         obs_out = Observation(f"stream_out_{batch_id}")
-        full = full.observe(
+        out = classify_reduced(
+            parsed,
+            day,
             obs_out,
-            F.count(F.when(F.col("rclass") == "ok", 1)).alias("n_ok"),
-            F.count(F.when(F.col("rclass") == "error", 1)).alias("n_err"),
+            [
+                F.count(F.when(F.col("rclass") == "ok", 1)).alias("n_ok"),
+                F.count(F.when(F.col("rclass") == "error", 1)).alias("n_err"),
+            ],
         )
-        out = full.filter(F.col("rclass").isNotNull())
         mode = "append" if catalog.exists("reduced_stream") else "overwrite"
         catalog.write(
             out, "reduced_stream", partition_by=(day, "rclass"), mode=mode

@@ -66,7 +66,27 @@ def test_query_matches_oracle(spark, ddb, name):
     pd.testing.assert_frame_equal(got, want, check_dtype=False, obj=name)
 
 
-NO_ORACLE = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))
+NO_ORACLE = sorted(name for name, (_, sql) in entrymod.REGISTRY.items() if sql is None)
+
+
+def test_only_bpe_merges_lacks_a_duckdb_oracle():
+    # bpe_merges is checked against a pure-Python BPE in test_round5_ops
+    assert NO_ORACLE == ["bpe_merges"]
+
+
+def test_every_q_function_is_registered():
+    q_fns = {v for k, v in vars(entrymod).items() if k.startswith("q_") and callable(v)}
+    assert q_fns == set(entrymod.queries().values())
+
+
+def test_duplicate_registration_raises():
+    def q_sessionize(spark, sf):
+        raise AssertionError("never registered")
+
+    before = dict(entrymod.REGISTRY)
+    with pytest.raises(ValueError, match="already registered"):
+        entrymod.query(oracle="SELECT 1")(q_sessionize)
+    assert entrymod.REGISTRY == before
 
 
 @pytest.mark.parametrize("name", NO_ORACLE)
