@@ -3321,15 +3321,9 @@ def q_winnow_fingerprints(spark, sf):
         winnow_fingerprints,
     )
 
-    # single-row-group scan -> 1-2 tasks; the per-row window math is
-    # this query's CPU, so spread it (a real-scale scan parallelizes
-    # itself)
+    # the per-row window math is this query's CPU, so spread the scan
     return winnow_fingerprints(
-        _load_spread(spark, sf, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        ),
-        k=6,
-        window=5,
+        _load_spread(spark, sf, "documents"), k=6, window=5
     ).orderBy("doc_id", "fp")
 
 
@@ -4821,8 +4815,8 @@ def q_asof_join(spark, sf):
 
 
 # real PNG decode verified arithmetically: width/height/content
-# are planted as pure functions of media_id (synthetic_png_media
-# docstring), so DuckDB recomputes the decoded stats WITHOUT a
+# are planted as pure functions of media_id (multimodal.CODECS
+# table), so DuckDB recomputes the decoded stats WITHOUT a
 # PNG parser; byte_len comes from the exchanged payload bytes
 @query(oracle=f"""
             SELECT media_id,
@@ -4843,17 +4837,17 @@ def q_png_decode(spark, sf):
     the planted media_id arithmetic (and byte_len from the exchanged
     payload bytes), so a decoder bug cannot self-confirm."""
     from dandi_s3_log_parser_spark.operators.multimodal import (
-        decode_png_stats,
-        synthetic_png_media,
+        decode_stats,
+        synthetic_media,
     )
 
-    media = synthetic_png_media(spark, 300)
+    media = synthetic_media(spark, 300, "png")
     _publish_at_oracle_sf(sf, "png_media", media.select("media_id", "payload"))
-    return decode_png_stats(media).orderBy("media_id")
+    return decode_stats(media, "png").orderBy("media_id")
 
 
-# real BMP decode verified arithmetically (synthetic_bmp_media
-# docstring): width/height/color are planted pure functions of
+# real BMP decode verified arithmetically (multimodal.CODECS
+# table): width/height/color are planted pure functions of
 # media_id; row padding is zeros, so the padding-excluded pixel
 # sum is width*height*(b+g+r) in closed form
 @query(oracle=f"""
@@ -4879,17 +4873,17 @@ def q_bmp_decode(spark, sf):
     png_decode (the oracle never parses BMP, so a decoder bug cannot
     self-confirm)."""
     from dandi_s3_log_parser_spark.operators.multimodal import (
-        decode_bmp_stats,
-        synthetic_bmp_media,
+        decode_stats,
+        synthetic_media,
     )
 
-    media = synthetic_bmp_media(spark, 300)
+    media = synthetic_media(spark, 300, "bmp")
     _publish_at_oracle_sf(sf, "bmp_media", media.select("media_id", "payload"))
-    return decode_bmp_stats(media).orderBy("media_id")
+    return decode_stats(media, "bmp").orderBy("media_id")
 
 
-# real GIF decode verified arithmetically (synthetic_gif_media
-# docstring): width/height/base index are planted pure
+# real GIF decode verified arithmetically (multimodal.CODECS
+# table): width/height/base index are planted pure
 # functions of media_id; the first-frame palette-index sum is
 # the double range sum over the (x, y) grid — the oracle never
 # parses GIF or LZW
@@ -4917,17 +4911,17 @@ def q_gif_decode(spark, sf):
     planted index sum as a double range sum over the pixel grid (never
     parsing GIF), so an LZW bug cannot self-confirm."""
     from dandi_s3_log_parser_spark.operators.multimodal import (
-        decode_gif_stats,
-        synthetic_gif_media,
+        decode_stats,
+        synthetic_media,
     )
 
-    media = synthetic_gif_media(spark, 300)
+    media = synthetic_media(spark, 300, "gif")
     _publish_at_oracle_sf(sf, "gif_media", media.select("media_id", "payload"))
-    return decode_gif_stats(media).orderBy("media_id")
+    return decode_stats(media, "gif").orderBy("media_id")
 
 
-# real WAV decode verified arithmetically (synthetic_wav_media
-# docstring): rate/channels/samples/amplitude are planted pure
+# real WAV decode verified arithmetically (multimodal.CODECS
+# table): rate/channels/samples/amplitude are planted pure
 # functions of media_id; the low-byte sum of constant-amplitude
 # (<128) PCM-16 LE frames is n_samples * channels * amplitude
 @query(oracle=f"""
@@ -4950,13 +4944,13 @@ def q_wav_decode(spark, sf):
     format + content stats, verified by closed-form media_id arithmetic
     exactly like png_decode."""
     from dandi_s3_log_parser_spark.operators.multimodal import (
-        decode_wav_stats,
-        synthetic_wav_media,
+        decode_stats,
+        synthetic_media,
     )
 
-    media = synthetic_wav_media(spark, 300)
+    media = synthetic_media(spark, 300, "wav")
     _publish_at_oracle_sf(sf, "wav_media", media.select("media_id", "payload"))
-    return decode_wav_stats(media).orderBy("media_id")
+    return decode_stats(media, "wav").orderBy("media_id")
 
 
 # last on purpose: a sub-second query at the tail (see REGISTRY)

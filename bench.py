@@ -75,11 +75,12 @@ def _ensure_bench_pages(spark, n_pages: int, seed: int = 42):
     return spark.read.parquet(str(path)), dims
 
 
-def _executor_cpu_s(spark) -> float:
-    """Executor CPU seconds summed over completed stages (REST status
-    API — same accounting as bench_scaling.py).  Requires
-    spark.ui.enabled=true; returns -1.0 if the API is unreachable so a
-    UI hiccup never kills the benchmark line."""
+def _executor_totals(spark) -> tuple[float, float]:
+    """(executor CPU s, executor run s) summed over completed stages (REST
+    status API).  Requires spark.ui.enabled=true and a raised
+    spark.ui.retainedStages (stage eviction shrinks the sums); returns
+    (-1.0, -1.0) if the API is unreachable so a UI hiccup never kills the
+    benchmark line."""
     import urllib.request
 
     try:
@@ -90,9 +91,17 @@ def _executor_cpu_s(spark) -> float:
             timeout=10,
         ) as resp:
             stages = json.load(resp)
-        return sum(s.get("executorCpuTime", 0) for s in stages) / 1e9
     except Exception:
-        return -1.0
+        return -1.0, -1.0
+    cpu_ns = sum(s.get("executorCpuTime", 0) for s in stages)
+    run_ms = sum(s.get("executorRunTime", 0) for s in stages)
+    return cpu_ns / 1e9, run_ms / 1e3
+
+
+def _delta(before: float, after: float) -> float:
+    """Growth of a cumulative executor sum; -1.0 when either read failed
+    or the sum shrank (stage eviction) — unusable, not zero-cost."""
+    return round(after - before, 3) if 0 <= before <= after else -1.0
 
 
 def _between_query_cleanup(spark) -> None:
@@ -133,19 +142,14 @@ def bench_pipeline(spark, n_pages: int, trials: int):
         wh = WORK / "bench_warehouse"
         shutil.rmtree(wh, ignore_errors=True)
         catalog = Catalog(spark, wh)
-        cpu0 = _executor_cpu_s(spark)
+        cpu0, _ = _executor_totals(spark)
         t0 = time.perf_counter()
         run_pipeline(
             spark, catalog, pages, dims, PipelineConfig(), f"bench-{tag}", resume=False
         )
         wall = time.perf_counter() - t0
-        cpu1 = _executor_cpu_s(spark)
-        cpu = (
-            round(cpu1 - cpu0, 3)
-            if cpu0 >= 0 and cpu1 >= 0 and cpu1 >= cpu0
-            else -1.0
-        )
-        return round(wall, 3), cpu
+        cpu1, _ = _executor_totals(spark)
+        return round(wall, 3), _delta(cpu0, cpu1)
 
     cold_sec, _ = one_pass("cold")
     steady = [one_pass(f"steady{i}") for i in range(trials)]
@@ -273,19 +277,13 @@ def main() -> None:
             # localCheckpoint blocks into the next, so only the first
             # trial ran from the storage state an isolated run sees
             _between_query_cleanup(spark)
-            cpu0 = _executor_cpu_s(spark)
+            cpu0, _ = _executor_totals(spark)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.mode("overwrite").format("noop").save()
             ts.append(round(time.perf_counter() - t0, 3))
-            cpu1 = _executor_cpu_s(spark)
-            # a shrinking cumulative sum (stage eviction despite the
-            # raised retention) is unusable, not zero-cost: sentinel it
-            cs.append(
-                round(cpu1 - cpu0, 3)
-                if cpu0 >= 0 and cpu1 >= 0 and cpu1 >= cpu0
-                else -1.0
-            )
+            cpu1, _ = _executor_totals(spark)
+            cs.append(_delta(cpu0, cpu1))
         queries[name] = min(ts)
         trials[name] = ts
         cpu_s[name] = cs

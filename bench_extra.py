@@ -35,6 +35,7 @@ def main() -> None:
 
     import os
 
+    from bench import _between_query_cleanup
     from dandi_s3_log_parser_spark.session import get_spark
 
     import __spark_entry__ as entrymod
@@ -59,13 +60,7 @@ def main() -> None:
             (plans_dir / f"{name}_{args.explain}.txt").write_text(txt)
         ts = []
         for t in range(args.trials):
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass
-            import gc
-
-            gc.collect()
+            _between_query_cleanup(spark)
             spark.sparkContext.setJobDescription(f"{name} trial {t}")
             t0 = time.perf_counter()
             df = fn(spark, args.sf)

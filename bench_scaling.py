@@ -34,7 +34,7 @@ def run_worker(
     cpus: int, n_pages: int, trials: int = 2, wh_root: str = None,
     stage: str = "all", driver_memory: str = "48g",
 ) -> dict:
-    from bench import _ensure_bench_pages
+    from bench import _delta, _ensure_bench_pages, _executor_totals
     from dandi_s3_log_parser_spark.plans.pipeline import (
         PipelineConfig,
         run_pipeline,
@@ -59,20 +59,6 @@ def run_worker(
         },
     )
     pages, dims = _ensure_bench_pages(spark, n_pages)
-
-    def executor_totals():
-        """(executor_cpu_s, executor_run_s) summed over completed stages."""
-        import urllib.request
-
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete"
-        ) as resp:
-            stages = json.load(resp)
-        cpu_ns = sum(s.get("executorCpuTime", 0) for s in stages)
-        run_ms = sum(s.get("executorRunTime", 0) for s in stages)
-        return cpu_ns / 1e9, run_ms / 1e3
 
     def one_pass(wh):
         catalog = Catalog(spark, wh)
@@ -103,15 +89,13 @@ def run_worker(
     for trial in range(trials):
         wh = root / f"scale_wh_{cpus}"
         shutil.rmtree(wh, ignore_errors=True)
-        cpu0, run0 = executor_totals()
+        cpu0, run0 = _executor_totals(spark)
         t0 = time.perf_counter()
         one_pass(wh)
         secs.append(round(time.perf_counter() - t0, 3))
-        cpu1, run1 = executor_totals()
-        # guard against stage eviction (see retainedStages above):
-        # a shrunken cumulative sum is unusable, not negative cost
-        cpu_secs.append(round(cpu1 - cpu0, 3) if cpu1 >= cpu0 else -1.0)
-        run_secs.append(round(run1 - run0, 3) if run1 >= run0 else -1.0)
+        cpu1, run1 = _executor_totals(spark)
+        cpu_secs.append(_delta(cpu0, cpu1))
+        run_secs.append(_delta(run0, run1))
     shutil.rmtree(wh_warm, ignore_errors=True)
     shutil.rmtree(wh, ignore_errors=True)
     best = min(secs)

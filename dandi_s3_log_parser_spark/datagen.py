@@ -15,13 +15,15 @@ replace the reference's network sources (FIXTURES.md §2):
 
 Every byte is a deterministic function of (seed, n_pages): a single
 seeded numpy Generator drives all draws in a fixed order, on the driver,
-so output is independent of Spark parallelism.
+so output is independent of Spark parallelism.  Pages are built by one
+vectorized builder, :func:`_build_page_chunk`, shared with the
+distributed :func:`generate_pages_spark`.
 
 The ``html`` payload's first line is an S3-access-log-style record in the
 exact 26-field format of the reference fixtures (see
 ``tests/test_reduction/examples/reduction_example_0/raw_logs``); the rest
 of the payload is the body whose extraction must equal ``text``
-byte-for-byte.  A configurable minority of rows is malformed in the ways
+byte-for-byte.  A fixed minority of rows is malformed in the ways
 ``reduction_example_2`` exercises (unescaped quotes in user_agent,
 non-2xx statuses, unknown operations, ``bytes_sent="-"``, non-routable
 object keys).
@@ -63,6 +65,13 @@ _CIDR_SPECS = (
 )
 
 _GEO_REGIONS = ("US/California", "US/New York", "DE/Berlin", "JP/Tokyo", "IN/Karnataka")
+
+N_BLOBS = 40
+N_ZARRS = 8
+# share of pages whose user agent carries an unescaped quote
+MALFORMED_FRAC = 0.015
+# rows per RNG chunk of generate_pages_spark
+PAGE_CHUNK = 8192
 
 
 def ip_to_long(ip: str) -> int:
@@ -127,17 +136,25 @@ def _make_assets(rng: np.random.Generator, n_blobs: int, n_zarrs: int) -> pd.Dat
     )
 
 
-def generate(
-    n_pages: int = 2000,
-    seed: int = 42,
-    *,
-    n_blobs: int = 40,
-    n_zarrs: int = 8,
-    malformed_frac: float = 0.015,
-) -> SyntheticTables:
+def _page_keys(assets: pd.DataFrame) -> tuple[list[str], list[str]]:
+    """(blob keys, zarr keys) of the asset dimension, in table order; the
+    first zarr key is the hot one."""
+    keys = assets["blob_key"].unique()
+    return (
+        [k for k in keys if k.startswith("blobs/")],
+        [k for k in keys if k.startswith("zarr/")],
+    )
+
+
+def generate(n_pages: int = 2000, seed: int = 42) -> SyntheticTables:
+    """Dimension tables plus ``n_pages`` pages, all from one RNG.
+
+    The dimension tables are drawn first, so they depend on the seed
+    only: ``generate(0, seed)`` gives the same dimensions as any larger
+    ``n_pages``, which is what :func:`generate_pages_spark` relies on."""
     rng = np.random.default_rng(seed)
     ips, ip_kinds = _make_ip_pool(rng)
-    assets = _make_assets(rng, n_blobs, n_zarrs)
+    assets = _make_assets(rng, N_BLOBS, N_ZARRS)
 
     # ---- dimension tables -------------------------------------------------
     cidr_rows = []
@@ -182,95 +199,9 @@ def generate(
     excluded = [ips[1], ips[11]]
     excluded_ips = pd.DataFrame({"ip_address": excluded})
 
-    # ---- pages ------------------------------------------------------------
-    n = n_pages
-    blob_keys = assets["blob_key"].unique()
-    blob_list = [k for k in blob_keys if k.startswith("blobs/")]
-    zarr_list = [k for k in blob_keys if k.startswith("zarr/")]
-    # hot-prefix skew: 45% of traffic goes to ONE zarr key (README.md:65
-    # zarr-vs-blob skew analog), remainder uniform
-    hot_zarr = zarr_list[0]
-    r = rng.random(n)
-    key_idx = rng.integers(0, len(blob_list), size=n)
-    base_keys = np.array(blob_list, dtype=object)[key_idx]
-    zarr_mask = r < 0.55
-    hot_mask = r < 0.45
-    other_zarr = np.array(zarr_list, dtype=object)[rng.integers(0, len(zarr_list), size=n)]
-    base_keys[zarr_mask] = other_zarr[zarr_mask]
-    base_keys[hot_mask] = hot_zarr
-    # a few keys that exist in no asset (inner-join drop case, J1)
-    orphan_mask = rng.random(n) < 0.01
-    base_keys[orphan_mask] = "blobs/fff/fff/ffffffffffffffffffffffffffffffff"
-
-    day_idx = rng.integers(0, len(FIXED_DAYS), size=n)
-    secs = rng.integers(0, 86400, size=n)
-    ts = pd.to_datetime(np.array(FIXED_DAYS, dtype="datetime64[s]")[day_idx]) + pd.to_timedelta(secs, unit="s")
-
-    ip_arr = np.array(ips, dtype=object)[rng.integers(0, len(ips), size=n)]
-
-    op_r = rng.random(n)
-    ops = np.full(n, "REST.GET.OBJECT", dtype=object)
-    ops[op_r > 0.95] = "REST.PUT.OBJECT"
-    ops[op_r > 0.98] = "REST.HEAD.OBJECT"
-    ops[op_r > 0.995] = "TOTALLY.UNKNOWN.OP"
-
-    st_r = rng.random(n)
-    statuses = np.full(n, "200", dtype=object)
-    statuses[st_r > 0.70] = "206"
-    statuses[st_r > 0.90] = "304"
-    statuses[st_r > 0.95] = "404"
-    statuses[st_r > 0.98] = "403"
-
-    byte_vals = rng.integers(64, 5_000_000, size=n)
-    bytes_raw = byte_vals.astype(str).astype(object)
-    dash_mask = rng.random(n) < 0.03
-    bytes_raw[dash_mask | np.isin(statuses, ["304"])] = "-"
-
-    nonroutable_mask = rng.random(n) < 0.005
-    base_keys[nonroutable_mask] = "favicon.ico"
-
-    malformed_mask = rng.random(n) < malformed_frac
-
-    lang_arr = np.where(rng.random(n) < 0.8, "en", "de")
-    word_pools = {"en": _EN_WORDS, "de": _DE_WORDS}
-    n_words = rng.integers(20, 120, size=n)
-
-    urls, htmls, texts, headers = [], [], [], []
-    suffix_choices = rng.integers(0, 10, size=(n, 4))
-    for i in range(n):
-        key = base_keys[i]
-        full_key = key
-        if key.startswith("zarr/"):
-            a, b, c, d = suffix_choices[i]
-            full_key = f"{key}/{a}/{b}/{c}/{d}"
-        url = f"https://example-bucket.s3.example.com/{full_key}"
-        t = ts[i].strftime("%d/%b/%Y:%H:%M:%S")
-        ua = "test-agent/1.0"
-        if malformed_mask[i]:
-            ua = '"Mozilla/5.0 (Windows NT 10.0; Win64; x64) test/1.0'  # unescaped quote
-        header = (
-            f"0000aaaa0000aaaa example-bucket [{t} +0000] {ip_arr[i]} - "
-            f"REQ{i:08d} {ops[i]} {full_key} "
-            f'"GET /{full_key} HTTP/1.1" {statuses[i]} - {bytes_raw[i]} '
-            f'{byte_vals[i]} 53 52 "-" "{ua}" - HOSTID== - '
-            f"ECDHE-RSA-AES128-GCM-SHA256 - example-bucket.s3.example.com TLSv1.2 - -"
-        )
-        pool = word_pools[lang_arr[i]]
-        body = " ".join(pool[j % len(pool)] for j in rng.integers(0, len(pool), size=n_words[i]))
-        urls.append(url)
-        headers.append(header)
-        texts.append(body)
-        htmls.append((header + "\n" + body).encode("utf-8"))
-
-    pages = pd.DataFrame(
-        {
-            "url": urls,
-            "warc_ts": ts,
-            "html": htmls,
-            "text": texts,
-            "lang": lang_arr,
-        }
-    )
+    # ---- pages: the same RNG, after every dimension draw ------------------
+    blob_list, zarr_list = _page_keys(assets)
+    pages = _build_page_chunk(rng, n_pages, blob_list, zarr_list, ips)
     return SyntheticTables(
         pages=pages,
         assets=assets,
@@ -278,7 +209,7 @@ def generate(
         ip_region_cache=ip_region_cache,
         geo_fallback=geo_fallback,
         excluded_ips=excluded_ips,
-        expected={"hot_zarr": hot_zarr, "ips": ips, "ip_kinds": ip_kinds},
+        expected={"hot_zarr": zarr_list[0], "ips": ips, "ip_kinds": ip_kinds},
     )
 
 
@@ -288,13 +219,15 @@ def _build_page_chunk(
     blob_list: list,
     zarr_list: list,
     ips: list,
-    malformed_frac: float,
 ) -> pd.DataFrame:
-    """Vectorized construction of one deterministic chunk of pages.
+    """Vectorized construction of ``n`` deterministic pages: the one page
+    builder behind both :func:`generate` and :func:`generate_pages_spark`.
 
-    Same distributions as :func:`generate`'s page section (hot-zarr
-    skew, op/status mix, '-' bytes, malformed quotes) — not the same
-    byte stream, since the chunked RNG is seeded per chunk."""
+    Traffic skew: 45% of rows go to ONE zarr key (README.md:65 zarr-vs-blob
+    skew analog), 10% to a uniformly drawn zarr key, the rest to blobs,
+    plus 1% orphan keys that exist in no asset (inner-join drop case, J1)
+    and 0.5% non-routable keys.  Op/status mix, ``-`` bytes and
+    unescaped-quote user agents follow ``reduction_example_2``."""
     hot_zarr = zarr_list[0]
     r = rng.random(n)
     base_keys = np.array(blob_list, dtype=object)[rng.integers(0, len(blob_list), size=n)]
@@ -326,7 +259,7 @@ def _build_page_chunk(
     bytes_raw = byte_vals.astype(str).astype(object)
     bytes_raw[(rng.random(n) < 0.03) | np.isin(statuses, ["304"])] = "-"
     base_keys[rng.random(n) < 0.005] = "favicon.ico"
-    malformed_mask = rng.random(n) < malformed_frac
+    malformed_mask = rng.random(n) < MALFORMED_FRAC
 
     lang_arr = np.where(rng.random(n) < 0.8, "en", "de")
     n_words = rng.integers(20, 120, size=n)
@@ -401,48 +334,40 @@ def _build_page_chunk(
     )
 
 
-def generate_pages_spark(
-    spark,
-    n_pages: int,
-    seed: int = 42,
-    *,
-    malformed_frac: float = 0.015,
-    chunk: int = 8192,
-):
+def generate_pages_spark(spark, n_pages: int, seed: int = 42):
     """Distributed deterministic pages table: ``spark.range`` ids ->
     chunk-seeded RNG (``default_rng([seed, 777, chunk_id])``) ->
-    vectorized chunk build in ``mapInPandas``.
+    :func:`_build_page_chunk` in ``mapInPandas``.
 
     Output is a function of (n_pages, seed) only — independent of
     partitioning and parallelism level — which is what the N-vs-4N
-    scaling protocol requires.  The driver-side :func:`generate` stays
-    the oracle for tests; this path exists because a 10^12-row design
+    scaling protocol requires.  Keys and ips come from the dimension
+    tables of ``generate(0, seed)``; the page bytes differ from
+    ``generate(n_pages, seed)``'s (each chunk has its own RNG), their
+    distributions do not.  This path exists because a 10^12-row design
     point cannot be generated single-threaded (the reference's fixtures
     are KB-scale; our bench input is not).
     """
     from .config import PAGES_SCHEMA
 
     dims_src = generate(0, seed)
-    blob_keys = dims_src.assets["blob_key"].unique()
-    blob_list = [k for k in blob_keys if k.startswith("blobs/")]
-    zarr_list = [k for k in blob_keys if k.startswith("zarr/")]
+    blob_list, zarr_list = _page_keys(dims_src.assets)
     ips = dims_src.expected["ips"]
 
     def build(batches):
         for pdf in batches:
             ids = pdf["id"].to_numpy()
-            for chunk_id in np.unique(ids // chunk):
-                lo = int(chunk_id) * chunk
-                m = int(min(chunk, n_pages - lo))
+            for chunk_id in np.unique(ids // PAGE_CHUNK):
+                lo = int(chunk_id) * PAGE_CHUNK
+                m = int(min(PAGE_CHUNK, n_pages - lo))
                 rows = _build_page_chunk(
                     np.random.default_rng([seed, 777, int(chunk_id)]),
                     m,
                     blob_list,
                     zarr_list,
                     ips,
-                    malformed_frac,
                 )
-                sel = ids[(ids >= lo) & (ids < lo + chunk)] - lo
+                sel = ids[(ids >= lo) & (ids < lo + PAGE_CHUNK)] - lo
                 yield rows.iloc[sel]
 
     # chunk <= Arrow batch size (10k default), so a chunk is rebuilt at
@@ -454,10 +379,10 @@ def generate_pages_spark(
     n_part = max(
         1,
         min(
-            n_pages // chunk,
+            n_pages // PAGE_CHUNK,
             max(
                 spark.sparkContext.defaultParallelism,
-                n_pages // (chunk * 8),
+                n_pages // (PAGE_CHUNK * 8),
             ),
         ),
     )

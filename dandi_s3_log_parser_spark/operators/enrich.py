@@ -175,22 +175,18 @@ def enrich_with_region(
     geo_fallback: DataFrame,
     *,
     salt: str = TEST_IP_HASH_SALT,
-    broadcast_ip_map: bool | None = None,
 ) -> DataFrame:
     """Add ``region`` to fact rows via an equi-join on the enriched
     distinct-IP map.
 
-    ``broadcast_ip_map``: the distinct-IP dimension is usually far
-    smaller than the facts but is NOT bounded — an unconditional
-    broadcast hint OOMs executors when a 100x corpus carries a multi-GB
-    IP dimension.  Default (None) leaves the strategy to Catalyst + AQE:
-    at runtime AQE sees the map side's actual shuffle size and converts
-    to a broadcast join with a local (no-network) fact-side read when it
-    fits, and degrades gracefully to a shuffle hash join when it does
-    not.  Pass True only when the caller can bound the map size."""
+    No broadcast hint: the distinct-IP dimension is usually far smaller
+    than the facts but is NOT bounded — an unconditional broadcast OOMs
+    executors when a 100x corpus carries a multi-GB IP dimension.  The
+    join strategy is left to Catalyst + AQE: at runtime AQE sees the map
+    side's actual shuffle size and converts to a broadcast join with a
+    local (no-network) fact-side read when it fits, and degrades
+    gracefully to a shuffle hash join when it does not."""
     ip_map = build_ip_region_map(
         facts.select("ip_address"), ip_region_cache, cidr_ranges, geo_fallback, salt=salt
     ).select("ip_address", "region")
-    if broadcast_ip_map:
-        ip_map = F.broadcast(ip_map)
     return facts.join(ip_map, "ip_address", "left").fillna({"region": "unknown"})

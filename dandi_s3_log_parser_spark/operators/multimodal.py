@@ -3,17 +3,20 @@
 Media payloads are opaque ``binary`` columns with typed metadata; the
 decode/feature kernels run as Arrow-batched ``mapInPandas`` operators so
 the Spark-side contract (schema, batch shape, partitioning) is real and
-tested even though most codec libraries are absent in this container.
+tested without any codec library installed.
 
-STUB BOUNDARY: ``decode_fn='real'`` genuinely decodes **PNG** (IHDR
-header + zlib-inflated IDAT — :func:`_decode_png`), **GIF** (variable-
-width LZW decompression per GIF89a Appendix F — :func:`_decode_gif`),
-**BMP** (24-bit
-uncompressed, padded bottom-up rows — :func:`_decode_bmp`) and
-**PCM-16 WAV** (:func:`_decode_wav`) payloads with pure-stdlib parsers
-and raises ``NotImplementedError`` for every other format — plug
-Pillow/torchaudio/ffmpeg there on a real cluster.  The
-default ``decode_fn='fake'`` is a deterministic stand-in
+Real formats: :data:`CODECS` holds one entry per pure-stdlib codec —
+**PNG** (IHDR header + zlib-inflated IDAT, :func:`_decode_png`), **WAV**
+(PCM-16 RIFF chunks, :func:`_decode_wav`), **BMP** (24-bit uncompressed,
+padded bottom-up rows, :func:`_decode_bmp`) and **GIF** (variable-width
+LZW per GIF89a Appendix F, :func:`_decode_gif`).  One generator,
+:func:`synthetic_media`, plants payloads of any of them, and one
+decoder, :func:`decode_stats`, emits their statistics.
+
+STUB BOUNDARY: :func:`decode_media` with ``decode_fn='real'`` dispatches
+on the table's magic-byte checks and raises ``NotImplementedError`` for
+every other format — plug Pillow/torchaudio/ffmpeg there on a real
+cluster.  The default ``decode_fn='fake'`` is a deterministic stand-in
 (dimensions/duration derived from a stable hash of the payload) so the
 distributed plumbing is exercised end-to-end on arbitrary bytes.
 """
@@ -23,7 +26,8 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -436,18 +440,9 @@ def decode_media(media: DataFrame, *, decode_fn: str = "fake") -> DataFrame:
     use_real = decode_fn == "real"
 
     def _real_decode(payload: bytes, kind: str) -> tuple[int, int, int, int]:
-        if payload[:8] == PNG_MAGIC:
-            width, height, _, _ = _decode_png(payload)
-            return width, height, 0, 1
-        if payload[:4] == WAV_MAGIC and payload[8:12] == b"WAVE":
-            _, _, n_samples, duration_ms, _ = _decode_wav(payload)
-            return 0, 0, duration_ms, n_samples
-        if payload[:2] == BMP_MAGIC:
-            width, height, _, _, _ = _decode_bmp(payload)
-            return width, height, 0, 1
-        if payload[:6] in GIF_MAGICS:
-            width, height, _, _, _ = _decode_gif(payload)
-            return width, height, 0, 1
+        for codec in CODECS.values():
+            if codec.is_format(payload):
+                return codec.dims(codec.decode(payload))
         raise NotImplementedError(
             "real decoding is implemented in pure stdlib for PNG, BMP, "
             "GIF and PCM-16 WAV only; other formats (JPEG, compressed "
@@ -476,266 +471,129 @@ def decode_media(media: DataFrame, *, decode_fn: str = "fake") -> DataFrame:
     return media.mapInPandas(decode_batches, schema=DECODED_SCHEMA)
 
 
-PNG_STATS_SCHEMA = (
-    "media_id long, byte_len long, width int, height int, "
-    "inflated_len long, idat_byte_sum long"
-)
+class Codec(NamedTuple):
+    """One real (pure-stdlib) media format: how to plant a payload, how
+    to recognise and decode one, and the decoded statistics' columns."""
+
+    kind: str
+    mime: str
+    # media_id -> standards-valid payload whose every decoded statistic
+    # is a closed-form function of media_id, so an independent engine
+    # can recompute it without parsing the format
+    make: Callable[[int], bytes]
+    is_format: Callable[[bytes], bool]
+    # payload -> statistics, in the order of ``stats``
+    decode: Callable[[bytes], tuple]
+    # DDL of the statistics columns (after ``media_id, byte_len``)
+    stats: str
+    # statistics -> decode_media's (width, height, duration_ms, n_frames)
+    dims: Callable[[tuple], tuple[int, int, int, int]]
 
 
-def synthetic_png_media(spark, n: int) -> DataFrame:
-    """Distributed generator of REAL (standards-valid) PNG payloads with
-    planted dimensions/content — pure integer arithmetic in ``media_id``
-    so an independent engine can recompute every decoded statistic in
-    closed form without parsing PNG:
+def _image_dims(st: tuple) -> tuple[int, int, int, int]:
+    return st[0], st[1], 0, 1
 
-    * ``width  = 8 + media_id % 13``
-    * ``height = 8 + media_id % 11``
-    * constant gray value ``(media_id * 37) % 256``
-    * hence ``inflated_len = height * (width + 1)`` (filter byte per
-      scanline) and ``idat_byte_sum = height * width * gray``.
-    """
+
+CODECS: dict[str, Codec] = {
+    # width 8 + id % 13, height 8 + id % 11, constant gray (id * 37) % 256:
+    # inflated_len = height * (width + 1) (a filter byte per scanline),
+    # idat_byte_sum = height * width * gray
+    "png": Codec(
+        "image",
+        "image/png",
+        lambda i: make_png(8 + i % 13, 8 + i % 11, (i * 37) % 256),
+        lambda p: p[:8] == PNG_MAGIC,
+        _decode_png,
+        "width int, height int, inflated_len long, idat_byte_sum long",
+        _image_dims,
+    ),
+    # sample_rate 8000 * (1 + id % 3), channels 1 + id % 2, n_samples
+    # 100 + id % 50, constant amplitude id % 128 (high byte 0):
+    # data_byte_sum = n_samples * channels * amplitude,
+    # duration_ms = n_samples * 1000 // sample_rate
+    "wav": Codec(
+        "audio",
+        "audio/wav",
+        lambda i: make_wav(8000 * (1 + i % 3), 1 + i % 2, 100 + i % 50, i % 128),
+        lambda p: p[:4] == WAV_MAGIC and p[8:12] == b"WAVE",
+        _decode_wav,
+        "sample_rate int, channels int, n_samples long, duration_ms long, "
+        "data_byte_sum long",
+        lambda st: (0, 0, st[3], st[2]),
+    ),
+    # width 4 + id % 9 (row padding varies with width), height 3 + id % 7,
+    # constant BGR (id % 256, (id * 11) % 256, (id * 29) % 256):
+    # row_stride = (3 * width + 3) // 4 * 4, pixel_bytes = row_stride *
+    # height, and (padding is zeros) pixel_byte_sum = width * height *
+    # (b + g + r)
+    "bmp": Codec(
+        "image",
+        "image/bmp",
+        lambda i: make_bmp(4 + i % 9, 3 + i % 7, (i % 256, (i * 11) % 256, (i * 29) % 256)),
+        lambda p: p[:2] == BMP_MAGIC,
+        _decode_bmp,
+        "width int, height int, row_stride int, pixel_bytes long, pixel_byte_sum long",
+        _image_dims,
+    ),
+    # width 5 + id % 11, height 4 + id % 7, pixel index at (x, y) =
+    # (id % 4 + x + y) % 4: index_sum is the double sum over the x/y
+    # grid, n_pixels = width * height, n_colors is the 4-entry table
+    "gif": Codec(
+        "image",
+        "image/gif",
+        lambda i: make_gif(5 + i % 11, 4 + i % 7, i % 4),
+        lambda p: p[:6] in GIF_MAGICS,
+        _decode_gif,
+        "width int, height int, n_colors int, n_pixels long, index_sum long",
+        _image_dims,
+    ),
+}
+
+
+def synthetic_media(spark, n: int, fmt: str) -> DataFrame:
+    """Distributed generator of ``n`` REAL (standards-valid) payloads of
+    format ``fmt`` (a :data:`CODECS` key) with ``media_id`` 0..n-1 and
+    every decoded statistic planted in closed form (see the table)."""
+    codec = CODECS[fmt]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids = pdf["id"].astype("int64")
-            payloads = [
-                make_png(8 + int(i) % 13, 8 + int(i) % 11, (int(i) * 37) % 256)
-                for i in ids
-            ]
             yield pd.DataFrame(
                 {
                     "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/png",
-                    "source_url": [f"synthetic://png/{i}" for i in ids],
+                    "kind": codec.kind,
+                    "payload": [codec.make(int(i)) for i in ids],
+                    "mime": codec.mime,
+                    "source_url": [f"synthetic://{fmt}/{i}" for i in ids],
                 }
             )
 
     return spark.range(n).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
-def decode_png_stats(media: DataFrame) -> DataFrame:
-    """Real PNG decode over a media table (Arrow-batched mapInPandas):
-    header dimensions plus zlib-inflated IDAT statistics per payload.
-    This is the non-stub codec path — it fails loudly on non-PNG bytes.
-    """
+def decode_stats(media: DataFrame, fmt: str) -> DataFrame:
+    """Real decode of every payload as format ``fmt`` (Arrow-batched
+    mapInPandas): ``media_id, byte_len`` plus the codec's statistics.
+    This is the non-stub codec path — it fails loudly on other bytes."""
+    codec = CODECS[fmt]
+    cols = [c.split() for c in codec.stats.split(", ")]
 
     def batches_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            stats = [_decode_png(p) for p in pdf["payload"]]
-            arr = np.array(stats, dtype=np.int64).reshape(len(pdf), 4)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "byte_len": pdf["payload"].str.len().astype("int64"),
-                    "width": arr[:, 0].astype("int32"),
-                    "height": arr[:, 1].astype("int32"),
-                    "inflated_len": arr[:, 2],
-                    "idat_byte_sum": arr[:, 3],
-                }
-            )
+            stats = [codec.decode(p) for p in pdf["payload"]]
+            arr = np.array(stats, dtype=np.int64).reshape(len(pdf), len(cols))
+            out = {
+                "media_id": pdf["media_id"],
+                "byte_len": pdf["payload"].str.len().astype("int64"),
+            }
+            for j, (name, ddl) in enumerate(cols):
+                out[name] = arr[:, j].astype("int32" if ddl == "int" else "int64")
+            yield pd.DataFrame(out)
 
-    return media.mapInPandas(batches_fn, schema=PNG_STATS_SCHEMA)
-
-
-WAV_STATS_SCHEMA = (
-    "media_id long, byte_len long, sample_rate int, channels int, "
-    "n_samples long, duration_ms long, data_byte_sum long"
-)
-
-
-def synthetic_wav_media(spark, n: int) -> DataFrame:
-    """Distributed generator of REAL (standards-valid) PCM-16 WAV
-    payloads with planted parameters — closed-form in ``media_id`` so
-    the oracle recomputes every decoded statistic without a WAV parser:
-
-    * ``sample_rate = 8000 * (1 + media_id % 3)``  (8/16/24 kHz)
-    * ``channels    = 1 + media_id % 2``
-    * ``n_samples   = 100 + media_id % 50``
-    * constant amplitude ``media_id % 128`` (low byte = amp, high byte
-      0), hence ``data_byte_sum = n_samples * channels * amp`` and
-      ``duration_ms = n_samples * 1000 // sample_rate``.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["id"].astype("int64")
-            payloads = [
-                make_wav(
-                    8000 * (1 + int(i) % 3),
-                    1 + int(i) % 2,
-                    100 + int(i) % 50,
-                    int(i) % 128,
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "audio",
-                    "payload": payloads,
-                    "mime": "audio/wav",
-                    "source_url": [f"synthetic://wav/{i}" for i in ids],
-                }
-            )
-
-    return spark.range(n).mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
-def decode_wav_stats(media: DataFrame) -> DataFrame:
-    """Real WAV decode over a media table (Arrow-batched mapInPandas):
-    format header plus data-chunk content statistics per payload."""
-
-    def batches_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            stats = [_decode_wav(p) for p in pdf["payload"]]
-            arr = np.array(stats, dtype=np.int64).reshape(len(pdf), 5)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "byte_len": pdf["payload"].str.len().astype("int64"),
-                    "sample_rate": arr[:, 0].astype("int32"),
-                    "channels": arr[:, 1].astype("int32"),
-                    "n_samples": arr[:, 2],
-                    "duration_ms": arr[:, 3],
-                    "data_byte_sum": arr[:, 4],
-                }
-            )
-
-    return media.mapInPandas(batches_fn, schema=WAV_STATS_SCHEMA)
-
-
-BMP_STATS_SCHEMA = (
-    "media_id long, byte_len long, width int, height int, "
-    "row_stride int, pixel_bytes long, pixel_byte_sum long"
-)
-
-
-def synthetic_bmp_media(spark, n: int) -> DataFrame:
-    """Distributed generator of REAL (standards-valid) 24-bit BMP
-    payloads with planted parameters — closed-form in ``media_id`` so
-    the oracle recomputes every decoded statistic without a BMP parser:
-
-    * ``width  = 4 + media_id % 9``   (row padding varies with width)
-    * ``height = 3 + media_id % 7``
-    * constant BGR color ``(media_id % 256, (media_id*11) % 256,
-      (media_id*29) % 256)``
-    * hence ``row_stride = (3*width + 3) // 4 * 4``,
-      ``pixel_bytes = row_stride * height``, and (padding is zeros)
-      ``pixel_byte_sum = width * height * (b + g + r)``.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["id"].astype("int64")
-            payloads = [
-                make_bmp(
-                    4 + int(i) % 9,
-                    3 + int(i) % 7,
-                    (int(i) % 256, (int(i) * 11) % 256, (int(i) * 29) % 256),
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/bmp",
-                    "source_url": [f"synthetic://bmp/{i}" for i in ids],
-                }
-            )
-
-    return spark.range(n).mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
-def decode_bmp_stats(media: DataFrame) -> DataFrame:
-    """Real BMP decode over a media table (Arrow-batched mapInPandas):
-    header dimensions plus padding-aware pixel-array statistics per
-    payload.  Fails loudly on non-BMP bytes."""
-
-    def batches_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            stats = [_decode_bmp(p) for p in pdf["payload"]]
-            arr = np.array(stats, dtype=np.int64).reshape(len(pdf), 5)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "byte_len": pdf["payload"].str.len().astype("int64"),
-                    "width": arr[:, 0].astype("int32"),
-                    "height": arr[:, 1].astype("int32"),
-                    "row_stride": arr[:, 2].astype("int32"),
-                    "pixel_bytes": arr[:, 3],
-                    "pixel_byte_sum": arr[:, 4],
-                }
-            )
-
-    return media.mapInPandas(batches_fn, schema=BMP_STATS_SCHEMA)
-
-
-GIF_STATS_SCHEMA = (
-    "media_id long, byte_len long, width int, height int, "
-    "n_colors int, n_pixels long, index_sum long"
-)
-
-
-def synthetic_gif_media(spark, n: int) -> DataFrame:
-    """Distributed generator of REAL (standards-valid, LZW-compressed)
-    GIF89a payloads with planted parameters — closed-form in
-    ``media_id`` so the oracle recomputes every decoded statistic
-    without a GIF parser:
-
-    * ``width  = 5 + media_id % 11``
-    * ``height = 4 + media_id % 7``
-    * pixel index at (x, y) = ``(media_id % 4 + x + y) % 4``, hence
-      ``index_sum = sum over the x/y grid`` (the oracle evaluates the
-      double range sum directly) and ``n_pixels = width * height``;
-      ``n_colors`` is always the 4-entry global table.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["id"].astype("int64")
-            payloads = [
-                make_gif(5 + int(i) % 11, 4 + int(i) % 7, int(i) % 4)
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": "image",
-                    "payload": payloads,
-                    "mime": "image/gif",
-                    "source_url": [f"synthetic://gif/{i}" for i in ids],
-                }
-            )
-
-    return spark.range(n).mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
-def decode_gif_stats(media: DataFrame) -> DataFrame:
-    """Real GIF decode over a media table (Arrow-batched mapInPandas):
-    screen/palette header fields plus LZW-decompressed first-frame
-    index statistics per payload.  Fails loudly on non-GIF bytes."""
-
-    def batches_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            stats = [_decode_gif(p) for p in pdf["payload"]]
-            arr = np.array(stats, dtype=np.int64).reshape(len(pdf), 5)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "byte_len": pdf["payload"].str.len().astype("int64"),
-                    "width": arr[:, 0].astype("int32"),
-                    "height": arr[:, 1].astype("int32"),
-                    "n_colors": arr[:, 2].astype("int32"),
-                    "n_pixels": arr[:, 3],
-                    "index_sum": arr[:, 4],
-                }
-            )
-
-    return media.mapInPandas(batches_fn, schema=GIF_STATS_SCHEMA)
+    return media.mapInPandas(
+        batches_fn, schema=f"media_id long, byte_len long, {codec.stats}"
+    )
 
 
 def media_from_pages(pages: DataFrame) -> DataFrame:

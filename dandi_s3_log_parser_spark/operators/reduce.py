@@ -21,7 +21,7 @@ timezone-free timestamps (header literal ``_s3_log_file_reducer.py:150``).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -75,19 +75,6 @@ def truncate_zarr_key(key: Column) -> Column:
     ).otherwise(key)
 
 
-def _resolve_key_handler(
-    truncate_zarr: bool, key_handler: Callable[[Column], Column] | None
-) -> Callable[[Column], Column]:
-    """Pluggable object-key handler (reference's ``object_key_handler``
-    hook, ``_s3_log_file_reducer.py:30,63-87``): a Column->Column
-    function; default is the DANDI zarr truncation, identity otherwise."""
-    if key_handler is not None:
-        return key_handler
-    if truncate_zarr:
-        return truncate_zarr_key
-    return lambda c: c
-
-
 def parse_and_filter_log_lines(
     df: DataFrame,
     line_col: str = "value",
@@ -96,7 +83,6 @@ def parse_and_filter_log_lines(
     excluded_ips: Iterable[str] | DataFrame | None = None,
     key_parents: Iterable[str] | None = DEFAULT_KEY_PARENTS,
     truncate_zarr: bool = True,
-    key_handler: Callable[[Column], Column] | None = None,
     passthrough: Iterable[str] = (),
     native_fast: bool = True,
 ) -> DataFrame:
@@ -159,7 +145,7 @@ def parse_and_filter_log_lines(
     # re-evaluates it per reference (measured 4x slower on this stage)
     if not native_fast:
         df = df.withColumn("_resolved", resolve_status_bytes_udf(line))
-        return _project_reduced(df, line, truncate_zarr, key_handler, passthrough)
+        return _project_reduced(df, line, truncate_zarr, passthrough)
     df = df.withColumn("_blk", F.split(F.try_element_at(F.split(line, '" '), F.lit(2)), " "))
     df = df.withColumns(
         {
@@ -191,17 +177,19 @@ def parse_and_filter_log_lines(
             ),
         ).otherwise(F.col("_udf_res")),
     )
-    return _project_reduced(df, line, truncate_zarr, key_handler, passthrough)
+    return _project_reduced(df, line, truncate_zarr, passthrough)
 
 
-def _project_reduced(df, line, truncate_zarr, key_handler, passthrough) -> DataFrame:
+def _project_reduced(df, line, truncate_zarr, passthrough) -> DataFrame:
     """Final typed projection from a df carrying ``_resolved``."""
     return df.select(
         *passthrough,
         header_timestamp(line).alias("timestamp"),
         F.col("ip_address"),
-        _resolve_key_handler(truncate_zarr, key_handler)(
-            F.col("object_key_raw")
+        (
+            truncate_zarr_key(F.col("object_key_raw"))
+            if truncate_zarr
+            else F.col("object_key_raw")
         ).alias("object_key"),
         F.when(F.col("_resolved.bytes_sent_raw") == "-", F.lit(0))
         .otherwise(F.col("_resolved.bytes_sent_raw").try_cast("long"))

@@ -50,7 +50,6 @@ def route_binned(
     reduced: DataFrame,
     *,
     salt_buckets: int = 8,
-    shuffle_partitions: int | None = None,
     extra_cluster_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Reduced rows -> binned layout, salted against hot-key skew.
@@ -79,8 +78,7 @@ def route_binned(
     )
     from .dedup import _shuffle_partitions
 
-    n = shuffle_partitions or _shuffle_partitions(df.sparkSession)
-    df = df.repartition(n, *extra_cluster_cols, "key_parent", "_salt")
+    df = df.repartition(_shuffle_partitions(df.sparkSession), *extra_cluster_cols, "key_parent", "_salt")
     df = df.sortWithinPartitions("object_key", "timestamp")
     return df.select(
         "timestamp", "bytes_sent", "ip_address", "object_key", "key_parent", "key_shard",

@@ -21,7 +21,7 @@ Physical plan intent per stage (verify with ``.explain("formatted")``):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -70,7 +70,6 @@ class PipelineConfig:
     # bounding any one window task to a single bucket of the hottest
     # asset; None = single-window (skew-prone, lowest fixed overhead)
     mapped_skew_bucket: str | None = "hour"
-    extra: dict = field(default_factory=dict)
 
 
 def discover_days(pages: DataFrame, ts_col: str = "warc_ts") -> list[str]:

@@ -94,3 +94,9 @@ def test_rows_only_queries_run(spark, name):
     df = entrymod.queries()[name](spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.columns) > 0
+
+
+def test_winnow_fingerprints_spreads_its_scan_once(spark):
+    df = entrymod.queries()["winnow_fingerprints"](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("RoundRobinPartitioning") == 1

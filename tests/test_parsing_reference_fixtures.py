@@ -1,20 +1,27 @@
-"""Golden-file parity with the reference's own reduction fixtures.
+"""Golden-file parity with the reference's own reduction fixtures, and
+the same semantics on synthetic log lines.
 
 Mirrors the reference's e2e test strategy
 (``tests/test_reduction/test_reduce_raw_s3_log.py`` and
 ``..._bad_lines.py``): run the reduction on the reference's raw log
-fixtures and frame-compare against its expected TSVs.
+fixtures and frame-compare against its expected TSVs.  Those tests skip
+when the reference checkout is absent; the synthetic tests at the end
+pin fast/slow path equivalence, ``bytes_sent="-"`` -> 0, zarr
+truncation and the no-error-rows rule on ``datagen.generate`` headers.
 """
 
 import pandas as pd
 import pandas.testing
 import pytest
 
+from dandi_s3_log_parser_spark.datagen import generate
 from dandi_s3_log_parser_spark.operators.reduce import (
     parse_and_filter_log_lines,
     reduced_to_tsv_strings,
     split_reduced,
 )
+
+from .conftest import REFERENCE
 
 EXAMPLES = "tests/test_reduction/examples"
 
@@ -61,13 +68,89 @@ def test_reduction_example_2_bad_lines(spark, reference_dir, native_fast):
 
 
 @pytest.mark.parametrize("native_fast", [True, False], ids=["fast", "slow"])
-def test_reduction_example_1_batch(spark, reference_dir, native_fast):
+def test_reduction_example_1_batch(spark, native_fast):
     """Folder-tree batch reduction: each day file maps to its golden
-    (reference ``test_reduce_all_dandi_raw_s3_logs.py``)."""
-    base = reference_dir / EXAMPLES / "reduction_example_1"
+    (reference ``test_reduce_all_dandi_raw_s3_logs.py``).  Walks the
+    day files that exist, so it checks nothing without the reference
+    checkout; it does not skip, as it never has."""
+    base = REFERENCE / EXAMPLES / "reduction_example_1"
     for raw in sorted((base / "raw_logs").rglob("*.log")):
         rel = raw.relative_to(base / "raw_logs").with_suffix(".tsv")
         expected_path = base / "expected_output" / rel
         out, _ = _run_reduction(spark, raw, native_fast)
         golden = _golden(expected_path)
         pandas.testing.assert_frame_equal(out, golden)
+
+
+# ---------------------------------------------------------------------------
+# The same semantics on synthetic header lines (no reference checkout)
+# ---------------------------------------------------------------------------
+
+REDUCED_COLS = ["timestamp", "ip_address", "object_key", "bytes_sent", "parse_status"]
+
+
+@pytest.fixture(scope="module")
+def synthetic_paths(spark):
+    """(header lines, fast, slow): the header lines of ``generate(2000)``
+    and their reduction on each path, each row carrying its raw line in
+    ``value``."""
+    headers = [
+        h.split(b"\n", 1)[0].decode("utf-8") for h in generate(2000, 17).pages["html"]
+    ]
+    raw = spark.createDataFrame([(h,) for h in headers], "value string")
+
+    def run(native_fast):
+        return (
+            parse_and_filter_log_lines(
+                raw, "value", passthrough=("value",), native_fast=native_fast
+            )
+            .toPandas()
+            .sort_values("value")
+            .reset_index(drop=True)
+        )
+
+    return headers, run(True), run(False)
+
+
+def test_synthetic_fast_and_slow_paths_agree(synthetic_paths):
+    _, fast, slow = synthetic_paths
+    # the slow path sends every line through the Arrow UDF, unescaped
+    # user-agent quotes and non-2xx lines included
+    assert len(fast) > 1000
+    assert fast["value"].str.contains('""Mozilla', regex=False).any()
+    assert {"ok", "drop_http_status"} <= set(fast["parse_status"])
+    pandas.testing.assert_frame_equal(
+        fast[["value", *REDUCED_COLS]], slow[["value", *REDUCED_COLS]]
+    )
+
+
+def test_synthetic_dash_bytes_are_zero(synthetic_paths):
+    _, fast, _ = synthetic_paths
+    dash = fast["value"].str.contains(r'HTTP/1\.1" \d+ - - ', regex=True)
+    assert dash.sum() > 0
+    assert (fast.loc[dash, "bytes_sent"] == 0).all()
+    assert (fast.loc[~dash, "bytes_sent"] > 0).all()
+
+
+def test_synthetic_zarr_keys_truncated(synthetic_paths):
+    _, fast, _ = synthetic_paths
+    zarr = fast[fast["object_key"].str.startswith("zarr/")]
+    assert len(zarr) > 0
+    assert zarr["object_key"].str.fullmatch(r"zarr/[^/]+").all()
+    # the raw key had the chunk path the truncation removed
+    assert all(f" {k}/" in line for k, line in zip(zarr["object_key"], zarr["value"]))
+
+
+def test_synthetic_rejects_make_no_error_rows(synthetic_paths):
+    """Wrong-operation lines are dropped silently and non-2xx lines are
+    tagged ``drop_http_status``: neither becomes an ``error_*`` row
+    (reference ``test_reduce_raw_s3_log_bad_lines.py:41-44``)."""
+    headers, fast, slow = synthetic_paths
+    wrong_op = {h for h in headers if " REST.GET.OBJECT " not in h}
+    assert wrong_op
+    assert not wrong_op & set(fast["value"])
+    non_2xx = ~fast["http_status_code"].str.startswith("2")
+    assert non_2xx.sum() > 0
+    assert (fast.loc[non_2xx, "parse_status"] == "drop_http_status").all()
+    for out in (fast, slow):
+        assert not out["parse_status"].str.startswith("error_").any()

@@ -163,13 +163,13 @@ def test_decode_png_stats_distributed(spark):
     """The real codec path through mapInPandas: decoded stats equal the
     closed-form plant for every synthetic payload."""
     from dandi_s3_log_parser_spark.operators.multimodal import (
-        decode_png_stats,
-        synthetic_png_media,
+        decode_stats,
+        synthetic_media,
     )
 
     got = {
         r["media_id"]: r
-        for r in decode_png_stats(synthetic_png_media(spark, 50)).collect()
+        for r in decode_stats(synthetic_media(spark, 50, "png"), "png").collect()
     }
     assert len(got) == 50
     for i, r in got.items():
@@ -208,13 +208,13 @@ def test_wav_codec_roundtrip_pure_python():
 
 def test_decode_wav_stats_distributed(spark):
     from dandi_s3_log_parser_spark.operators.multimodal import (
-        decode_wav_stats,
-        synthetic_wav_media,
+        decode_stats,
+        synthetic_media,
     )
 
     got = {
         r["media_id"]: r
-        for r in decode_wav_stats(synthetic_wav_media(spark, 40)).collect()
+        for r in decode_stats(synthetic_media(spark, 40, "wav"), "wav").collect()
     }
     assert len(got) == 40
     for i, r in got.items():
@@ -230,22 +230,18 @@ def test_decode_media_real_handles_png_and_rejects_others(spark):
     from dandi_s3_log_parser_spark.operators.multimodal import (
         decode_media,
         make_png,
-        synthetic_png_media,
+        synthetic_media,
     )
 
     png_rows = decode_media(
-        synthetic_png_media(spark, 5), decode_fn="real"
+        synthetic_media(spark, 5, "png"), decode_fn="real"
     ).collect()
     assert {(r["width"], r["height"]) for r in png_rows} == {
         (8 + i % 13, 8 + i % 11) for i in range(5)
     }
 
-    from dandi_s3_log_parser_spark.operators.multimodal import (
-        synthetic_wav_media,
-    )
-
     wav_rows = decode_media(
-        synthetic_wav_media(spark, 4), decode_fn="real"
+        synthetic_media(spark, 4, "wav"), decode_fn="real"
     ).collect()
     assert {r["n_frames"] for r in wav_rows} == {100 + i % 50 for i in range(4)}
 

@@ -124,13 +124,13 @@ def test_decode_bmp_stats_distributed(spark):
     """The real BMP codec path through mapInPandas: decoded stats equal
     the closed-form plant for every synthetic payload."""
     from dandi_s3_log_parser_spark.operators.multimodal import (
-        decode_bmp_stats,
-        synthetic_bmp_media,
+        decode_stats,
+        synthetic_media,
     )
 
     got = {
         r["media_id"]: r
-        for r in decode_bmp_stats(synthetic_bmp_media(spark, 50)).collect()
+        for r in decode_stats(synthetic_media(spark, 50, "bmp"), "bmp").collect()
     }
     assert len(got) == 50
     for i, r in got.items():
@@ -148,11 +148,11 @@ def test_decode_media_real_recognizes_bmp(spark):
     stdlib decoder instead of NotImplementedError."""
     from dandi_s3_log_parser_spark.operators.multimodal import (
         decode_media,
-        synthetic_bmp_media,
+        synthetic_media,
     )
 
     rows = decode_media(
-        synthetic_bmp_media(spark, 10), decode_fn="real"
+        synthetic_media(spark, 10, "bmp"), decode_fn="real"
     ).collect()
     assert len(rows) == 10
     for r in rows:
@@ -260,13 +260,13 @@ def test_decode_gif_stats_distributed(spark):
     """The real GIF codec path through mapInPandas: LZW-decoded stats
     equal the planted arithmetic for every synthetic payload."""
     from dandi_s3_log_parser_spark.operators.multimodal import (
-        decode_gif_stats,
-        synthetic_gif_media,
+        decode_stats,
+        synthetic_media,
     )
 
     got = {
         r["media_id"]: r
-        for r in decode_gif_stats(synthetic_gif_media(spark, 50)).collect()
+        for r in decode_stats(synthetic_media(spark, 50, "gif"), "gif").collect()
     }
     assert len(got) == 50
     for i, r in got.items():
@@ -280,11 +280,11 @@ def test_decode_gif_stats_distributed(spark):
 def test_decode_media_real_recognizes_gif(spark):
     from dandi_s3_log_parser_spark.operators.multimodal import (
         decode_media,
-        synthetic_gif_media,
+        synthetic_media,
     )
 
     rows = decode_media(
-        synthetic_gif_media(spark, 10), decode_fn="real"
+        synthetic_media(spark, 10, "gif"), decode_fn="real"
     ).collect()
     assert len(rows) == 10
     for r in rows:
