@@ -5,17 +5,28 @@ to the gitignored _work/plans/.  NOT the driver-facing bench — that is
 bench.py, frozen.
 
 Usage:
-  python bench_extra.py [--sf DIR] [--trials N] [--explain TAG] q1 q2 ...
+  python bench_extra.py [--sf DIR] [--trials N] [--explain TAG] [q1 q2 ...]
 
+  --sf DIR           default $SPARK_GRAFT_SF_DIR, else /root/testdata/sf0.1
+  --trials 0         build (and with --explain dump) plans, time nothing
   --explain before   -> writes _work/plans/<query>_before.txt
   --explain after    -> writes _work/plans/<query>_after.txt
+  no query names     -> every registered query
+
+The dumped plans mask what differs between two constructions of the same
+query (expression ids, lambda-variable suffixes, RDD ids and call sites,
+exchange plan ids, temporary directories), so comparing a query's
+before and after dumps byte for byte is a plan-identity check.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
+import re
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -23,17 +34,32 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 REPO = Path(__file__).resolve().parent
 
+_PLAN_MASKS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"\b(lambda [A-Za-z]+)_\d+\b"), r"\1_N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r" at \S+\.\w+:\d+"), " at <site>"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\]]+"), "<tmpdir>"),
+)
+
+
+def _masked(plan: str) -> str:
+    for pat, repl in _PLAN_MASKS:
+        plan = pat.sub(repl, plan)
+    return plan
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf1.0")
+    ap.add_argument(
+        "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    )
     ap.add_argument("--trials", type=int, default=2)
     ap.add_argument("--explain", default=None, choices=["before", "after"])
     ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument("queries", nargs="+")
+    ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
-
-    import os
 
     from bench import _between_query_cleanup
     from dandi_s3_log_parser_spark.session import get_spark
@@ -46,7 +72,7 @@ def main() -> None:
     registry = entrymod.queries()
 
     out = {}
-    for name in args.queries:
+    for name in args.queries or registry:
         fn = registry[name]
         if args.explain:
             plans_dir = REPO / "_work" / "plans"
@@ -57,7 +83,7 @@ def main() -> None:
                     "formatted"
                 )
             )
-            (plans_dir / f"{name}_{args.explain}.txt").write_text(txt)
+            (plans_dir / f"{name}_{args.explain}.txt").write_text(_masked(txt))
         ts = []
         for t in range(args.trials):
             _between_query_cleanup(spark)
@@ -67,6 +93,8 @@ def main() -> None:
             df.write.mode("overwrite").format("noop").save()
             ts.append(round(time.perf_counter() - t0, 3))
             spark.sparkContext.setJobDescription(None)
+        if not ts:
+            continue
         out[name] = {"min": min(ts), "trials": ts}
         print(json.dumps({name: out[name]}), flush=True)
 

@@ -161,9 +161,6 @@ REDUCED_SCHEMA = T.StructType(
 # "error_*" rows go to the errors table.
 STATUS_OK = "ok"
 STATUS_OK_REPAIRED = "ok_repaired"
-STATUS_DROP_IP = "drop_excluded_ip"
-STATUS_DROP_OP = "drop_operation"
-STATUS_DROP_KEY = "drop_key_parent"
 STATUS_DROP_STATUS = "drop_http_status"
 STATUS_ERROR_PARSE = "error_parse"
 STATUS_ERROR_STATUS = "error_status_not_digit"

@@ -107,10 +107,10 @@ def stopword_hits(text: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Co
     return F.regexp_count(F.lower(text), F.lit(_word_hit_regex(stopwords)))
 
 
-def stopword_ratio(text: Column, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
+def stopword_ratio(text: Column) -> Column:
     n_toks = F.regexp_count(text, F.lit(r"\S+"))
     return F.when(
-        n_toks > 0, stopword_hits(text, stopwords) / n_toks
+        n_toks > 0, stopword_hits(text) / n_toks
     ).otherwise(F.lit(0.0))
 
 

@@ -4,8 +4,7 @@ The monitoring query a log-pipeline operator runs on the reference's
 per-asset activity counts (`_get_summary_dataframes` materializes
 per-asset by-day totals; "which day is anomalous for this asset?" is
 the next question).  Flags a (key, day) whose count deviates from the
-key's own trailing baseline by more than ``z_threshold`` standard
-deviations.
+key's own trailing baseline by more than 3 standard deviations.
 
 Formulation — two hash aggregates and one window, no Python:
 
@@ -42,8 +41,6 @@ def rolling_anomaly(
     ts_col: str = "ts",
     window_days: int = 7,
     min_history: int = 3,
-    z_threshold: float = 3.0,
-    ndp: int = 4,
 ) -> DataFrame:
     """Per (key, day) request counts with trailing z-score + flag.
 
@@ -81,14 +78,14 @@ def rolling_anomaly(
         "key",
         "day",
         "n_events",
-        F.when(hist >= min_history, F.round(mean, ndp)).alias(
+        F.when(hist >= min_history, F.round(mean, 4)).alias(
             "baseline_mean"
         ),
-        F.when(hist >= min_history, F.round(std, ndp)).alias(
+        F.when(hist >= min_history, F.round(std, 4)).alias(
             "baseline_std"
         ),
-        F.round(z, ndp).alias("z"),
-        F.coalesce(F.abs(z) > z_threshold, F.lit(False)).alias(
+        F.round(z, 4).alias("z"),
+        F.coalesce(F.abs(z) > 3.0, F.lit(False)).alias(
             "is_anomaly"
         ),
     )
@@ -97,9 +94,6 @@ def rolling_anomaly(
 def burst_detect(
     events: DataFrame,
     *,
-    key_col: str = "user_id",
-    id_col: str = "event_id",
-    ts_col: str = "ts",
     window_seconds: int = 3600,
     threshold: int = 20,
 ) -> DataFrame:
@@ -115,7 +109,8 @@ def burst_detect(
     so all same-microsecond events see the same trailing count in any
     engine and the result is order-stable / hash-comparable.
 
-    Returns flagged events only: ``(key, id, ts, trailing_count)``.
+    Returns flagged events only: ``(user_id, event_id, ts,
+    trailing_count)``.
 
     Scale: ONE exchange hash-partitioned on the key; each key's
     timeline sorts within its partition and the trailing count is a
@@ -125,17 +120,17 @@ def burst_detect(
     timeline — the same documented trade as ``asof_join``, with the
     same two-phase bucket escape hatch if a workload ever needs it.
     """
-    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("user_id")
         .orderBy(ts_us)
         .rangeBetween(-int(window_seconds) * 1_000_000, 0)
     )
     return (
         events.select(
-            F.col(key_col),
-            F.col(id_col),
-            F.col(ts_col),
+            F.col("user_id"),
+            F.col("event_id"),
+            F.col("ts"),
             F.count(F.lit(1)).over(w).alias("trailing_count"),
         )
         .filter(F.col("trailing_count") >= threshold)

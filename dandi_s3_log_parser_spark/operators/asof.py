@@ -118,9 +118,6 @@ def interval_overlap_join(
     right: DataFrame,
     *,
     key_col: str | None = None,
-    id_col: str = "id",
-    start_col: str = "start",
-    end_col: str = "end",
     bucket_seconds: int = 3600,
 ) -> DataFrame:
     """Interval-overlap join without the cross-join trap.
@@ -163,10 +160,10 @@ def interval_overlap_join(
         # cast: parquet columns are commonly TIMESTAMP_NTZ, which
         # unix_micros rejects; under the engine's fixed UTC session tz
         # the cast is value-preserving
-        s = F.col(start_col).cast("timestamp")
-        e = F.col(end_col).cast("timestamp")
+        s = F.col("start").cast("timestamp")
+        e = F.col("end").cast("timestamp")
         cols = [
-            F.col(id_col).alias(f"{side}_id"),
+            F.col("id").alias(f"{side}_id"),
             F.unix_micros(s).alias(f"{side}_s"),
             F.unix_micros(e).alias(f"{side}_e"),
         ]

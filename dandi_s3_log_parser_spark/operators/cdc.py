@@ -39,8 +39,6 @@ def apply_cdc(
     changes: DataFrame,
     *,
     key_col: str = "id",
-    seq_col: str = "seq",
-    op_col: str = "op",
 ) -> DataFrame:
     """Apply a CDC stream to a snapshot; returns the next snapshot
     with the same schema.  See module docstring for semantics."""
@@ -53,18 +51,18 @@ def apply_cdc(
     # malformed op ('u', 'I', NULL) previously fell through to the
     # delete path and silently dropped the row (round-4 ADVICE); now the
     # job fails loudly at execution time instead of losing data
-    op_ok = F.col(op_col).isin("U", "D")
-    checked_op = F.when(op_ok, F.col(op_col)).otherwise(
+    op_ok = F.col("op").isin("U", "D")
+    checked_op = F.when(op_ok, F.col("op")).otherwise(
         F.raise_error(
             F.concat(
                 F.lit("apply_cdc: op must be 'U' or 'D', got: "),
-                F.coalesce(F.col(op_col).cast("string"), F.lit("NULL")),
+                F.coalesce(F.col("op").cast("string"), F.lit("NULL")),
             )
         )
     )
     latest = changes.groupBy(key_col).agg(
         F.max_by(
-            F.struct(checked_op.alias("_op"), *payload), F.col(seq_col)
+            F.struct(checked_op.alias("_op"), *payload), F.col("seq")
         ).alias("_c")
     )
     upserts = latest.filter(F.col("_c._op") == "U").select(

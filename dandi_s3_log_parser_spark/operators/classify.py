@@ -38,17 +38,17 @@ def feature_bucket(tok, n_buckets: int):
     )
 
 
-def hash_weights(spark, n_buckets: int, *, salt: str = "w") -> DataFrame:
+def hash_weights(spark, n_buckets: int) -> DataFrame:
     """Deterministic synthetic weight table for tests/benchmarks:
-    ``weight(b) = hex(md5(salt|b))[:6] / 16^6 * 2 - 1`` — uniform in
-    [-1, 1), a pure function of (bucket, salt), identical in DuckDB.
+    ``weight(b) = hex(md5('w|' || b))[:6] / 16^6 * 2 - 1`` — uniform in
+    [-1, 1), a pure function of the bucket, identical in DuckDB.
     A real deployment replaces this with trained weights (same schema:
     ``bucket long, weight double``)."""
     b = F.col("id")
     w = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(f"{salt}|"), b.cast("string"))), 1, 6
+                F.md5(F.concat(F.lit("w|"), b.cast("string"))), 1, 6
             ),
             16,
             10,
@@ -67,33 +67,30 @@ def linear_quality_score(
     weights: DataFrame,
     *,
     n_buckets: int = 1 << 18,
-    bias: float = 0.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ndp: int = 4,
 ) -> DataFrame:
     """Score every document with a linear model over hashed bag-of-words
     features: ``score = sigmoid(bias + mean(weight[bucket(token)]))``
+    with ``bias = 0``
     (the fastText shape — mean of feature vectors, then the linear
     layer; with scalar per-bucket weights the two collapse into one
     mean).
 
     ``weights`` is ``(bucket long, weight double)``; buckets absent
     from it contribute 0.  Returns one row per input document:
-    ``(id_col, n_tokens, mean_w, score)`` — a TOTAL operator (empty
+    ``(doc_id, n_tokens, mean_w, score)`` — a TOTAL operator (empty
     and NULL-text docs kept with ``n_tokens = 0``, ``mean_w = 0``,
-    ``score = sigmoid(bias)``), so a downstream ``score >= t`` filter
+    ``score = sigmoid(0) = 0.5``), so a downstream ``score >= t`` filter
     makes an explicit decision about empty text instead of silently
     dropping it.  ``explode_outer`` emits one null-token row for an
     empty document; ``count(bucket)`` skips that null, so totality
-    needs no restore join.  Means are rounded to ``ndp`` so the result
+    needs no restore join.  Means are rounded to 4 decimals so the result
     is stable under summation order.
     """
     toks = docs.select(
-        F.col(id_col),
-        F.explode_outer(word_tokens(F.col(text_col))).alias("_tok"),
+        F.col("doc_id"),
+        F.explode_outer(word_tokens(F.col("text"))).alias("_tok"),
     ).select(
-        id_col,
+        "doc_id",
         F.when(
             F.col("_tok").isNotNull(),
             feature_bucket(F.col("_tok"), n_buckets),
@@ -101,19 +98,19 @@ def linear_quality_score(
     )
     scored = (
         toks.join(F.broadcast(weights), "bucket", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.col("bucket")).cast("long").alias("n_tokens"),
             F.avg(F.coalesce(F.col("weight"), F.lit(0.0))).alias("_mw"),
         )
     )
-    mean_w = F.round(F.coalesce(F.col("_mw"), F.lit(0.0)), ndp)
+    mean_w = F.round(F.coalesce(F.col("_mw"), F.lit(0.0)), 4)
     return scored.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         mean_w.alias("mean_w"),
         F.round(
-            F.lit(1.0) / (F.lit(1.0) + F.exp(-(F.lit(bias) + mean_w))),
-            ndp,
+            F.lit(1.0) / (F.lit(1.0) + F.exp(-(F.lit(0.0) + mean_w))),
+            4,
         ).alias("score"),
     )

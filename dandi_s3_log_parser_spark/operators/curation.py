@@ -38,12 +38,7 @@ from .dedup import word_tokens
 # ---------------------------------------------------------------------------
 
 
-def repetition_metrics(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def repetition_metrics(docs: DataFrame) -> DataFrame:
     """Per-document duplicate-line metrics (Gopher repetition rules).
 
     Returns ``(doc_id, line_count, dup_line_frac, dup_line_char_frac)``:
@@ -58,13 +53,13 @@ def repetition_metrics(
     no non-empty lines report 0 for both fractions.
     """
     lines = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.filter(F.split(F.col(text_col), "\n"), lambda x: x != "")
+            F.filter(F.split(F.col("text"), "\n"), lambda x: x != "")
         ).alias("line"),
     )
-    per_line = lines.groupBy(id_col, "line").agg(F.count("*").alias("cnt"))
-    agg = per_line.groupBy(id_col).agg(
+    per_line = lines.groupBy("doc_id", "line").agg(F.count("*").alias("cnt"))
+    agg = per_line.groupBy("doc_id").agg(
         F.sum("cnt").alias("line_count"),
         F.count("*").alias("distinct_lines"),
         F.sum(F.length("line") * F.col("cnt")).alias("total_chars"),
@@ -78,8 +73,8 @@ def repetition_metrics(
     # agg subtree twice and Spark would recompute the whole
     # explode→groupBy pass — the expensive full-text scan — once per
     # reference.
-    return docs.select(F.col(id_col)).join(agg, on=id_col, how="left").select(
-        F.col(id_col),
+    return docs.select(F.col("doc_id")).join(agg, on="doc_id", how="left").select(
+        F.col("doc_id"),
         F.coalesce("line_count", F.lit(0)).alias("line_count"),
         F.coalesce(
             F.round(1.0 - F.col("distinct_lines") / F.col("line_count"), 6),
@@ -98,12 +93,7 @@ def repetition_metrics(
     )
 
 
-def top_bigram_fraction(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def top_bigram_fraction(docs: DataFrame) -> DataFrame:
     """Fraction of word-bigram occurrences taken by the most frequent
     bigram per document (Gopher ``top-2-gram`` boilerplate rule).
 
@@ -115,22 +105,22 @@ def top_bigram_fraction(
     bigram), take max/sum per doc.  Shuffle keys are (doc_id, bigram)
     then doc_id — narrow rows, perfectly partitionable.
     """
-    toks = word_tokens(F.col(text_col))
+    toks = word_tokens(F.col("text"))
     bigrams = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
         lambda a, b: F.concat_ws(" ", a, b),
     )
-    exploded = docs.select(F.col(id_col), F.explode(bigrams).alias("bigram"))
-    per_bigram = exploded.groupBy(id_col, "bigram").agg(F.count("*").alias("cnt"))
-    agg = per_bigram.groupBy(id_col).agg(
+    exploded = docs.select(F.col("doc_id"), F.explode(bigrams).alias("bigram"))
+    per_bigram = exploded.groupBy("doc_id", "bigram").agg(F.count("*").alias("cnt"))
+    agg = per_bigram.groupBy("doc_id").agg(
         F.sum("cnt").alias("bigram_count"),
         F.max("cnt").alias("top_cnt"),
     )
     # left-join restore of <2-token docs (see repetition_metrics on why
     # not anti-join + union)
-    return docs.select(F.col(id_col)).join(agg, on=id_col, how="left").select(
-        F.col(id_col),
+    return docs.select(F.col("doc_id")).join(agg, on="doc_id", how="left").select(
+        F.col("doc_id"),
         F.coalesce("bigram_count", F.lit(0)).alias("bigram_count"),
         F.coalesce(
             F.round(F.col("top_cnt") / F.col("bigram_count"), 6), F.lit(0.0)
@@ -143,13 +133,7 @@ def top_bigram_fraction(
 # ---------------------------------------------------------------------------
 
 
-def hash_split(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    train_pct: int = 90,
-    val_pct: int = 5,
-) -> DataFrame:
+def hash_split(docs: DataFrame) -> DataFrame:
     """Assign each document a deterministic train/val/test split.
 
     Bucket = first 4 hex digits of ``md5(cast(id))`` mod 100 — a pure
@@ -159,13 +143,13 @@ def hash_split(
     all: this is a projection.
     """
     bucket = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 4), 16, 10)
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
         .cast("int")
         % 100
     )
     split = (
-        F.when(bucket < train_pct, F.lit("train"))
-        .when(bucket < train_pct + val_pct, F.lit("val"))
+        F.when(bucket < 90, F.lit("train"))
+        .when(bucket < 95, F.lit("val"))
         .otherwise(F.lit("test"))
     )
     return docs.withColumn("split", split)
@@ -176,8 +160,6 @@ def stratified_sample(
     rates: dict[str, float],
     *,
     default_rate: float = 0.0,
-    source_col: str = "source",
-    id_col: str = "doc_id",
     salt: str = "mix-v1",
 ) -> DataFrame:
     """Deterministic per-source subsampling — the corpus-mixing step of
@@ -198,7 +180,7 @@ def stratified_sample(
     u = (
         F.conv(
             F.substring(
-                F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string"))),
+                F.md5(F.concat_ws("|", F.lit(salt), F.col("doc_id").cast("string"))),
                 1,
                 8,
             ),
@@ -209,7 +191,7 @@ def stratified_sample(
     )
     rate = F.lit(float(default_rate))
     for s, r in sorted(rates.items()):
-        rate = F.when(F.col(source_col) == s, F.lit(float(r))).otherwise(rate)
+        rate = F.when(F.col("source") == s, F.lit(float(r))).otherwise(rate)
     return docs.filter(u < rate)
 
 
@@ -280,8 +262,6 @@ def upsample_corpus(
     weights: dict[str, float],
     *,
     default_weight: float = 1.0,
-    source_col: str = "source",
-    id_col: str = "doc_id",
     salt: str = "upsample-v1",
 ) -> DataFrame:
     """Deterministic per-source corpus mixing WITH repetition — the
@@ -306,7 +286,7 @@ def upsample_corpus(
     u = (
         F.conv(
             F.substring(
-                F.md5(F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string"))),
+                F.md5(F.concat_ws("|", F.lit(salt), F.col("doc_id").cast("string"))),
                 1,
                 8,
             ),
@@ -317,7 +297,7 @@ def upsample_corpus(
     )
     w = F.lit(float(default_weight))
     for s, r in sorted(weights.items()):
-        w = F.when(F.col(source_col) == s, F.lit(float(r))).otherwise(w)
+        w = F.when(F.col("source") == s, F.lit(float(r))).otherwise(w)
     n_copies = F.floor(w).cast("long") + (u < (w - F.floor(w))).cast("long")
     return (
         docs.withColumn("_n", n_copies)
@@ -332,13 +312,7 @@ def upsample_corpus(
 # ---------------------------------------------------------------------------
 
 
-def source_stats(
-    docs: DataFrame,
-    *,
-    source_col: str = "source",
-    text_col: str = "text",
-    blocklist: tuple[str, ...] = (),
-) -> DataFrame:
+def source_stats(docs: DataFrame, *, blocklist: tuple[str, ...] = ()) -> DataFrame:
     """Per-source corpus stats after dropping blocklisted sources.
 
     The curation analog of the reference's excluded-IP filter
@@ -352,15 +326,15 @@ def source_stats(
 
     kept = docs
     if blocklist:
-        kept = kept.filter(~F.col(source_col).isin(*blocklist))
+        kept = kept.filter(~F.col("source").isin(*blocklist))
     return (
-        kept.groupBy(source_col)
+        kept.groupBy("source")
         .agg(
             F.count("*").alias("docs"),
-            F.sum(token_count(F.col(text_col))).alias("total_tokens"),
-            F.round(F.avg(F.length(text_col)), 4).alias("avg_chars"),
+            F.sum(token_count(F.col("text"))).alias("total_tokens"),
+            F.round(F.avg(F.length("text")), 4).alias("avg_chars"),
         )
-        .orderBy(source_col)
+        .orderBy("source")
     )
 
 
@@ -369,20 +343,14 @@ def source_stats(
 # ---------------------------------------------------------------------------
 
 
-def corpus_line_dedup(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_doc_freq: int = 50,
-) -> DataFrame:
+def corpus_line_dedup(docs: DataFrame, *, max_doc_freq: int = 50) -> DataFrame:
     """Remove lines that occur in more than ``max_doc_freq`` distinct
     documents across the WHOLE corpus (CCNet-style paragraph dedup —
     the step that strips nav bars, cookie banners, and license
     boilerplate from web text before training).
 
     Returns one row per input document:
-    ``(id_col, kept_lines, removed_lines, text)`` where ``text`` is the
+    ``(doc_id, kept_lines, removed_lines, text)`` where ``text`` is the
     document re-assembled from its surviving lines in original order
     (empty string when every line was boilerplate).
 
@@ -396,7 +364,7 @@ def corpus_line_dedup(
     - the common-digest set (boilerplate is by definition a tiny
       distinct set) comes back via a left_anti join that AQE plans as
       broadcast;
-    - one final shuffle keyed on ``id_col`` reassembles survivors —
+    - one final shuffle keyed on ``doc_id`` reassembles survivors —
       each corpus byte crosses the wire exactly once.
 
     Empty lines are never counted toward document frequency (they are
@@ -406,18 +374,18 @@ def corpus_line_dedup(
     # aggregate and the keep anti-join; without the checkpoint the
     # line split + per-line sha256 subtree is planned and run twice
     lines = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     ).withColumn("_digest", F.sha2(F.col("line"), 256)).localCheckpoint()
     common = (
         lines.filter(F.col("line") != "")
         .groupBy("_digest")
-        .agg(F.count_distinct(F.col(id_col)).alias("_df"))
+        .agg(F.count_distinct(F.col("doc_id")).alias("_df"))
         .filter(F.col("_df") > max_doc_freq)
         .select("_digest")
     )
     kept = lines.join(common, "_digest", "left_anti")
-    survivors = kept.groupBy(id_col).agg(
+    survivors = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("kept_lines"),
         F.array_join(
             F.transform(
@@ -428,17 +396,17 @@ def corpus_line_dedup(
         ).alias("_text"),
     )
     totals = docs.select(
-        F.col(id_col), F.size(F.split(F.col(text_col), "\n")).alias("_total")
+        F.col("doc_id"), F.size(F.split(F.col("text"), "\n")).alias("_total")
     )
-    return totals.join(survivors, id_col, "left").select(
-        F.col(id_col),
+    return totals.join(survivors, "doc_id", "left").select(
+        F.col("doc_id"),
         F.coalesce(F.col("kept_lines"), F.lit(0))
         .cast("long")
         .alias("kept_lines"),
         (F.col("_total") - F.coalesce(F.col("kept_lines"), F.lit(0)))
         .cast("long")
         .alias("removed_lines"),
-        F.coalesce(F.col("_text"), F.lit("")).alias(text_col),
+        F.coalesce(F.col("_text"), F.lit("")).alias("text"),
     )
 
 
@@ -486,13 +454,7 @@ def per_key_cap(
 # ---------------------------------------------------------------------------
 
 
-def oov_rate(
-    docs: DataFrame,
-    *,
-    vocab_k: int = 100,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def oov_rate(docs: DataFrame, *, vocab_k: int = 100) -> DataFrame:
     """Per-document fraction of token OCCURRENCES outside the corpus'
     top-``vocab_k`` vocabulary — a standard quality / domain-shift
     signal for training-data triage.
@@ -506,7 +468,7 @@ def oov_rate(
     deterministic total order both engines replay.
     """
     toks = docs.select(
-        F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("_tok")
+        F.col("doc_id"), F.explode(word_tokens(F.col("text"))).alias("_tok")
     )
     vocab = (
         toks.groupBy("_tok")
@@ -517,14 +479,14 @@ def oov_rate(
     )
     in_vocab = (
         toks.join(F.broadcast(vocab), "_tok", "left_semi")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("_in_cnt"))
     )
     totals = docs.select(
-        F.col(id_col), F.size(word_tokens(F.col(text_col))).alias("n_tokens")
+        F.col("doc_id"), F.size(word_tokens(F.col("text"))).alias("n_tokens")
     )
-    return totals.join(in_vocab, id_col, "left").select(
-        F.col(id_col),
+    return totals.join(in_vocab, "doc_id", "left").select(
+        F.col("doc_id"),
         F.col("n_tokens").cast("long").alias("n_tokens"),
         F.round(
             1.0
@@ -535,12 +497,7 @@ def oov_rate(
     )
 
 
-def unigram_logprob(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """Per-document mean negative log-likelihood under the corpus' own
     unigram language model — the KenLM-style perplexity proxy used to
     rank web text by "naturalness" (CCNet buckets pages by exactly this
@@ -562,14 +519,14 @@ def unigram_logprob(
     not a ``collect``.
     """
     toks = docs.select(
-        F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("_tok")
+        F.col("doc_id"), F.explode(word_tokens(F.col("text"))).alias("_tok")
     )
     vocab = toks.groupBy("_tok").agg(F.count(F.lit(1)).alias("_cnt"))
     total = vocab.agg(F.sum("_cnt").cast("double").alias("_total"))
     return (
         toks.join(vocab, "_tok")
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
             F.round(
@@ -579,14 +536,7 @@ def unigram_logprob(
     )
 
 
-def bigram_logprob(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lam: float = 0.7,
-    ndp: int = 4,
-) -> DataFrame:
+def bigram_logprob(docs: DataFrame, *, lam: float = 0.7) -> DataFrame:
     """Per-document mean negative log-likelihood under an interpolated
     corpus bigram language model — the next rung above
     ``unigram_logprob`` toward the 5-gram KenLM score CCNet actually
@@ -599,8 +549,8 @@ def bigram_logprob(
     two tokens keep a row with ``n_bigrams = 0`` and ``nll`` NULL (a
     bigram score is undefined there; NULL forces the caller to decide
     rather than a fake neutral value).  ``nll`` is the mean of
-    ``-ln p`` over the document's bigram instances, rounded to ``ndp``
-    (summation-order jitter is far inside the rounding).
+    ``-ln p`` over the document's bigram instances, rounded to 4
+    decimals (summation-order jitter is far inside the rounding).
 
     Scale shape (10^12 docs): tokenization runs once per document
     (native ``zip_with``/``slice`` bigram construction — no self-join
@@ -615,7 +565,7 @@ def bigram_logprob(
     """
     if not (0.0 < lam < 1.0):
         raise ValueError("lam must be in (0, 1)")
-    toks_arr = word_tokens(F.col(text_col))
+    toks_arr = word_tokens(F.col("text"))
     n = F.size(toks_arr)
     bg = F.zip_with(
         F.slice(toks_arr, 1, F.greatest(n - 1, F.lit(0))),
@@ -638,8 +588,8 @@ def bigram_logprob(
     # totality needs no restore join (nulls never match the joins and
     # avg skips them)
     inst = docs.select(
-        F.col(id_col), F.explode_outer(bg).alias("p")
-    ).select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        F.col("doc_id"), F.explode_outer(bg).alias("p")
+    ).select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     ca = uni.select(F.col("w").alias("w1"), F.col("c").alias("_c1"))
     cb = uni.select(F.col("w").alias("w2"), F.col("c").alias("_c2"))
     p = (
@@ -651,31 +601,22 @@ def bigram_logprob(
         .join(ca, "w1", "left")
         .join(cb, "w2", "left")
         .crossJoin(F.broadcast(n_uni))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.col("w1")).cast("long").alias("n_bigrams"),
-            F.round(F.avg(-F.log(p)), ndp).alias("nll"),
+            F.round(F.avg(-F.log(p)), 4).alias("nll"),
         )
     )
 
 
-def encode_tokens(
-    docs: DataFrame,
-    vocab: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    token_col: str = "token",
-    token_id_col: str = "token_id",
-    oov_id: int = 0,
-) -> DataFrame:
+def encode_tokens(docs: DataFrame, vocab: DataFrame, *, oov_id: int = 0) -> DataFrame:
     """Encode each document's tokens to vocabulary ids — the
     tokenize-to-ids step between curation and shard export that turns
     text into the integer sequences a training run actually reads.
 
     ``vocab`` is ``(token, token_id)``; tokens absent from it encode
     to ``oov_id`` (the <unk> convention).  Returns one row per
-    document: ``(id_col, n_tokens, ids)`` with ``ids`` an
+    document: ``(doc_id, n_tokens, ids)`` with ``ids`` an
     ``array<long>`` in original token order — TOTAL (empty/NULL text
     keeps a row with an empty array), so downstream packing sees every
     curated doc.
@@ -689,29 +630,29 @@ def encode_tokens(
     ``posexplode_outer`` keeps empty docs without a restore join.
     """
     toks = docs.select(
-        F.col(id_col),
-        F.posexplode_outer(word_tokens(F.col(text_col))).alias(
+        F.col("doc_id"),
+        F.posexplode_outer(word_tokens(F.col("text"))).alias(
             "_pos", "_tok"
         ),
     )
     enc = toks.join(
         F.broadcast(
             vocab.select(
-                F.col(token_col).alias("_tok"),
-                F.col(token_id_col).cast("long").alias("_tid"),
+                F.col("token").alias("_tok"),
+                F.col("token_id").cast("long").alias("_tid"),
             )
         ),
         "_tok",
         "left",
     ).select(
-        id_col,
+        "doc_id",
         "_pos",
         F.when(
             F.col("_pos").isNotNull(),
             F.coalesce(F.col("_tid"), F.lit(oov_id).cast("long")),
         ).alias("_id"),
     )
-    return enc.groupBy(id_col).agg(
+    return enc.groupBy("doc_id").agg(
         F.count(F.col("_id")).cast("long").alias("n_tokens"),
         F.transform(
             F.array_sort(
@@ -736,7 +677,6 @@ def encode_tokens(
 def corpus_shuffle(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
     n_shards: int = 8,
     salt: str = "shuffle-v1",
 ) -> DataFrame:
@@ -762,21 +702,21 @@ def corpus_shuffle(
     md5 draw makes shard sizes uniform (no skew).  Do not call with
     ``n_shards=1`` on a large corpus: that is a global sort by design.
 
-    Returns ``(id_col, shard, pos)`` — ``pos`` is 1-based within the
+    Returns ``(doc_id, shard, pos)`` — ``pos`` is 1-based within the
     shard.  Ids must be non-null (the usual key contract): a NULL id
     would draw a NULL order key/shard here while DuckDB's
     NULL-ignoring ``concat`` draws a real one, so the engines would
     disagree on rows that have no identity to shuffle by anyway.
     """
     order_key = F.md5(
-        F.concat(F.lit(f"order|{salt}|"), F.col(id_col).cast("string"))
+        F.concat(F.lit(f"order|{salt}|"), F.col("doc_id").cast("string"))
     )
     shard = (
         F.conv(
             F.substring(
                 F.md5(
                     F.concat(
-                        F.lit(f"shard|{salt}|"), F.col(id_col).cast("string")
+                        F.lit(f"shard|{salt}|"), F.col("doc_id").cast("string")
                     )
                 ),
                 1,
@@ -788,11 +728,11 @@ def corpus_shuffle(
         % n_shards
     )
     keyed = docs.select(
-        F.col(id_col), shard.alias("shard"), order_key.alias("_ok")
+        F.col("doc_id"), shard.alias("shard"), order_key.alias("_ok")
     )
-    w = Window.partitionBy("shard").orderBy(F.asc("_ok"), F.asc(id_col))
+    w = Window.partitionBy("shard").orderBy(F.asc("_ok"), F.asc("doc_id"))
     return keyed.select(
-        id_col,
+        "doc_id",
         F.col("shard").cast("int").alias("shard"),
         F.row_number().over(w).cast("long").alias("pos"),
     )
@@ -806,8 +746,6 @@ def corpus_shuffle(
 def pack_sequences(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     budget: int = 2048,
     buckets: int = 64,
     bucket_fn: str = "xxhash64",
@@ -838,16 +776,16 @@ def pack_sequences(
 
     if bucket_fn == "md5":
         raw = F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 4), 16, 10
+            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
         ).cast("int")
     else:
-        raw = F.xxhash64(F.col(id_col).cast("string"))
-    w = Window.partitionBy("bucket").orderBy(id_col)
+        raw = F.xxhash64(F.col("doc_id").cast("string"))
+    w = Window.partitionBy("bucket").orderBy("doc_id")
     packed = (
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.pmod(raw, F.lit(buckets)).cast("int").alias("bucket"),
-            token_count(F.col(text_col)).alias("n_tokens"),
+            token_count(F.col("text")).alias("n_tokens"),
         )
         .withColumn("cum", F.sum("n_tokens").over(w))
         # bin by the cumulative total *before* this doc, so a doc that
@@ -871,14 +809,7 @@ def pack_sequences(
 # ---------------------------------------------------------------------------
 
 
-def group_quantiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    *,
-    probs: tuple[float, ...] = (0.25, 0.5, 0.75, 0.95),
-    ndp: int = 4,
-) -> DataFrame:
+def group_quantiles(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """EXACT linear-interpolated quantiles of ``value_col`` per group.
 
     The corpus-health report every curation run prints (length / token /
@@ -895,9 +826,9 @@ def group_quantiles(
     """
     aggs = [
         F.round(
-            F.percentile(F.col(value_col).cast("double"), F.lit(p)), ndp
+            F.percentile(F.col(value_col).cast("double"), F.lit(p)), 4
         ).alias(f"p{int(p * 100)}")
-        for p in probs
+        for p in (0.25, 0.5, 0.75, 0.95)
     ]
     return (
         df.groupBy(group_col)
@@ -906,14 +837,7 @@ def group_quantiles(
     )
 
 
-def approx_distinct_check(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    *,
-    rsd: float = 0.05,
-    tolerance: float = 0.2,
-) -> DataFrame:
+def approx_distinct_check(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Per-group HyperLogLog++ distinct count, self-checked against the
     exact count.
 
@@ -923,23 +847,23 @@ def approx_distinct_check(
     the only formulation that survives a hot group.  Because a sketch
     cannot be hash-compared across engines, the query SELF-verifies:
     it computes both (affordable at test scale), emits the exact count
-    plus ``approx_ok`` = |approx − exact| ≤ tolerance·exact, and the
+    plus ``approx_ok`` = |approx − exact| ≤ 0.2·exact, and the
     oracle recomputes the exact count with ``approx_ok`` pinned TRUE —
-    a sketch drifting past ``tolerance`` (4σ at the default rsd=5%)
+    a sketch drifting past 20% (4σ at the sketch's rsd=5%)
     breaks the value hash exactly like a wrong answer would.
     """
     return (
         df.groupBy(group_col)
         .agg(
             F.count_distinct(F.col(value_col)).alias("exact_distinct"),
-            F.approx_count_distinct(F.col(value_col), rsd).alias("_approx"),
+            F.approx_count_distinct(F.col(value_col), 0.05).alias("_approx"),
         )
         .select(
             group_col,
             "exact_distinct",
             (
                 F.abs(F.col("_approx") - F.col("exact_distinct"))
-                <= F.lit(tolerance) * F.col("exact_distinct")
+                <= F.lit(0.2) * F.col("exact_distinct")
             ).alias("approx_ok"),
         )
         .orderBy(group_col)
@@ -1042,8 +966,6 @@ def chunk_documents(
     *,
     window: int = 128,
     stride: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Split each document into overlapping token windows.
 
@@ -1052,7 +974,7 @@ def chunk_documents(
     ``[i*stride, i*stride + window)``; the last start is
     ``ceil(max(n-window,0)/stride)*stride`` so the tail is always
     covered and a doc shorter than ``window`` yields exactly one chunk.
-    Returns ``(id_col, chunk_id, n_tokens, chunk)``.
+    Returns ``(doc_id, chunk_id, n_tokens, chunk)``.
 
     Plan shape: tokens materialize ONCE behind a projection boundary
     (the with_shingles lesson — lambda-referenced expressions re-run
@@ -1065,7 +987,7 @@ def chunk_documents(
     if not 0 < stride <= window:
         raise ValueError(f"need 0 < stride <= window, got {stride}/{window}")
     toks = docs.select(
-        F.col(id_col), word_tokens(F.col(text_col)).alias("_toks")
+        F.col("doc_id"), word_tokens(F.col("text")).alias("_toks")
     )
     n = F.size("_toks")
     last_start = (
@@ -1073,14 +995,14 @@ def chunk_documents(
     ).cast("int")
     return (
         toks.select(
-            id_col,
+            "doc_id",
             "_toks",
             F.explode(
                 F.sequence(F.lit(0), last_start, F.lit(stride))
             ).alias("_start"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             (F.col("_start") / stride).cast("long").alias("chunk_id"),
             F.size(F.slice("_toks", F.col("_start") + 1, window)).alias(
                 "n_tokens"
@@ -1089,7 +1011,7 @@ def chunk_documents(
                 F.slice("_toks", F.col("_start") + 1, window), " "
             ).alias("chunk"),
         )
-        .orderBy(id_col, "chunk_id")
+        .orderBy("doc_id", "chunk_id")
     )
 
 
@@ -1098,14 +1020,7 @@ def chunk_documents(
 # ---------------------------------------------------------------------------
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    *,
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ndp: int = 6,
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, *, k: int = 5) -> DataFrame:
     """Top-``k`` TF-IDF terms per document (smooth idf:
     ``tf * (ln((N+1)/(df+1)) + 1)``, sklearn's formulation — public
     knowledge).
@@ -1127,9 +1042,9 @@ def tfidf_top_terms(
     ROUNDED score on both engines, so rounding cannot reorder ties.
     """
     toks = docs.select(
-        F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("term")
+        F.col("doc_id"), F.explode(word_tokens(F.col("text"))).alias("term")
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_tab = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("_df")
     )
@@ -1138,21 +1053,21 @@ def tfidf_top_terms(
         tf.join(df_tab, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "term",
             F.col("tf").cast("long").alias("tf"),
             F.round(
                 F.col("tf")
                 * (F.log((F.col("_n") + 1) / (F.col("_df") + 1)) + 1),
-                ndp,
+                6,
             ).alias("tfidf"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .orderBy(id_col, "rank")
+        .orderBy("doc_id", "rank")
     )
 
 
@@ -1165,9 +1080,6 @@ def select_by_token_budget(
     docs: DataFrame,
     budget: int,
     *,
-    score_col: str = "score",
-    token_col: str = "n_tokens",
-    id_col: str = "doc_id",
     bin_ndp: int = 3,
 ) -> DataFrame:
     """Greedy-prefix selection: walk documents in (score DESC, id ASC)
@@ -1205,9 +1117,9 @@ def select_by_token_budget(
     """
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
-    binned = docs.withColumn("_bin", F.round(F.col(score_col), bin_ndp))
+    binned = docs.withColumn("_bin", F.round(F.col("score"), bin_ndp))
     hist = binned.groupBy("_bin").agg(
-        F.sum(F.col(token_col)).cast("long").alias("_btok")
+        F.sum(F.col("n_tokens")).cast("long").alias("_btok")
     )
     # bins-table cumsum WITHOUT a window: "_before" = total tokens in
     # strictly-better bins, via a broadcast non-equi self-join of the
@@ -1234,13 +1146,13 @@ def select_by_token_budget(
     # at most one bin straddles the budget; its docs get the exact walk
     we = (
         Window.partitionBy("_bin")
-        .orderBy(F.desc(score_col), F.asc(id_col))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     kept_edge = (
         j.filter(F.col("_class") == "edge")
         .withColumn(
-            "_cum", F.col("_before") + F.sum(F.col(token_col)).over(we)
+            "_cum", F.col("_before") + F.sum(F.col("n_tokens")).over(we)
         )
         .filter(F.col("_cum") <= budget)
         .drop("_cum")
@@ -1258,9 +1170,7 @@ def temperature_weights(
     docs: DataFrame,
     alpha: float = 0.3,
     *,
-    source_col: str = "source",
     token_col: str | None = None,
-    ndp: int = 6,
 ) -> DataFrame:
     """Per-source sampling weights under temperature ``alpha``:
     ``p_i = n_i^alpha / sum_j n_j^alpha`` (the XLM-R / mT5 multinomial
@@ -1284,7 +1194,7 @@ def temperature_weights(
         F.sum(F.col(token_col)) if token_col is not None
         else F.count(F.lit(1))
     ).cast("double")
-    per = docs.groupBy(source_col).agg(n.alias("_n"))
+    per = docs.groupBy("source").agg(n.alias("_n"))
     tot = per.agg(
         F.sum("_n").alias("_tot"),
         F.sum(F.pow("_n", F.lit(alpha))).alias("_tot_a"),
@@ -1292,19 +1202,19 @@ def temperature_weights(
     return (
         per.crossJoin(F.broadcast(tot))
         .select(
-            F.col(source_col),
+            F.col("source"),
             F.col("_n").cast("long").alias("n"),
-            F.round(F.col("_n") / F.col("_tot"), ndp).alias("p_natural"),
+            F.round(F.col("_n") / F.col("_tot"), 6).alias("p_natural"),
             F.round(
-                F.pow("_n", F.lit(alpha)) / F.col("_tot_a"), ndp
+                F.pow("_n", F.lit(alpha)) / F.col("_tot_a"), 6
             ).alias("p_temp"),
             F.round(
                 (F.pow("_n", F.lit(alpha)) / F.col("_tot_a"))
                 / (F.col("_n") / F.col("_tot")),
-                ndp,
+                6,
             ).alias("weight"),
         )
-        .orderBy(source_col)
+        .orderBy("source")
     )
 
 
@@ -1313,14 +1223,7 @@ def temperature_weights(
 # ---------------------------------------------------------------------------
 
 
-def dsir_importance(
-    docs: DataFrame,
-    target: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ndp: int = 4,
-) -> DataFrame:
+def dsir_importance(docs: DataFrame, target: DataFrame) -> DataFrame:
     """Per-document importance score for target-domain selection: the
     mean per-token log-likelihood ratio between a target-sample unigram
     LM and the corpus unigram LM (the DSIR scheme — Data Selection via
@@ -1330,7 +1233,7 @@ def dsir_importance(
 
     Both LMs are add-one (Laplace) smoothed over the UNION vocabulary,
     so every token seen in either corpus has nonzero mass in both.
-    Returns ``(id, n_tokens, logratio)``, rounded to ``ndp`` (the
+    Returns ``(doc_id, n_tokens, logratio)``, rounded to 4 decimals (the
     engines sum doubles in different orders; 1e-12 jitter is far
     inside the rounding — same argument as ``unigram_logprob``).
 
@@ -1342,10 +1245,10 @@ def dsir_importance(
     (two totals + union-vocab size) ride a one-row broadcast.
     """
     toks = docs.select(
-        F.col(id_col), F.explode(word_tokens(F.col(text_col))).alias("_tok")
+        F.col("doc_id"), F.explode(word_tokens(F.col("text"))).alias("_tok")
     )
     tgt_toks = target.select(
-        F.explode(word_tokens(F.col(text_col))).alias("_tok")
+        F.explode(word_tokens(F.col("text"))).alias("_tok")
     )
     vc = toks.groupBy("_tok").agg(F.count(F.lit(1)).alias("_cc"))
     vt = tgt_toks.groupBy("_tok").agg(F.count(F.lit(1)).alias("_ct"))
@@ -1363,28 +1266,20 @@ def dsir_importance(
         toks.join(vocab, "_tok")
         .crossJoin(F.broadcast(scalars))
         .select(
-            id_col,
+            "doc_id",
             (
                 F.log((F.col("_ct") + 1) / (F.col("_tt") + F.col("_v")))
                 - F.log((F.col("_cc") + 1) / (F.col("_tc") + F.col("_v")))
             ).alias("_lr"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
-        F.round(F.avg("_lr"), ndp).alias("logratio"),
+        F.round(F.avg("_lr"), 4).alias("logratio"),
     )
 
 
-def gumbel_topk(
-    scored: DataFrame,
-    k: int,
-    *,
-    score_col: str = "logratio",
-    id_col: str = "doc_id",
-    salt: str = "gumbel-v1",
-    ndp: int = 6,
-) -> DataFrame:
+def gumbel_topk(scored: DataFrame, k: int, *, salt: str = "gumbel-v1") -> DataFrame:
     """Seeded Gumbel-top-k: select ``k`` rows with probability
     proportional to ``exp(score)`` — sampling without replacement from
     the softmax of the scores (the Gumbel-max trick; this is the
@@ -1396,7 +1291,7 @@ def gumbel_topk(
     (``(hex8 + 0.5) / 2^32`` — the +0.5 keeps u strictly inside (0,1)
     so the double log never hits infinity), the same engine-portable
     draw as :func:`stratified_sample`.  The perturbed key is ROUNDED to
-    ``ndp`` before ranking, ties broken by id.
+    6 decimals before ranking, ties broken by id.
 
     Scale shape: pure projection + ordered ``limit`` — Spark plans
     TakeOrderedAndProject (per-partition top-k, no global sort);
@@ -1407,7 +1302,7 @@ def gumbel_topk(
     x = F.conv(
         F.substring(
             F.md5(
-                F.concat_ws("|", F.lit(salt), F.col(id_col).cast("string"))
+                F.concat_ws("|", F.lit(salt), F.col("doc_id").cast("string"))
             ),
             1,
             8,
@@ -1416,10 +1311,10 @@ def gumbel_topk(
         10,
     ).cast("double")
     u = (x + 0.5) / F.lit(4294967296.0)
-    key = F.round(F.col(score_col) + -F.log(-F.log(u)), ndp)
+    key = F.round(F.col("logratio") + -F.log(-F.log(u)), 6)
     return (
         scored.withColumn("gumbel_key", key)
-        .orderBy(F.desc("gumbel_key"), F.asc(id_col))
+        .orderBy(F.desc("gumbel_key"), F.asc("doc_id"))
         .limit(k)
     )
 
@@ -1429,13 +1324,7 @@ def gumbel_topk(
 # ---------------------------------------------------------------------------
 
 
-def inverted_index(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_postings: int = 20,
-) -> DataFrame:
+def inverted_index(docs: DataFrame, *, max_postings: int = 20) -> DataFrame:
     """Token -> (document frequency, capped posting list) — the
     search-index build a corpus tool runs after tokenization (the
     retrieval twin of :func:`tfidf_top_terms`, which answers the
@@ -1463,8 +1352,8 @@ def inverted_index(
     if max_postings < 1:
         raise ValueError(f"max_postings must be >= 1, got {max_postings}")
     pairs = docs.select(
-        F.explode(word_tokens(F.col(text_col))).alias("token"),
-        F.col(id_col).alias("_id"),
+        F.explode(word_tokens(F.col("text"))).alias("token"),
+        F.col("doc_id").alias("_id"),
     ).distinct()
     w = Window.partitionBy("token").orderBy("_id")
     capped = (
@@ -1488,14 +1377,7 @@ def inverted_index(
 # ---------------------------------------------------------------------------
 
 
-def filter_blocked_domains(
-    docs: DataFrame,
-    blocklist: DataFrame,
-    *,
-    host_col: str = "host",
-    id_col: str = "doc_id",
-    domain_col: str = "domain",
-) -> DataFrame:
+def filter_blocked_domains(docs: DataFrame, blocklist: DataFrame) -> DataFrame:
     """Drop documents whose host IS a blocklisted domain or any
     subdomain of one — the URL-level deny-list pass every crawl
     pipeline runs before content filters (cheaper than reading text).
@@ -1517,11 +1399,11 @@ def filter_blocked_domains(
     from ..functions.url import domain_suffixes
 
     b = blocklist.select(
-        F.lower(F.col(domain_col)).alias("_blocked_dom")
+        F.lower(F.col("domain")).alias("_blocked_dom")
     ).distinct()
     cand = docs.select(
-        F.col(id_col).alias("_bid"),
-        F.explode(domain_suffixes(F.col(host_col))).alias("_suf"),
+        F.col("doc_id").alias("_bid"),
+        F.explode(domain_suffixes(F.col("host"))).alias("_suf"),
     )
     hit = (
         cand.join(F.broadcast(b), cand["_suf"] == b["_blocked_dom"])
@@ -1529,7 +1411,7 @@ def filter_blocked_domains(
         .distinct()
     )
     return docs.join(
-        hit, docs[id_col] == hit["_bid"], "left_anti"
+        hit, docs["doc_id"] == hit["_bid"], "left_anti"
     )
 
 
@@ -1541,12 +1423,9 @@ def filter_blocked_domains(
 def boilerplate_strip(
     docs: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     block_words: int = 25,
     min_stopword_ratio: float = 0.10,
     min_words: int = 5,
-    stopwords: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Strip low-information segments from each document and return
     the cleaned text — the jusText/trafilatura-style boilerplate pass
@@ -1562,7 +1441,7 @@ def boilerplate_strip(
     prose is dense in function words while navigation / keyword-stuffed
     boilerplate is not.
 
-    Returns one row per input document: ``(id_col, clean_text,
+    Returns one row per input document: ``(doc_id, clean_text,
     n_segments, n_kept, boilerplate_frac)`` with kept segments joined
     in original order and ``boilerplate_frac`` NULL for empty
     documents (0 segments).
@@ -1578,8 +1457,7 @@ def boilerplate_strip(
     """
     from ..functions.text import EN_STOPWORDS, _word_hit_regex
 
-    sw = stopwords if stopwords is not None else EN_STOPWORDS
-    pat = _word_hit_regex(sw)
+    pat = _word_hit_regex(EN_STOPWORDS)
     b = block_words
 
     def _blocks_of(p):
@@ -1592,7 +1470,7 @@ def boilerplate_strip(
         return F.transform(idx, lambda i: F.array_join(F.slice(w, i * b + 1, b), " "))
 
     paras = F.filter(
-        F.split(F.col(text_col), r"\n+"), lambda p: F.trim(p) != ""
+        F.split(F.col("text"), r"\n+"), lambda p: F.trim(p) != ""
     )
     blocks = F.flatten(F.transform(paras, _blocks_of))
     segs = F.transform(
@@ -1605,9 +1483,9 @@ def boilerplate_strip(
     )
     # staged projections: each non-cheap array is named before being
     # referenced more than once, so it is evaluated exactly once
-    staged = docs.select(F.col(id_col), segs.alias("_segs"))
+    staged = docs.select(F.col("doc_id"), segs.alias("_segs"))
     staged = staged.select(
-        id_col,
+        "doc_id",
         F.size("_segs").cast("long").alias("n_segments"),
         F.filter(
             "_segs",
@@ -1616,7 +1494,7 @@ def boilerplate_strip(
         ).alias("_kept"),
     )
     staged = staged.select(
-        id_col,
+        "doc_id",
         F.array_join(
             F.transform("_kept", lambda t: t["seg"]), " "
         ).alias("clean_text"),
@@ -1624,7 +1502,7 @@ def boilerplate_strip(
         F.size("_kept").cast("long").alias("n_kept"),
     )
     return staged.select(
-        id_col,
+        "doc_id",
         "clean_text",
         "n_segments",
         "n_kept",
@@ -1648,7 +1526,6 @@ def approx_quantile_check(
     probs: tuple[float, ...] = (0.5, 0.9, 0.99),
     accuracy: int = 1000,
     slack: float = 2.0,
-    ndp: int = 4,
 ) -> DataFrame:
     """Per-group quantile SKETCH (``percentile_approx``, Greenwald-
     Khanna summary) self-checked against the exact quantile's rank-error
@@ -1672,7 +1549,7 @@ def approx_quantile_check(
         lo, hi = max(0.0, p - eps), min(1.0, p + eps)
         name = f"p{int(round(p * 100))}"
         pa = F.percentile_approx(v, F.lit(p), F.lit(accuracy))
-        aggs.append(F.round(F.percentile(v, F.lit(p)), ndp).alias(name))
+        aggs.append(F.round(F.percentile(v, F.lit(p)), 4).alias(name))
         aggs.append(
             (
                 (pa >= F.percentile(v, F.lit(lo)))
@@ -1687,13 +1564,7 @@ def approx_quantile_check(
 # ---------------------------------------------------------------------------
 
 
-def char_entropy(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ndp: int = 6,
-) -> DataFrame:
+def char_entropy(docs: DataFrame) -> DataFrame:
     """Shannon entropy (bits) of each document's character
     distribution — the cheap garbled-text detector: binary junk /
     base64 blobs sit near the ceiling (log2 of alphabet size), while
@@ -1714,23 +1585,23 @@ def char_entropy(
     (see repetition_metrics on why not anti-join + union).
     """
     chars = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.regexp_extract_all(F.col(text_col), F.lit(r"(?s)."), 0)
+            F.regexp_extract_all(F.col("text"), F.lit(r"(?s)."), 0)
         ).alias("ch"),
     )
-    per = chars.groupBy(id_col, "ch").agg(F.count(F.lit(1)).alias("cnt"))
-    agg = per.groupBy(id_col).agg(
+    per = chars.groupBy("doc_id", "ch").agg(F.count(F.lit(1)).alias("cnt"))
+    agg = per.groupBy("doc_id").agg(
         F.sum("cnt").alias("n_chars"),
         (
             F.log2(F.sum("cnt"))
             - F.sum(F.col("cnt") * F.log2("cnt")) / F.sum("cnt")
         ).alias("_h"),
     )
-    return docs.select(F.col(id_col)).join(agg, on=id_col, how="left").select(
-        F.col(id_col),
+    return docs.select(F.col("doc_id")).join(agg, on="doc_id", how="left").select(
+        F.col("doc_id"),
         F.coalesce("n_chars", F.lit(0)).alias("n_chars"),
-        F.coalesce(F.round(F.col("_h"), ndp), F.lit(0.0)).alias("entropy"),
+        F.coalesce(F.round(F.col("_h"), 6), F.lit(0.0)).alias("entropy"),
     )
 
 
@@ -1742,10 +1613,8 @@ def char_entropy(
 def pmi_collocations(
     docs: DataFrame,
     *,
-    text_col: str = "text",
     min_count: int = 5,
     topk: int = 50,
-    ndp: int = 6,
 ) -> DataFrame:
     """Top-k word-bigram collocations by pointwise mutual information —
     the corpus-analysis query behind tokenizer-merge candidates,
@@ -1768,7 +1637,7 @@ def pmi_collocations(
     the pair table, sharing its exchange via Spark's ReusedExchange.
     The final top-k is ``TakeOrderedAndProject`` (no global sort).
     """
-    toks_arr = word_tokens(F.col(text_col))
+    toks_arr = word_tokens(F.col("text"))
     n = F.size(toks_arr)
     bg = F.zip_with(
         F.slice(toks_arr, 1, F.greatest(n - 1, F.lit(0))),
@@ -1796,7 +1665,7 @@ def pmi_collocations(
             (F.col("pair_count") / F.col("n_bi"))
             / ((F.col("_ca") / F.col("n_uni")) * (F.col("_cb") / F.col("n_uni")))
         ),
-        ndp,
+        6,
     )
     return (
         bi.join(ca, "w1")
@@ -1820,7 +1689,6 @@ def equidepth_histogram(
     *,
     group_col: str,
     buckets: int = 10,
-    ndp: int = 4,
 ) -> DataFrame:
     """Per-group equi-depth histogram of ``value_col`` — the length /
     token-count / score distribution panel of a corpus-health report.
@@ -1853,8 +1721,8 @@ def equidepth_histogram(
         .groupBy(group_col, "bucket")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.min("_v"), ndp).alias("lo"),
-            F.round(F.max("_v"), ndp).alias("hi"),
+            F.round(F.min("_v"), 4).alias("lo"),
+            F.round(F.max("_v"), 4).alias("hi"),
         )
         .orderBy(group_col, "bucket")
     )
@@ -1870,8 +1738,6 @@ def chunk_fixed_windows(
     *,
     chunk_tokens: int = 512,
     overlap: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Split each document into fixed-size token windows with
     ``overlap`` shared tokens between consecutive chunks — the
@@ -1906,7 +1772,7 @@ def chunk_fixed_windows(
             f"need 0 <= overlap < chunk_tokens; got overlap={overlap}"
         )
     step = chunk_tokens - overlap
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     ln = F.size("_toks")
     n_chunks = F.when(ln <= chunk_tokens, F.lit(1)).otherwise(
         F.ceil((ln - chunk_tokens) / F.lit(step)).cast("int") + 1
@@ -1920,22 +1786,22 @@ def chunk_fixed_windows(
         ),
     )
     return (
-        docs.select(F.col(id_col), toks.alias("_toks"))
+        docs.select(F.col("doc_id"), toks.alias("_toks"))
         .filter(ln > 0)
         .select(
-            id_col,
+            "doc_id",
             F.posexplode(starts).alias("chunk_id", "_start"),
             F.col("_toks"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("chunk_id").cast("long").alias("chunk_id"),
             F.least(F.lit(chunk_tokens), ln - F.col("_start"))
             .cast("long")
             .alias("n_tokens"),
             F.array_join(
                 F.slice("_toks", F.col("_start") + 1, chunk_tokens), " "
-            ).alias(text_col),
+            ).alias("text"),
         )
     )
 
@@ -1945,14 +1811,7 @@ def chunk_fixed_windows(
 # ---------------------------------------------------------------------------
 
 
-def ccnet_buckets(
-    docs: DataFrame,
-    *,
-    lam: float = 0.7,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ndp: int = 4,
-) -> DataFrame:
+def ccnet_buckets(docs: DataFrame, *, lam: float = 0.7) -> DataFrame:
     """CCNet's corpus split by LM perplexity tertiles (Wenzek et al.,
     LREC 2020): score every document with the corpus bigram LM
     (:func:`bigram_logprob` — the in-corpus stand-in for CCNet's
@@ -1966,7 +1825,7 @@ def ccnet_buckets(
     defined score (<2 tokens) keep a NULL bucket — the caller decides
     their fate, the operator does not invent a neutral one.  Boundary
     docs whose nll equals a cutpoint go to the LOWER bucket (``<=``),
-    and since nll is rounded to ``ndp`` while interpolation error is
+    and since nll is rounded to 4 decimals while interpolation error is
     ~1 ulp, the comparison is stable across engines.
 
     Scale shape (10^12 docs): the scoring plan is bigram_logprob's
@@ -1976,9 +1835,7 @@ def ccnet_buckets(
     one-row broadcast back onto the stream.  No sort, no window, no
     extra shuffle beyond the scorer's own.
     """
-    scored = bigram_logprob(
-        docs, text_col=text_col, id_col=id_col, lam=lam, ndp=ndp
-    )
+    scored = bigram_logprob(docs, lam=lam)
     cuts = (
         scored.filter(F.col("nll").isNotNull())
         .agg(
@@ -1990,7 +1847,7 @@ def ccnet_buckets(
     c1 = F.element_at("_cuts", 1)
     c2 = F.element_at("_cuts", 2)
     return scored.crossJoin(F.broadcast(cuts)).select(
-        id_col,
+        "doc_id",
         "n_bigrams",
         "nll",
         F.when(F.col("nll").isNull(), F.lit(None).cast("string"))
@@ -2001,13 +1858,7 @@ def ccnet_buckets(
     )
 
 
-def source_divergence(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    source_col: str = "source",
-    ndp: int = 6,
-) -> DataFrame:
+def source_divergence(docs: DataFrame) -> DataFrame:
     """Per-source KL and Jensen-Shannon divergence of the source's
     unigram distribution against the pooled corpus distribution — the
     data-mixture diagnostic used to decide which crawl/source slices to
@@ -2032,7 +1883,7 @@ def source_divergence(
     ``P_c > 0`` wherever ``P_s > 0`` (the corpus contains the source).
 
     Returns ``(source, n_tokens, vocab_size, coverage, kl, js)`` rounded
-    to ``ndp`` (cross-engine double-summation jitter is ~1e-12, far
+    to 6 decimals (cross-engine double-summation jitter is ~1e-12, far
     inside the rounding); ``0 <= js <= ln 2 ~ 0.6931``.
 
     Scale shape (10^12 docs): the text is tokenized ONCE; the corpus
@@ -2046,8 +1897,8 @@ def source_divergence(
     broadcast cross join, not a ``collect``.
     """
     toks = docs.select(
-        F.col(source_col).alias("source"),
-        F.explode(word_tokens(F.col(text_col))).alias("_tok"),
+        F.col("source"),
+        F.explode(word_tokens(F.col("text"))).alias("_tok"),
     )
     per = toks.groupBy("source", "_tok").agg(
         F.count(F.lit(1)).alias("_s_cnt")
@@ -2069,8 +1920,8 @@ def source_divergence(
         .agg(
             F.sum("_s_cnt").cast("long").alias("n_tokens"),
             F.count(F.lit(1)).cast("long").alias("vocab_size"),
-            F.round(F.sum(pc), ndp).alias("coverage"),
-            F.round(F.sum(ps * F.log(ps / pc)), ndp).alias("kl"),
+            F.round(F.sum(pc), 6).alias("coverage"),
+            F.round(F.sum(ps * F.log(ps / pc)), 6).alias("kl"),
             F.round(
                 F.lit(0.5) * F.sum(ps * F.log(ps / m))
                 + F.lit(0.5)
@@ -2078,19 +1929,13 @@ def source_divergence(
                     F.sum(pc * F.log(pc / m))
                     + (F.lit(1.0) - F.sum(pc)) * F.lit(ln2)
                 ),
-                ndp,
+                6,
             ).alias("js"),
         )
     )
 
 
-def vocab_growth(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_checkpoints: int = 10,
-) -> DataFrame:
+def vocab_growth(docs: DataFrame, *, n_checkpoints: int = 10) -> DataFrame:
     """Heaps'-law vocabulary-growth curve: at each of ``n_checkpoints``
     doc-id thresholds, the cumulative document count, cumulative token
     count, distinct-vocabulary size, and type-token ratio.  A corpus
@@ -2113,12 +1958,12 @@ def vocab_growth(
     """
     spark = docs.sparkSession
     toks = docs.select(
-        F.col(id_col).alias("_doc"),
-        F.explode(word_tokens(F.col(text_col))).alias("_tok"),
+        F.col("doc_id").alias("_doc"),
+        F.explode(word_tokens(F.col("text"))).alias("_tok"),
     )
     doc_tok = toks.groupBy("_doc").agg(F.count(F.lit(1)).alias("_n_tok"))
     firsts = toks.groupBy("_tok").agg(F.min("_doc").alias("_first_doc"))
-    max_doc = docs.agg(F.max(F.col(id_col)).alias("_max_doc"))
+    max_doc = docs.agg(F.max(F.col("doc_id")).alias("_max_doc"))
     cps = (
         spark.range(1, n_checkpoints + 1)
         .select(F.col("id").alias("_k"))
@@ -2162,14 +2007,8 @@ def vocab_growth(
     )
 
 
-def zipf_fit(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    top_k: int = 100,
-    ndp: int = 6,
-) -> DataFrame:
-    """Zipf's-law fit over the top-``top_k`` vocabulary: ordinary
+def zipf_fit(docs: DataFrame) -> DataFrame:
+    """Zipf's-law fit over the top-100 vocabulary: ordinary
     least squares of ``ln(count)`` on ``ln(rank)``.  A natural-language
     corpus fits with slope near -1 and high R^2; a corpus polluted with
     machine-generated or templated text flattens (slope toward 0) or
@@ -2177,7 +2016,7 @@ def zipf_fit(
     to track per crawl snapshot.
 
     Returns one row ``(n_terms, slope, intercept, r2)`` (``intercept``
-    is ``ln(count)`` at rank 1 under the fit; all rounded to ``ndp`` —
+    is ``ln(count)`` at rank 1 under the fit; all rounded to 6 decimals —
     cross-engine double jitter is far inside the rounding).  Ranks tie-
     break by token so both engines rank identically.
 
@@ -2186,7 +2025,7 @@ def zipf_fit(
     ordered limit plans as TakeOrderedAndProject (per-partition top-k,
     no global sort of the vocabulary).  Ranks are assigned WITHOUT a
     window (WindowExec with no PARTITION BY is single-task at any
-    cluster size): the ``top_k`` surviving rows fold into ONE sorted
+    cluster size): the 100 surviving rows fold into ONE sorted
     array — constant-sized by construction — and the OLS sums
     (n, Sx, Sy, Sxy, Sxx, Syy) evaluate as higher-order array
     expressions in a single projection; nothing is collected and the
@@ -2194,11 +2033,11 @@ def zipf_fit(
     across partitionings.
     """
     vocab = (
-        docs.select(F.explode(word_tokens(F.col(text_col))).alias("_tok"))
+        docs.select(F.explode(word_tokens(F.col("text"))).alias("_tok"))
         .groupBy("_tok")
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .orderBy(F.desc("_cnt"), "_tok")
-        .limit(top_k)
+        .limit(100)
     )
     # array index i (0-based) == rank - 1 once sorted by (desc cnt,
     # asc token) — encoded as ascending (-cnt, token) for sort_array
@@ -2238,11 +2077,11 @@ def zipf_fit(
     slope = cov_n / var_x
     return agg.select(
         F.col("_n").alias("n_terms"),
-        F.round(slope, ndp).alias("slope"),
-        F.round((F.col("_sy") - slope * F.col("_sx")) / n, ndp).alias(
+        F.round(slope, 6).alias("slope"),
+        F.round((F.col("_sy") - slope * F.col("_sx")) / n, 6).alias(
             "intercept"
         ),
-        F.round(cov_n * cov_n / (var_x * var_y), ndp).alias("r2"),
+        F.round(cov_n * cov_n / (var_x * var_y), 6).alias("r2"),
     )
 
 
@@ -2251,26 +2090,18 @@ def zipf_fit(
 # ---------------------------------------------------------------------------
 
 
-def cross_source_overlap(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    source_col: str = "source",
-    n: int = 3,
-    token_hash=None,
-    ndp: int = 4,
-) -> DataFrame:
+def cross_source_overlap(docs: DataFrame, *, token_hash=None) -> DataFrame:
     """Pairwise source-level shingle overlap matrix — which crawls /
     source slices duplicate each other BEFORE document dedup runs.
 
     For every unordered source pair ``(a, b)`` (``a < b`` lexically)
-    sharing at least one distinct word-``n``-gram shingle, returns
+    sharing at least one distinct word-3-gram shingle, returns
     ``(source_a, source_b, grams_a, grams_b, common, jaccard,
     containment)`` where ``jaccard = common / (grams_a + grams_b -
     common)`` and ``containment = common / min(grams_a, grams_b)`` (a
     near-1 containment with a small jaccard means the smaller source is
     a subset of the larger — the classic re-crawl signature).  Rounded
-    to ``ndp``; sorted by pair.
+    to 4 decimals; sorted by pair.
 
     ``token_hash``: Column->Column hash family applied per shingle;
     default ``xxhash64`` (fast path), pass
@@ -2291,9 +2122,9 @@ def cross_source_overlap(
 
     hash_fn = token_hash or F.xxhash64
     per = (
-        with_shingles(docs, text_col, n, out_col="_sh")
+        with_shingles(docs, out_col="_sh")
         .select(
-            F.col(source_col).alias("_src"),
+            F.col("source").alias("_src"),
             F.explode("_sh").alias("_gram"),
         )
         .select("_src", hash_fn(F.col("_gram")).alias("_h"))
@@ -2334,21 +2165,14 @@ def cross_source_overlap(
             ga.cast("long").alias("grams_a"),
             gb.cast("long").alias("grams_b"),
             F.col("common").cast("long").alias("common"),
-            F.round(c / (ga + gb - c), ndp).alias("jaccard"),
-            F.round(c / F.least(ga, gb), ndp).alias("containment"),
+            F.round(c / (ga + gb - c), 4).alias("jaccard"),
+            F.round(c / F.least(ga, gb), 4).alias("containment"),
         )
         .orderBy("source_a", "source_b")
     )
 
 
-def group_split(
-    docs: DataFrame,
-    *,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    train_pct: int = 90,
-    val_pct: int = 5,
-) -> DataFrame:
+def group_split(docs: DataFrame, *, group_col: str = "source") -> DataFrame:
     """Leakage-safe train/val/test split keyed on a GROUP, not the doc.
 
     :func:`hash_split` buckets each document independently, so two
@@ -2373,8 +2197,8 @@ def group_split(
     split (documented, round-5 ADVICE; coalesce the group to a
     sentinel upstream if that is not what you want).  Unlike
     :func:`hash_split` (a ``withColumn`` that keeps every input
-    column), this returns only ``(id_col, group_col, split)`` — join
-    it back on ``id_col`` to recover full rows.
+    column), this returns only ``(doc_id, group_col, split)`` — join
+    it back on ``doc_id`` to recover full rows.
     """
     bucket = (
         F.conv(F.substring(F.md5(F.col(group_col).cast("string")), 1, 4), 16, 10)
@@ -2382,22 +2206,16 @@ def group_split(
         % 100
     )
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col(group_col),
-        F.when(bucket < train_pct, F.lit("train"))
-        .when(bucket < train_pct + val_pct, F.lit("val"))
+        F.when(bucket < 90, F.lit("train"))
+        .when(bucket < 95, F.lit("val"))
         .otherwise(F.lit("test"))
         .alias("split"),
     )
 
 
-def dup_flow_by_source(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-) -> DataFrame:
+def dup_flow_by_source(docs: DataFrame) -> DataFrame:
     """Cross-source exact-duplicate FLOW matrix: when exact dedup keeps
     the lowest-id copy, which sources lose documents to which keepers?
 
@@ -2420,9 +2238,9 @@ def dup_flow_by_source(
     must touch.
     """
     d = docs.select(
-        F.md5(F.col(text_col)).alias("_dig"),
-        F.col(id_col).alias("_id"),
-        F.col(source_col).alias("_src"),
+        F.md5(F.col("text")).alias("_dig"),
+        F.col("doc_id").alias("_id"),
+        F.col("source").alias("_src"),
     )
     keeper = d.groupBy("_dig").agg(
         F.min(F.struct("_id", "_src")).alias("_k")
@@ -2439,14 +2257,7 @@ def dup_flow_by_source(
     )
 
 
-def score_percentile_by_source(
-    docs: DataFrame,
-    *,
-    score_col: str,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    ndp: int = 6,
-) -> DataFrame:
+def score_percentile_by_source(docs: DataFrame, *, score_col: str) -> DataFrame:
     """Per-source percentile normalization of a quality score — the
     calibration step that makes ONE global keep-threshold meaningful
     across heterogeneous crawl slices.
@@ -2454,12 +2265,12 @@ def score_percentile_by_source(
     A raw score cut ("keep docs with score > 3.2") silently keeps 80%
     of a clean source and 5% of a noisy one; filtering on the
     WITHIN-SOURCE percentile ("keep the top 30% of every source")
-    equalizes the selection pressure.  Emits ``(id_col, source_col,
+    equalizes the selection pressure.  Emits ``(doc_id, source,
     score, pct_in_source)`` with ``pct_in_source`` = SQL
     ``percent_rank() OVER (PARTITION BY source ORDER BY score)`` =
     (#strictly-lower-scored docs in the source) / (n_source - 1),
     ties sharing the lower rank, 0.0 for a single-doc source; rounded
-    to ``ndp``.  Rows with a NULL score are excluded (no defined rank).
+    to 6 decimals.  Rows with a NULL score are excluded (no defined rank).
 
     Scale shape (10^12 docs): NO window over the corpus.  The
     strictly-below counts come from a ``(source, score)`` histogram —
@@ -2471,23 +2282,23 @@ def score_percentile_by_source(
     broadcast-hash join: no sort, no skew hazard from corpus-scale
     sources.
     """
-    s, src = F.col(score_col), F.col(source_col)
+    s, src = F.col(score_col), F.col("source")
     base = docs.filter(s.isNotNull()).select(
-        F.col(id_col), src.alias(source_col), s.alias("score")
+        F.col("doc_id"), src.alias("source"), s.alias("score")
     )
-    hist = base.groupBy(source_col, "score").agg(
+    hist = base.groupBy("source", "score").agg(
         F.count(F.lit(1)).alias("_c")
     )
     w = (
-        Window.partitionBy(source_col)
+        Window.partitionBy("source")
         .orderBy("score")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     cum = hist.select(
-        source_col,
+        "source",
         "score",
         F.coalesce(F.sum("_c").over(w), F.lit(0)).alias("_below"),
-        (F.sum("_c").over(Window.partitionBy(source_col)) - 1).alias("_nm1"),
+        (F.sum("_c").over(Window.partitionBy("source")) - 1).alias("_nm1"),
     )
     # no forced broadcast: for integer/rounded scores the histogram is
     # dimension-sized and the optimizer broadcasts it on its own, but a
@@ -2495,16 +2306,16 @@ def score_percentile_by_source(
     # hint would bypass autoBroadcastJoinThreshold and OOM the driver
     # instead of degrading to a shuffle join (round-5 ADVICE)
     return (
-        base.join(cum, [source_col, "score"])
+        base.join(cum, ["source", "score"])
         .select(
-            id_col,
-            source_col,
+            "doc_id",
+            "source",
             "score",
             F.round(
                 F.when(F.col("_nm1") > 0, F.col("_below") / F.col("_nm1"))
                 .otherwise(F.lit(0.0)),
-                ndp,
+                6,
             ).alias("pct_in_source"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )

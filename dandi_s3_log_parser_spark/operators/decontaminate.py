@@ -40,16 +40,14 @@ from .dedup import with_shingles
 _BLOOM_SEED = 0x5EED
 
 
-def benchmark_ngrams(
-    benchmark: DataFrame, *, text_col: str = "text", n: int = 3
-) -> DataFrame:
+def benchmark_ngrams(benchmark: DataFrame, *, n: int = 3) -> DataFrame:
     """Distinct word n-grams of the benchmark set — one ``gram`` column.
 
     Distinct twice: per-document inside ``with_shingles`` (array_distinct)
     and globally after the explode, so the broadcast side is minimal.
     """
     return (
-        with_shingles(benchmark, text_col, n, out_col="_sh")
+        with_shingles(benchmark, n=n, out_col="_sh")
         .select(F.explode("_sh").alias("gram"))
         .distinct()
     )
@@ -60,13 +58,11 @@ def decontaminate(
     benchmark: DataFrame,
     *,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_overlap: int = 1,
 ) -> DataFrame:
     """Per-document benchmark-overlap report.
 
-    Returns ``(id_col, matched_ngrams, contaminated)`` for EVERY input
+    Returns ``(doc_id, matched_ngrams, contaminated)`` for EVERY input
     document: ``matched_ngrams`` = number of distinct n-grams the doc
     shares with the benchmark, ``contaminated`` = matched >= min_overlap.
 
@@ -74,18 +70,18 @@ def decontaminate(
     dimension-sized by definition, and a shuffled join here would
     re-partition the full corpus gram explosion for no reason.
     """
-    grams = benchmark_ngrams(benchmark, text_col=text_col, n=n)
-    doc_grams = with_shingles(docs, text_col, n, out_col="_sh").select(
-        F.col(id_col), F.explode("_sh").alias("gram")
+    grams = benchmark_ngrams(benchmark, n=n)
+    doc_grams = with_shingles(docs, n=n, out_col="_sh").select(
+        F.col("doc_id"), F.explode("_sh").alias("gram")
     )
     # grams are distinct per doc already, so count(*) == count(DISTINCT)
     hits = (
         doc_grams.join(F.broadcast(grams), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("matched_ngrams"))
     )
-    return docs.select(id_col).join(hits, id_col, "left").select(
-        F.col(id_col),
+    return docs.select("doc_id").join(hits, "doc_id", "left").select(
+        F.col("doc_id"),
         F.coalesce(F.col("matched_ngrams"), F.lit(0))
         .cast("long")
         .alias("matched_ngrams"),
@@ -120,10 +116,7 @@ def _bloom_positions(col: Column, *, n_bits: int, k: int) -> list[Column]:
     ]
 
 
-def build_bloom(
-    grams: DataFrame, *, gram_col: str = "gram", n_bits: int = 1 << 20,
-    k: int = 5,
-) -> DataFrame:
+def build_bloom(grams: DataFrame, *, n_bits: int = 1 << 20, k: int = 5) -> DataFrame:
     """Aggregate a gram table into a one-row Bloom filter DataFrame.
 
     Returns a single row ``(bloom_words: array<long>)`` of length
@@ -140,7 +133,7 @@ def build_bloom(
     n_words = n_bits // 64
     pos = grams.select(
         F.explode(
-            F.array(*_bloom_positions(F.col(gram_col), n_bits=n_bits, k=k))
+            F.array(*_bloom_positions(F.col("gram"), n_bits=n_bits, k=k))
         ).alias("p")
     )
     words = pos.select(
@@ -176,9 +169,6 @@ def bloom_decontaminate(
     benchmark: DataFrame,
     *,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_overlap: int = 1,
     n_bits: int = 1 << 20,
     k: int = 5,
 ) -> DataFrame:
@@ -199,10 +189,10 @@ def bloom_decontaminate(
     maybe; the result is byte-identical to :func:`decontaminate`
     (false positives are joined away, never reported).
     """
-    grams = benchmark_ngrams(benchmark, text_col=text_col, n=n)
+    grams = benchmark_ngrams(benchmark, n=n)
     bloom = build_bloom(grams, n_bits=n_bits, k=k)
-    doc_grams = with_shingles(docs, text_col, n, out_col="_sh").select(
-        F.col(id_col), F.explode("_sh").alias("gram")
+    doc_grams = with_shingles(docs, n=n, out_col="_sh").select(
+        F.col("doc_id"), F.explode("_sh").alias("gram")
     )
     candidates = doc_grams.crossJoin(F.broadcast(bloom)).filter(
         _bloom_contains(F.col("gram"), F.col("bloom_words"), n_bits=n_bits,
@@ -213,15 +203,15 @@ def bloom_decontaminate(
     # broadcast; only the candidate sliver of the corpus reaches it.
     hits = (
         candidates.join(grams, "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("matched_ngrams"))
     )
-    return docs.select(id_col).join(hits, id_col, "left").select(
-        F.col(id_col),
+    return docs.select("doc_id").join(hits, "doc_id", "left").select(
+        F.col("doc_id"),
         F.coalesce(F.col("matched_ngrams"), F.lit(0))
         .cast("long")
         .alias("matched_ngrams"),
-        (F.coalesce(F.col("matched_ngrams"), F.lit(0)) >= min_overlap).alias(
+        (F.coalesce(F.col("matched_ngrams"), F.lit(0)) >= 1).alias(
             "contaminated"
         ),
     )

@@ -85,9 +85,7 @@ def exact_dedup(
     return digests.select(id_col, "dup_count")
 
 
-def with_shingles(
-    df: DataFrame, text_col: str = "text", n: int = 3, out_col: str = "sh"
-) -> DataFrame:
+def with_shingles(df: DataFrame, n: int = 3, out_col: str = "sh") -> DataFrame:
     """Add a distinct word-n-gram shingle column, in linear time.
 
     PERF NOTE (measured, sf0.1 5000 docs: 174.6s -> 5.6s for the
@@ -99,7 +97,7 @@ def with_shingles(
     CollapseProject) and grams come from ``arrays_zip`` of shifted
     slices, touching each token O(n) times total.
     """
-    df = df.withColumn("_toks", word_tokens(F.col(text_col)))
+    df = df.withColumn("_toks", word_tokens(F.col("text")))
     cnt = F.greatest(F.size(F.col("_toks")) - (n - 1), F.lit(0))
     zipped = F.arrays_zip(
         *[F.slice(F.col("_toks"), j + 1, cnt) for j in range(n)]
@@ -115,15 +113,13 @@ def ngram_jaccard_pairs(
     *,
     threshold: float = 0.5,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_rows: int = 1000,
 ) -> DataFrame:
     """All-pairs word-n-gram Jaccard above ``threshold`` (guarded small-N
     baseline; use :func:`minhash_lsh_candidates` at scale)."""
     docs = (
-        with_shingles(df, text_col, n)
-        .select(F.col(id_col).alias("id"), "sh")
+        with_shingles(df, n=n)
+        .select(F.col("doc_id").alias("id"), "sh")
         .filter(F.size("sh") > 0)
         .limit(max_rows)
     )
@@ -145,8 +141,6 @@ def jaccard_prefix_join(
     *,
     threshold: float = 0.5,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_postings_per_token: int | None = None,
 ) -> DataFrame:
     """EXACT all-pairs word-n-gram Jaccard >= ``threshold`` via prefix
@@ -182,8 +176,8 @@ def jaccard_prefix_join(
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     sh = (
-        with_shingles(df, text_col, n)
-        .select(F.col(id_col).alias("id"), "sh")
+        with_shingles(df, n=n)
+        .select(F.col("doc_id").alias("id"), "sh")
         .filter(F.size("sh") > 0)
     )
     exploded = sh.select("id", F.size("sh").alias("sz"),
@@ -261,14 +255,14 @@ def jaccard_prefix_join(
     )
 
 
-def minhash_signature(sh_col: Column, num_hashes: int = 16) -> Column:
+def minhash_signature(sh_col: Column) -> Column:
     """MinHash signature as array<long>: hash family h_i(s) = xxhash64(s, i).
 
     ``sh_col`` must be a bound shingle COLUMN (see :func:`with_shingles`
     perf note) — passing a raw expression re-evaluates it per hash seed.
     """
     return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+        F.sequence(F.lit(0), F.lit(15)),
         lambda i: F.array_min(F.transform(sh_col, lambda s: F.xxhash64(s, i))),
     )
 
@@ -329,34 +323,28 @@ def _band_buckets(
 def minhash_lsh_candidates(
     df: DataFrame,
     *,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket_size: int = 64,
     shingled: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash-LSH.
 
     shingle -> signature -> per-band bucket hash -> pairs within
-    (band, bucket).  Buckets larger than ``max_bucket_size`` are dropped
+    (band, bucket).  Buckets larger than 64 ids are dropped
     BEFORE pair generation (standard at-scale guard: a bucket with m ids
     yields m^2/2 pairs, so one degenerate bucket — boilerplate, tiny
     vocab, empty docs — would otherwise dominate the whole job; such
     buckets carry no dedup signal).  Pair generation is collect_list on
     the pre-filtered small buckets + native pair expansion — bounded at
-    max_bucket_size^2/2 pairs per bucket, no skewed self-join.
+    64^2/2 pairs per bucket, no skewed self-join.
     """
     if shingled is None:
-        shingled = with_shingles(df, text_col, shingle_n).select(
-            F.col(id_col).alias("id"), "sh"
+        shingled = with_shingles(df).select(
+            F.col("doc_id").alias("id"), "sh"
         ).filter(F.size("sh") > 0)
     # validity = non-empty shingle set, checked BEFORE the signature: a
     # filter on the signature itself would be pushed through the
     # projection by Catalyst and re-evaluate the whole minhash subtree
     # (measured 2x on this stage)
-    banded = _band_buckets(shingled, num_hashes, bands)
+    banded = _band_buckets(shingled, 16, 4)
 
     # bucket-size guard via a window count over (band, bucket): a
     # count-then-join formulation would reference `banded` twice and
@@ -367,7 +355,7 @@ def minhash_lsh_candidates(
 
     w = Window.partitionBy("band", "bucket")
     small = banded.withColumn("_n", F.count(F.lit(1)).over(w)).filter(
-        (F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size)
+        (F.col("_n") >= 2) & (F.col("_n") <= 64)
     )
     grouped = small.groupBy("band", "bucket").agg(
         F.array_sort(F.collect_list("id")).alias("ids")
@@ -393,11 +381,6 @@ def minhash_dedup(
     df: DataFrame,
     *,
     threshold: float = 0.7,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     catalog=None,
     shingle_table: str | None = None,
 ) -> DataFrame:
@@ -424,8 +407,8 @@ def minhash_dedup(
     snapshot).
     """
     sh = (
-        with_shingles(df, text_col, shingle_n)
-        .select(F.col(id_col).alias("id"), "sh")
+        with_shingles(df)
+        .select(F.col("doc_id").alias("id"), "sh")
         .localCheckpoint()
         .filter(F.size("sh") > 0)
     )
@@ -434,15 +417,7 @@ def minhash_dedup(
             raise ValueError("shingle_table requires a catalog")
         catalog.write(sh, shingle_table, mode="overwrite")
         sh = catalog.read(shingle_table)
-    cands = minhash_lsh_candidates(
-        df,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        id_col=id_col,
-        text_col=text_col,
-        shingled=sh,
-    )
+    cands = minhash_lsh_candidates(df, shingled=sh)
     # verify joins: candidate pairs x shingle dim; at corpus scale the
     # shingle dim won't broadcast — Catalyst/AQE will pick a shuffle
     # join automatically — but the candidate side stays the small side
@@ -468,13 +443,7 @@ def incremental_minhash_dedup(
     corpus: DataFrame,
     *,
     threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_bucket_size: int = 64,
-    ndp: int = 4,
 ) -> DataFrame:
     """Dedup a NEW crawl snapshot against an EXISTING corpus: for each
     new document, find near-duplicates (shingle Jaccard >= threshold)
@@ -509,23 +478,23 @@ def incremental_minhash_dedup(
     # documents (a forced repartition instead shuffles the gram
     # array<string> column at 10-20x the cost of its bytes)
     sh_new = (
-        with_shingles(new_docs, text_col, shingle_n)
-        .select(F.col(id_col).alias("id"), "sh")
+        with_shingles(new_docs)
+        .select(F.col("doc_id").alias("id"), "sh")
         .localCheckpoint()
         .filter(F.size("sh") > 0)
     )
     sh_old = (
-        with_shingles(corpus, text_col, shingle_n)
-        .select(F.col(id_col).alias("id"), "sh")
+        with_shingles(corpus)
+        .select(F.col("doc_id").alias("id"), "sh")
         .localCheckpoint()
         .filter(F.size("sh") > 0)
     )
-    b_new = _band_buckets(sh_new, num_hashes, bands)
+    b_new = _band_buckets(sh_new, 16, 4)
     from pyspark.sql import Window
 
     w = Window.partitionBy("band", "bucket")
     b_old = (
-        _band_buckets(sh_old, num_hashes, bands)
+        _band_buckets(sh_old, 16, 4)
         .withColumn("_n", F.count(F.lit(1)).over(w))
         .filter(F.col("_n") <= max_bucket_size)
         .drop("_n")
@@ -553,7 +522,7 @@ def incremental_minhash_dedup(
             F.round(
                 F.size(F.array_intersect("sh_n", "sh_o"))
                 / F.size(F.array_union("sh_n", "sh_o")),
-                ndp,
+                4,
             ),
         )
         .filter(F.col("jaccard") >= threshold)
@@ -562,10 +531,10 @@ def incremental_minhash_dedup(
         F.min(F.struct("old_id", "jaccard")).alias("_b")
     )
     return (
-        new_docs.select(F.col(id_col))
-        .join(best, new_docs[id_col] == best["new_id"], "left")
+        new_docs.select(F.col("doc_id"))
+        .join(best, new_docs["doc_id"] == best["new_id"], "left")
         .select(
-            id_col,
+            "doc_id",
             F.col("_b.old_id").alias("dup_of"),
             F.col("_b.jaccard").alias("jaccard"),
             F.col("_b.old_id").isNotNull().alias("is_dup"),
@@ -573,13 +542,7 @@ def incremental_minhash_dedup(
     )
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    *,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, *, max_iter: int = 20) -> DataFrame:
     """Connected components over near-duplicate candidate pairs:
     (doc id -> cluster id), cluster id = min doc id in the component.
 
@@ -605,8 +568,8 @@ def dedup_clusters(
     scalar count — never a collect of the labels.
     """
     edges = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .union(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
+        pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
+        .union(pairs.select(F.col("id_b").alias("a"), F.col("id_a").alias("b")))
         .distinct()
         .localCheckpoint()
     )
@@ -713,13 +676,13 @@ def md5_token_hash_60(tok: Column) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
 
 
-def simhash(df: DataFrame, text_col: str = "text", *, token_hash=None) -> Column:
+def simhash(df: DataFrame, *, token_hash=None) -> Column:
     """SimHash column: token hashing native, bit-vote vectorized in numpy.
 
     ``token_hash``: Column->Column hash family; default xxhash64 (fast
     path), :func:`md5_token_hash_60` for oracle-verifiable output."""
     hash_fn = token_hash or F.xxhash64
-    token_hashes = F.transform(word_tokens(F.col(text_col)), lambda t: hash_fn(t))
+    token_hashes = F.transform(word_tokens(F.col("text")), lambda t: hash_fn(t))
     return _simhash_from_token_hashes(token_hashes)
 
 
@@ -727,8 +690,6 @@ def simhash_near_dup_pairs(
     df: DataFrame,
     *,
     max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     token_hash=None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, LSH-bucketed on 16-bit
@@ -736,8 +697,8 @@ def simhash_near_dup_pairs(
     a pair within distance 3 over 4 chunks must share one chunk), which
     is what makes the operator oracle-verifiable end to end."""
     docs = df.select(
-        F.col(id_col).alias("id"),
-        simhash(df, text_col, token_hash=token_hash).alias("sh"),
+        F.col("doc_id").alias("id"),
+        simhash(df, token_hash=token_hash).alias("sh"),
     )
     chunks = docs.select(
         "id",
@@ -790,8 +751,6 @@ def repeated_ngram_spans(
     *,
     k: int = 8,
     min_docs: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Cross-document repeated token spans: every ``k``-token window
     whose content recurs in >= ``min_docs`` distinct documents, merged
@@ -816,7 +775,7 @@ def repeated_ngram_spans(
         raise ValueError(f"k must be >= 1, got {k}")
     if min_docs < 2:
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
-    toks = word_tokens(F.col(text_col))
+    toks = word_tokens(F.col("text"))
     nwin = F.size(F.col("_toks")) - F.lit(k) + 1
     # `wins` has two consumers (repeated-gram aggregate + join back)
     # and deliberately does NOT checkpoint: both a full checkpoint of
@@ -825,10 +784,10 @@ def repeated_ngram_spans(
     # window hashing in parallel (the eager materialization job costs
     # more than the overlapped second evaluation at this row width)
     wins = (
-        docs.select(F.col(id_col), toks.alias("_toks"))
+        docs.select(F.col("doc_id"), toks.alias("_toks"))
         .filter(F.size("_toks") >= k)
         .select(
-            id_col,
+            "doc_id",
             F.posexplode(
                 F.transform(
                     F.sequence(F.lit(0), nwin - 1),
@@ -848,12 +807,12 @@ def repeated_ngram_spans(
     )
     repeated = (
         wins.groupBy("_g")
-        .agg(F.count_distinct(id_col).alias("_nd"))
+        .agg(F.count_distinct("doc_id").alias("_nd"))
         .filter(F.col("_nd") >= min_docs)
         .select("_g")
     )
-    hits = wins.join(repeated, "_g").select(id_col, "pos")
-    w = Window.partitionBy(id_col).orderBy("pos")
+    hits = wins.join(repeated, "_g").select("doc_id", "pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     prev_end = F.max(F.col("pos") + k).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -872,14 +831,14 @@ def repeated_ngram_spans(
         )
     )
     return (
-        grouped.groupBy(id_col, "_island")
+        grouped.groupBy("doc_id", "_island")
         .agg(
             F.min("pos").cast("long").alias("span_start"),
             F.max(F.col("pos") + k).cast("long").alias("span_end"),
             F.count(F.lit(1)).cast("long").alias("n_windows"),
         )
         .drop("_island")
-        .orderBy(id_col, "span_start")
+        .orderBy("doc_id", "span_start")
     )
 
 
@@ -893,7 +852,6 @@ def snapshot_delta(
     new: DataFrame,
     *,
     key_col: str = "url",
-    digest_col: str = "digest",
 ) -> DataFrame:
     """Classify every key across two crawl snapshots: ``added``
     (only in new), ``removed`` (only in prev), ``changed`` (both, but
@@ -913,11 +871,11 @@ def snapshot_delta(
     """
     p = prev.select(
         F.col(key_col).alias("key"),
-        F.col(digest_col).alias("prev_digest"),
+        F.col("digest").alias("prev_digest"),
     )
     n = new.select(
         F.col(key_col).alias("key"),
-        F.col(digest_col).alias("new_digest"),
+        F.col("digest").alias("new_digest"),
     )
     return p.join(n, "key", "full_outer").select(
         "key",
@@ -945,8 +903,6 @@ def containment_near_dup(
     threshold: float = 0.8,
     n: int = 3,
     df_cap: int = 10_000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Ordered near-dup pairs by n-gram CONTAINMENT:
     ``C(a -> b) = |S(a) & S(b)| / |S(a)|`` (Broder 1997's second
@@ -1005,8 +961,8 @@ def containment_near_dup(
     # the sf1.0 plan, each ~10-15 executor-CPU-seconds) — same pattern
     # as minhash_dedup's checkpointed shingle table
     sh = (
-        with_shingles(df, text_col, n)
-        .select(F.col(id_col).alias("id"), "sh")
+        with_shingles(df, n=n)
+        .select(F.col("doc_id").alias("id"), "sh")
         .filter(F.size("sh") > 0)
         .localCheckpoint()
     )
@@ -1109,8 +1065,6 @@ def remove_repeated_spans(
     *,
     k: int = 8,
     min_docs: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Cut cross-document repeated token spans OUT of the text — the
     apply half of exact-substring deduplication (Lee et al. 2022
@@ -1135,13 +1089,11 @@ def remove_repeated_spans(
     never shuffled.
     """
     if spans is None:
-        spans = repeated_ngram_spans(
-            docs, k=k, min_docs=min_docs, id_col=id_col, text_col=text_col
-        )
-    per_doc = spans.groupBy(id_col).agg(
+        spans = repeated_ngram_spans(docs, k=k, min_docs=min_docs)
+    per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )
-    orig_toks = tokens(F.col(text_col))
+    orig_toks = tokens(F.col("text"))
     kept = F.filter(
         orig_toks,
         lambda t, i: ~F.exists(
@@ -1149,11 +1101,11 @@ def remove_repeated_spans(
             lambda s: (i >= s["span_start"]) & (i < s["span_end"]),
         ),
     )
-    return docs.join(per_doc, id_col, "left").select(
-        id_col,
-        F.when(F.col("_spans").isNull(), F.col(text_col))
+    return docs.join(per_doc, "doc_id", "left").select(
+        "doc_id",
+        F.when(F.col("_spans").isNull(), F.col("text"))
         .otherwise(F.array_join(kept, " "))
-        .alias(text_col),
+        .alias("text"),
         F.when(F.col("_spans").isNull(), F.lit(0))
         .otherwise(F.size(orig_toks) - F.size(kept))
         .cast("long")
@@ -1166,14 +1118,7 @@ def remove_repeated_spans(
 # ---------------------------------------------------------------------------
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    *,
-    k: int = 5,
-    window: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, *, k: int = 5, window: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS algorithm): hash every character ``k``-gram
     of the normalized text, then keep the MINIMUM hash of each sliding
@@ -1206,7 +1151,7 @@ def winnow_fingerprints(
         raise ValueError(f"k must be >= 1, got {k}")
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
 
     # The gram-hash + window-min kernel runs as an Arrow-batched
     # pandas UDF: hashlib.md5 is C speed and the rolling minima are
@@ -1263,8 +1208,8 @@ def winnow_fingerprints(
         return norms.map(fps)
 
     return (
-        docs.select(F.col(id_col), norm.alias("_norm"))
+        docs.select(F.col("doc_id"), norm.alias("_norm"))
         .filter(F.length("_norm") - k + 1 >= 1)
-        .select(id_col, F.explode(_winnow_fps(F.col("_norm"))).alias("fp"))
+        .select("doc_id", F.explode(_winnow_fps(F.col("_norm"))).alias("fp"))
         .distinct()
     )

@@ -27,7 +27,6 @@ def join_size_estimate(
     key_col: str,
     *,
     topn: int = 10,
-    ndp: int = 6,
 ) -> DataFrame:
     """Exact inner-equi-join cardinality + the ``topn`` keys that
     contribute most output rows.
@@ -80,7 +79,7 @@ def join_size_estimate(
         .select(
             "key",
             F.col("contrib").cast("long").alias("contrib"),
-            F.round(F.col("contrib") / F.col("_total"), ndp).alias(
+            F.round(F.col("contrib") / F.col("_total"), 6).alias(
                 "share"
             ),
         )
@@ -97,7 +96,7 @@ def join_size_estimate(
         top.alias("t")
         .join(F.broadcast(top.alias("o")), pred)
         .groupBy("t.key", "t.contrib", "t.share")
-        .agg(F.round(F.sum("o.share"), ndp).alias("cum_share"))
+        .agg(F.round(F.sum("o.share"), 6).alias("cum_share"))
         .select(
             F.col("t.key").alias("key"),
             F.col("t.contrib").alias("contrib"),

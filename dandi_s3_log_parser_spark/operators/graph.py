@@ -12,7 +12,7 @@ per-iteration sum that a floating double sum would make partition-order
 dependent is an EXACT DECIMAL sum over values pre-rounded to a fixed
 grid — decimal addition is associative, so the result is identical
 across runs, partitionings, cluster sizes, and engines.  Ranks are
-rounded to ``ndp`` decimals at the end of every iteration; the DuckDB
+rounded to 8 decimals at the end of every iteration; the DuckDB
 oracle unrolls the identical arithmetic.
 
 Scale shape (10^9 hosts, 10^11 edges): per iteration one src-keyed
@@ -34,15 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pagerank(
-    edges: DataFrame,
-    *,
-    iters: int = 4,
-    damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    ndp: int = 8,
-) -> DataFrame:
+def pagerank(edges: DataFrame, *, iters: int = 4, damping: float = 0.85) -> DataFrame:
     """Fixed-iteration PageRank with dangling-mass redistribution.
 
     ``rank_{t+1}(v) = (1-d)/N + d * (sum_{u->v} rank_t(u)/outdeg(u)
@@ -57,9 +49,7 @@ def pagerank(
             f"need iters >= 0, 0 < damping < 1; got {iters}, {damping}"
         )
     e = (
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
+        edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint()
@@ -79,11 +69,11 @@ def pagerank(
         )
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ranks = nodes.select(
-        "node", F.round(F.lit(1.0) / F.lit(float(n)), ndp).alias("rank")
+        "node", F.round(F.lit(1.0) / F.lit(float(n)), 8).alias("rank")
     )
     base = (1.0 - damping) / n
     for _ in range(iters):
-        # dangling mass: ranks are on the ndp grid, so the decimal cast
+        # dangling mass: ranks are on the 8-decimal grid, so the decimal cast
         # is unambiguous and the sum exact (never a partition-order
         # double sum).  Rides a broadcast 1-row cross-join rather than
         # a driver collect, so each iteration costs ONE eager job (the
@@ -128,7 +118,7 @@ def pagerank(
                         )
                         + F.col("_dm") / F.lit(float(n))
                     ),
-                    ndp,
+                    8,
                 ).alias("rank"),
             )
             .localCheckpoint()
@@ -136,14 +126,7 @@ def pagerank(
     return ranks
 
 
-def hits(
-    edges: DataFrame,
-    *,
-    iters: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    ndp: int = 8,
-) -> DataFrame:
+def hits(edges: DataFrame, *, iters: int = 4) -> DataFrame:
     """Kleinberg HITS hubs & authorities, fixed iterations,
     sum-normalized — the link-graph complement to :func:`pagerank`
     (hub = links to good content, authority = linked by good hubs; a
@@ -159,7 +142,7 @@ def hits(
     for every node appearing as src or dst.
 
     Determinism contract (mirrors :func:`pagerank`): scores live on an
-    ``ndp``-decimal grid, per-edge contributions are summed EXACTLY as
+    8-decimal grid, per-edge contributions are summed EXACTLY as
     decimals (never a partition-order double sum), and each
     normalization divides two exact decimals in IEEE double then
     rounds back to the grid — bit-identical across partitionings,
@@ -173,9 +156,7 @@ def hits(
     if iters < 0:
         raise ValueError(f"need iters >= 0; got {iters}")
     e = (
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
+        edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint()
@@ -220,7 +201,7 @@ def hits(
                 F.round(
                     F.coalesce(F.col("_s").cast("double"), F.lit(0.0))
                     / F.col("_t"),
-                    ndp,
+                    8,
                 ).alias("score"),
             )
             .localCheckpoint()
@@ -232,7 +213,7 @@ def hits(
     if auth is None:  # iters == 0: classical all-ones init, normalized
         n = nodes.count()
         hub = nodes.select(
-            "node", F.round(F.lit(1.0) / n, ndp).alias("score")
+            "node", F.round(F.lit(1.0) / n, 8).alias("score")
         )
         auth = hub
     return (

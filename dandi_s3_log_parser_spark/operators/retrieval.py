@@ -26,19 +26,14 @@ def bm25_topk(
     queries: DataFrame,
     *,
     k: int = 10,
-    k1: float = 1.2,
     b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id_col: str = "query_id",
-    query_text_col: str = "query",
-    ndp: int = 6,
 ) -> DataFrame:
     """Top-``k`` documents per query under Okapi BM25.
 
     ``score(q, d) = sum over DISTINCT terms t in q that occur in d of
     idf(t) * tf(t,d) * (k1+1) / (tf(t,d) + k1 * (1 - b + b * dl(d)/avgdl))``
-    with the non-negative idf ``ln(1 + (N - df + 0.5)/(df + 0.5))``.
+    with ``k1 = 1.2`` and the non-negative idf
+    ``ln(1 + (N - df + 0.5)/(df + 0.5))``.
     Query terms are deduplicated (set-of-words query model); ``dl`` is
     the document's total token count, ``avgdl`` the corpus mean over
     ALL documents (empty ones included).  Returns
@@ -49,7 +44,7 @@ def bm25_topk(
     Determinism contract: each matched term's contribution is rounded
     to 12 decimals, cast to ``DECIMAL(28,12)``, and summed EXACTLY —
     never a partition-order double sum — then the total is rounded to
-    ``ndp``; bit-identical across partitionings and engines (the same
+    6 decimals; bit-identical across partitionings and engines (the same
     grid trick as ``operators/graph.pagerank``).
 
     Scale shape (10^12 docs, 10^2-10^4 queries):
@@ -74,12 +69,12 @@ def bm25_topk(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if k1 < 0 or not 0 <= b <= 1:
-        raise ValueError(f"need k1 >= 0 and 0 <= b <= 1; got k1={k1} b={b}")
+    if not 0 <= b <= 1:
+        raise ValueError(f"need 0 <= b <= 1 (BM25 with k1=1.2); got b={b}")
 
     toks = docs.select(
-        F.col(id_col).alias("_id"),
-        F.explode(word_tokens(F.col(text_col))).alias("term"),
+        F.col("doc_id").alias("_id"),
+        F.explode(word_tokens(F.col("text"))).alias("term"),
     )
     tf = toks.groupBy("_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     # dl re-aggregates the (already map-side-combined) tf table instead
@@ -105,8 +100,8 @@ def bm25_topk(
     )
 
     qterms = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(word_tokens(F.col(query_text_col))).alias("term"),
+        F.col("query_id"),
+        F.explode(word_tokens(F.col("query"))).alias("term"),
     ).distinct()
 
     # df only for query terms: prune the term-keyed aggregate with the
@@ -140,13 +135,13 @@ def bm25_topk(
         .crossJoin(F.broadcast(stats))
         .select(
             "query_id",
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             F.round(
                 F.col("_idf")
-                * (F.col("tf") * (k1 + 1))
+                * (F.col("tf") * 2.2)
                 / (
                     F.col("tf")
-                    + k1
+                    + 1.2
                     * (1.0 - b + b * F.col("dl") / F.col("_avgdl"))
                 ),
                 12,
@@ -155,11 +150,11 @@ def bm25_topk(
             .alias("_c"),
         )
     )
-    scored = contrib.groupBy("query_id", id_col).agg(
-        F.round(F.sum("_c").cast("double"), ndp).alias("score")
+    scored = contrib.groupBy("query_id", "doc_id").agg(
+        F.round(F.sum("_c").cast("double"), 6).alias("score")
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc(id_col)
+        F.desc("score"), F.asc("doc_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))

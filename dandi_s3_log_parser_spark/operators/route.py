@@ -33,17 +33,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def key_parent(key_col: str = "object_key") -> F.Column:
-    return F.element_at(F.split(F.col(key_col), "/"), 1)
+def key_parent() -> F.Column:
+    return F.element_at(F.split(F.col("object_key"), "/"), 1)
 
 
-def key_shard(key_col: str = "object_key") -> F.Column:
+def key_shard() -> F.Column:
     """First 3-hex shard of the blob id (``blobs/<s1>/...`` path part);
     zarr keys get the first 3 chars of the zarr id."""
     return F.when(
-        key_parent(key_col) == "blobs",
-        F.element_at(F.split(F.col(key_col), "/"), 2),
-    ).otherwise(F.substring(F.element_at(F.split(F.col(key_col), "/"), 2), 1, 3))
+        key_parent() == "blobs",
+        F.element_at(F.split(F.col("object_key"), "/"), 2),
+    ).otherwise(
+        F.substring(F.element_at(F.split(F.col("object_key"), "/"), 2), 1, 3)
+    )
 
 
 def route_binned(

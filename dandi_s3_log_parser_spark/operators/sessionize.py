@@ -152,14 +152,7 @@ def session_stats(
     return s.groupBy(key_col, "session_id").agg(*aggs)
 
 
-def event_funnel(
-    events: DataFrame,
-    steps: list[str],
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def event_funnel(events: DataFrame, steps: list[str]) -> DataFrame:
     """Ordered-funnel conversion over a keyed event stream: how many
     keys performed step 1, then step 2 STRICTLY AFTER their first
     step 1, then step 3 strictly after that, ... — the conversion
@@ -185,9 +178,9 @@ def event_funnel(
     counts = []
     for i, s in enumerate(steps):
         ev = events.select(
-            F.col(key_col).alias("k"),
-            F.col(ts_col).alias("t"),
-            F.col(type_col).alias("typ"),
+            F.col("user_id").alias("k"),
+            F.col("ts").alias("t"),
+            F.col("event_type").alias("typ"),
         ).filter(F.col("typ") == s)
         if reached is None:
             reached = ev.groupBy("k").agg(F.min("t").alias("t"))

@@ -66,11 +66,14 @@ def _centroid_dist_arrow(cents: dict[int, list[float]]):
     bit-identical; ``cc_i`` is the same driver-side Python sum as
     before.  Null or wrong-length vectors yield a NULL array (the SQL
     form yields an array of NULL distances; both argmin to NULL
-    cluster/dist downstream).  One documented divergence: a NaN
-    *element* inside an input vector surfaces as NULL distances rather
-    than the fold's NaN — pandas->Arrow list conversion cannot carry
-    NaN as a value — and no corpus/fixture contains NaN embeddings
-    (both forms yield no usable cluster for such a row either way).
+    cluster/dist downstream).  One divergence: a NaN *element* inside
+    an input vector surfaces as NULL distances rather than the fold's
+    NaN — NaN list values become nulls when the kernel's pandas output
+    is converted to Arrow.  Downstream the two differ: the kernel's NULL
+    distances argmin to a NULL cluster, while the fold's all-NaN
+    distances get a real cluster index (Spark treats NaN as equal to
+    NaN, so ``array_position(d, array_min(d))`` finds the first one).
+    No corpus or fixture contains NaN embeddings.
     """
     order = sorted(cents)
     C = np.array([cents[i] for i in order], dtype=np.float64)
@@ -120,7 +123,11 @@ def _pair_dot_arrow(dim: int):
     IEEE-754 result is bit-identical.  Null/ragged rows reproduce the
     fold's semantics: any null side or length mismatch yields NULL
     (``zip_with`` pads with null, nulling the fold), equal non-``dim``
-    lengths run the same left fold over that length.
+    lengths run the same left fold over that length.  One divergence: a
+    NULL *element* inside a vector reaches numpy as NaN, so the kernel
+    returns NaN where the fold returns NULL.  The fold norm of that
+    vector is NULL, so its cosine is NULL either way and a
+    ``cos >= threshold`` filter drops the pair.
     """
 
     @F.pandas_udf("double")
@@ -173,8 +180,6 @@ def cosine_topk(
     queries: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """Exact top-k by cosine: corpus x broadcast(queries) -> window rank.
@@ -188,14 +193,14 @@ def cosine_topk(
     q = F.broadcast(
         queries.select(
             F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            norm(F.col(vec_col)).alias("_qn"),
+            F.col("embedding").alias("q_vec"),
+            norm(F.col("embedding")).alias("_qn"),
         )
     )
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("_cn"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        norm(F.col("embedding")).alias("_cn"),
     )
     scored = c.crossJoin(q).select(
         "query_id",
@@ -258,10 +263,7 @@ def lsh_bucketed_topk(
     k: int = 10,
     dim: int,
     n_planes: int = 16,
-    seed: int = 1234,
     multiprobe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """ANN: equal-signature bucket join then exact rerank inside buckets.
@@ -274,21 +276,21 @@ def lsh_bucketed_topk(
     rows); the corpus keeps one bucket per row and the candidate step
     stays an equi-join, so the 100 TB shape is unchanged.
     """
-    sig = make_signature_udf(dim, n_planes, seed)
+    sig = make_signature_udf(dim, n_planes)
     c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm(F.col(vec_col)).alias("_cn"),
-        sig(F.col(vec_col)).alias("bucket"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        norm(F.col("embedding")).alias("_cn"),
+        sig(F.col("embedding")).alias("bucket"),
     )
     masks = _probe_masks(n_planes, multiprobe)
     # signature and norm computed ONCE per query row, then fanned out
     # across the probe masks (queries are small/broadcast by contract)
     qs = queries.select(
         F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("_qn"),
-        sig(F.col(vec_col)).alias("_sig"),
+        F.col("embedding").alias("q_vec"),
+        norm(F.col("embedding")).alias("_qn"),
+        sig(F.col("embedding")).alias("_sig"),
     )
     q = F.broadcast(
         qs.select(
@@ -329,20 +331,18 @@ def train_ivf_centroids(
     *,
     dim: int,
     n_centroids: int = 16,
-    iters: int = 5,
     seed: int = 1234,
-    sample_rows: int = 20_000,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> np.ndarray:
     """Deterministic Lloyd's k-means on a bounded driver-side sample.
 
     IVF training is constant-cost by design (faiss trains on a sample
-    too): the sample is capped at ``sample_rows`` regardless of corpus
+    too): the sample is capped at 20,000 rows regardless of corpus
     size, so the only cluster-scale work is the assignment pass.
     Vectors are L2-normalized so nearest-centroid-by-dot == cosine cell.
 
-    The sample is the ``sample_rows`` lowest values of ``xxhash64(id)``
+    The sample is the 20,000 lowest values of ``xxhash64(id)``
     — an order-by-hash take: unbiased (hash order is independent of any
     corpus sort order; a bare ``.limit()`` would train on whatever
     partitions list first) AND stable across partition layouts / Spark
@@ -352,7 +352,7 @@ def train_ivf_centroids(
     pdf = (
         embeddings.select(vec_col, F.xxhash64(F.col(id_col)).alias("_h"))
         .orderBy("_h")
-        .limit(sample_rows)
+        .limit(20_000)
         .select(vec_col)
         .toPandas()
     )
@@ -360,7 +360,7 @@ def train_ivf_centroids(
     mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
     rng = np.random.default_rng(seed)
     cents = mat[rng.choice(len(mat), size=min(n_centroids, len(mat)), replace=False)]
-    for _ in range(iters):
+    for _ in range(5):
         assign = np.argmax(mat @ cents.T, axis=1)
         for c in range(len(cents)):
             members = mat[assign == c]
@@ -455,10 +455,8 @@ def embedding_lsh_near_dup_pairs(
     dim: int,
     n_planes: int = 8,
     n_tables: int = 4,
-    seed: int = 1234,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_bucket_size: int = 256,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs at scale: multi-table
     hyperplane-LSH candidates + exact cosine verify.
@@ -471,14 +469,14 @@ def embedding_lsh_near_dup_pairs(
     Recall for a pair at cosine c is 1-(1-p^k)^L with p = 1-acos(c)/pi,
     k=n_planes, L=n_tables: ~0.9989 per pair at c=0.99 with the 8x4
     default, and higher as c -> 1 (the regime near-dup dedup cares
-    about).  Buckets larger than ``max_bucket_size`` are dropped before
+    about).  Buckets larger than 256 ids are dropped before
     pair expansion (the same degenerate-bucket guard as MinHash-LSH —
     an all-similar degenerate bucket would otherwise emit m^2/2 pairs).
     """
     from pyspark.sql import Window
 
     sigs = [
-        make_signature_udf(dim, n_planes, seed + 7919 * t) for t in range(n_tables)
+        make_signature_udf(dim, n_planes, 1234 + 7919 * t) for t in range(n_tables)
     ]
     c = embeddings.select(
         F.col(id_col).alias("id"),
@@ -497,7 +495,7 @@ def embedding_lsh_near_dup_pairs(
     ).select("id", "v", "nrm", "tb.tbl", "tb.bucket")
     w = Window.partitionBy("tbl", "bucket")
     small = c.withColumn("_n", F.count(F.lit(1)).over(w)).filter(
-        (F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size)
+        (F.col("_n") >= 2) & (F.col("_n") <= 256)
     )
     grouped = small.groupBy("tbl", "bucket").agg(
         F.array_sort(F.collect_list(F.struct("id", "v", "nrm"))).alias(
@@ -585,9 +583,7 @@ def kmeans_assign(
     k: int = 8,
     iters: int = 2,
     *,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    ndp: int = 6,
 ) -> DataFrame:
     """Deterministic Lloyd's k-means over an embedding column, returning
     the final ``(id, cluster, dist)`` assignment — the clustering step
@@ -599,7 +595,7 @@ def kmeans_assign(
 
     - init: the ``k`` smallest-id vectors (no RNG);
     - assignment: squared L2 via three sequential-fold dot products
-      (``||v||^2 - 2 v.c + ||c||^2``), ROUNDED to ``ndp`` before the
+      (``||v||^2 - 2 v.c + ||c||^2``), ROUNDED to 6 decimals before the
       argmin, ties broken by lowest cluster index
       (``array_position(array_min)`` = first minimum);
     - update: per-dimension means via EXACT ``decimal(25,10)`` sums —
@@ -614,24 +610,20 @@ def kmeans_assign(
     pattern — the two driver collects per iteration are k*dim-sized,
     never fact-sized.  Assignment is a broadcast-literal projection.
     """
-    centroids = train_kmeans_centroids(
-        emb, k, iters, id_col=id_col, vec_col=vec_col, ndp=ndp
-    )
+    centroids = train_kmeans_centroids(emb, k, iters, vec_col=vec_col)
     # set-semantics output, deliberately UNSORTED: a terminal global
     # sort would run the plan twice (range-partitioner sampling pass +
     # the sort itself); callers that need order sort the tiny result
-    return assign_to_centroids(
-        emb, centroids, id_col=id_col, vec_col=vec_col, ndp=ndp
-    ).select(id_col, "cluster", F.col("dist").alias("dist"))
+    return assign_to_centroids(emb, centroids, vec_col=vec_col).select(
+        "vec_id", "cluster", F.col("dist").alias("dist")
+    )
 
 
 def assign_to_centroids(
     emb: DataFrame,
     cents: dict[int, list[float]],
     *,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    ndp: int = 6,
 ) -> DataFrame:
     """Nearest-centroid projection: ``(id, _v, cluster, dist)`` with
     kmeans_assign's exact arithmetic contract (rounded squared-L2
@@ -645,22 +637,22 @@ def assign_to_centroids(
     arrays, plan size is the fixed cost every action (and the JIT)
     pays.
     """
-    base = emb.select(F.col(id_col), F.col(vec_col).alias("_v"))
+    base = emb.select(F.col("vec_id"), F.col(vec_col).alias("_v"))
     # raw distances from the Arrow kernel (exact fold arithmetic, no
     # k*dim literal expression tree — see _centroid_dist_arrow), then
     # the SAME round() applied per element in the JVM.  The rounded
     # array is materialized in its OWN projection: the argmin needs it
     # twice (array_position + array_min)
     darr = base.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col("_v"),
         F.transform(
             _centroid_dist_arrow(cents)(F.col("_v")),
-            lambda x: F.round(x, ndp),
+            lambda x: F.round(x, 6),
         ).alias("_darr"),
     )
     return darr.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col("_v"),
         (F.array_position(F.col("_darr"), F.array_min(F.col("_darr"))) - 1)
         .cast("long")
@@ -674,9 +666,7 @@ def train_kmeans_centroids(
     k: int = 8,
     iters: int = 2,
     *,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    ndp: int = 6,
 ) -> dict[int, list[float]]:
     """Deterministic Lloyd's trainer backing kmeans_assign (and the
     per-subspace PQ codebooks): k smallest-id init, decimal-exact
@@ -684,7 +674,7 @@ def train_kmeans_centroids(
     ``{cluster: centroid}`` dict (k x dim doubles, driver-sized)."""
     if k < 1 or iters < 0:
         raise ValueError(f"need k >= 1, iters >= 0; got k={k}, iters={iters}")
-    init = emb.orderBy(id_col).limit(k).select(id_col, vec_col).collect()
+    init = emb.orderBy("vec_id").limit(k).select("vec_id", vec_col).collect()
     if len(init) < k:
         raise ValueError(f"k={k} exceeds corpus size {len(init)}")
     centroids: dict[int, list[float]] = {
@@ -692,9 +682,7 @@ def train_kmeans_centroids(
     }
     for _ in range(iters):
         stats = (
-            assign_to_centroids(
-                emb, centroids, id_col=id_col, vec_col=vec_col, ndp=ndp
-            )
+            assign_to_centroids(emb, centroids, vec_col=vec_col)
             .select("cluster", F.posexplode("_v").alias("dim", "_val"))
             .groupBy("cluster", "dim")
             .agg(
@@ -722,15 +710,12 @@ def semdedup_pairs(
     *,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ndp: int = 6,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic near-duplicate pairs =
     cosine >= ``threshold`` computed ONLY within k-means cells — the
     clustering bounds the quadratic blow-up to per-cell size, which is
     the whole point of the method.  Returns ``(id_a, id_b, cos)`` with
-    id_a < id_b, cosine ROUNDED to ``ndp`` before the threshold (so
+    id_a < id_b, cosine ROUNDED to 6 decimals before the threshold (so
     engines agree at the boundary).
 
     Scale shape (10^9 vectors): one cluster-keyed equi-join; per-cell
@@ -749,10 +734,8 @@ def semdedup_pairs(
     # assignments to a scratch table, which the paper's own pipeline
     # does anyway.
     asg = (
-        kmeans_assign(
-            emb, k=k, iters=iters, id_col=id_col, vec_col=vec_col, ndp=ndp
-        )
-        .select(id_col, "cluster")
+        kmeans_assign(emb, k=k, iters=iters)
+        .select("vec_id", "cluster")
         .localCheckpoint()
     )
     # norm once PER ROW, not per pair: the cosine then needs one
@@ -770,10 +753,10 @@ def semdedup_pairs(
     # tens of seconds on the generated method, starving every OTHER
     # stage's codegen so whole trials run interpreted (measured 25x
     # executor-CPU swings between identical trials)
-    dim = _probe_dim(emb, vec_col)
+    dim = _probe_dim(emb, "embedding")
     j = asg.join(
-        emb.select(id_col, vec_col, norm(F.col(vec_col)).alias("_nrm")),
-        id_col,
+        emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("_nrm")),
+        "vec_id",
     )
     # SALT the cluster-keyed self-join (guide §2.5): the join key has
     # only k distinct values and its INPUT is tiny, so AQE coalesces
@@ -792,7 +775,7 @@ def semdedup_pairs(
     s_buckets = max(1, (4 * n_part + k - 1) // k)
     a = (
         j.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(s_buckets))
+            "_salt", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(s_buckets))
         )
         .repartition(n_part, "cluster", "_salt")
         .alias("a")
@@ -809,21 +792,21 @@ def semdedup_pairs(
     # codegen/JIT state — see _pair_dot_arrow); division and rounding
     # stay in the JVM so boundary behavior is exactly F.round's
     pair_dot = (
-        _pair_dot_arrow(dim)(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
+        _pair_dot_arrow(dim)(F.col("a.embedding"), F.col("b.embedding"))
         if dim
-        else dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
+        else dot(F.col("a.embedding"), F.col("b.embedding"))
     )
-    cos = F.round(pair_dot / (F.col("a._nrm") * F.col("b._nrm")), ndp)
+    cos = F.round(pair_dot / (F.col("a._nrm") * F.col("b._nrm")), 6)
     return (
         a.join(
             b,
             (F.col("a.cluster") == F.col("b.cluster"))
             & (F.col("a._salt") == F.col("b._salt"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
             cos.alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
@@ -838,9 +821,6 @@ def semdedup_keep(
     *,
     k: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ndp: int = 6,
 ) -> DataFrame:
     """The complete SemDeDup decision: within-cell cosine pairs ->
     connected components (pairs are not transitive) -> keep the lowest
@@ -855,26 +835,18 @@ def semdedup_keep(
     """
     from .dedup import dedup_clusters
 
-    pairs = semdedup_pairs(
-        emb,
-        threshold,
-        k=k,
-        iters=iters,
-        id_col=id_col,
-        vec_col=vec_col,
-        ndp=ndp,
-    )
+    pairs = semdedup_pairs(emb, threshold, k=k, iters=iters)
     comp = dedup_clusters(pairs).select(
-        F.col("doc_id").alias(id_col), F.col("cluster_id").alias("rep_id")
+        F.col("doc_id").alias("vec_id"), F.col("cluster_id").alias("rep_id")
     )
     return (
-        emb.select(id_col)
-        .join(comp, id_col, "left")
+        emb.select("vec_id")
+        .join(comp, "vec_id", "left")
         .select(
-            id_col,
-            F.coalesce("rep_id", F.col(id_col)).alias("rep_id"),
+            "vec_id",
+            F.coalesce("rep_id", F.col("vec_id")).alias("rep_id"),
             (
-                F.coalesce("rep_id", F.col(id_col)) == F.col(id_col)
+                F.coalesce("rep_id", F.col("vec_id")) == F.col("vec_id")
             ).alias("keep"),
         )
     )
@@ -937,10 +909,6 @@ def _train_pq_codebooks(
     m: int,
     k: int,
     iters: int,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ndp: int = 6,
 ) -> list[dict[int, list[float]]]:
     """All ``m`` subspace codebooks trained with ONE corpus scan per
     Lloyd iteration (plus one for init), instead of a per-subspace
@@ -960,10 +928,10 @@ def _train_pq_codebooks(
     """
     if k < 1 or iters < 0:
         raise ValueError(f"need k >= 1, iters >= 0; got k={k}, iters={iters}")
-    init = emb.orderBy(id_col).limit(k).select(id_col, vec_col).collect()
+    init = emb.orderBy("vec_id").limit(k).select("vec_id", "embedding").collect()
     if not init:
         raise ValueError("empty embedding input")
-    dim = len(init[0][vec_col])
+    dim = len(init[0]["embedding"])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     if len(init) < k:
@@ -971,16 +939,16 @@ def _train_pq_codebooks(
     dsub = dim // m
     books: list[dict[int, list[float]]] = [
         {
-            i: [float(x) for x in r[vec_col]][j * dsub : (j + 1) * dsub]
+            i: [float(x) for x in r["embedding"]][j * dsub : (j + 1) * dsub]
             for i, r in enumerate(init)
         }
         for j in range(m)
     ]
     for _ in range(iters):
-        staged = _pq_staged(emb, m, dsub, id_col, vec_col)
+        staged = _pq_staged(emb, m, dsub, "vec_id", "embedding")
         darr = staged.select(
             *[F.col(f"_s{j}") for j in range(m)],
-            *_pq_dist_arrays(books, m, ndp),
+            *_pq_dist_arrays(books, m, 6),
         )
         assigned = darr.select(
             *[F.col(f"_s{j}") for j in range(m)],
@@ -1020,16 +988,7 @@ def _train_pq_codebooks(
     return books
 
 
-def pq_assign(
-    emb: DataFrame,
-    *,
-    m: int = 4,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ndp: int = 6,
-) -> DataFrame:
+def pq_assign(emb: DataFrame, *, m: int = 4, k: int = 8, iters: int = 2) -> DataFrame:
     """Product quantization codebook assignment (Jégou et al. 2011,
     public knowledge) — the compression step of IVF-PQ, the index
     layout every billion-vector ANN deployment actually ships: split
@@ -1044,7 +1003,7 @@ def pq_assign(
     argmin), so the whole construction is bit-reproducible across
     runs, partitionings, and engines.
 
-    Returns one row per vector: ``(id_col, code_0 .. code_{m-1},
+    Returns one row per vector: ``(vec_id, code_0 .. code_{m-1},
     qerr)`` — flat code columns (not an array) so downstream
     group-bys/joins on individual subspace codes stay native, and
     ``qerr`` is the summed per-subspace squared quantization error
@@ -1058,14 +1017,12 @@ def pq_assign(
     passes, no id-keyed re-join of code tables, vector payloads never
     shuffled.
     """
-    books = _train_pq_codebooks(
-        emb, m, k, iters, id_col=id_col, vec_col=vec_col, ndp=ndp
-    )
+    books = _train_pq_codebooks(emb, m, k, iters)
     dsub = len(books[0][0])
-    staged = _pq_staged(emb, m, dsub, id_col, vec_col)
-    darr = staged.select(F.col(id_col), *_pq_dist_arrays(books, m, ndp))
+    staged = _pq_staged(emb, m, dsub, "vec_id", "embedding")
+    darr = staged.select(F.col("vec_id"), *_pq_dist_arrays(books, m, 6))
     assigned = darr.select(
-        F.col(id_col),
+        F.col("vec_id"),
         *[_pq_code_col(j) for j in range(m)],
         *[_pq_dist_col(j) for j in range(m)],
     )
@@ -1074,9 +1031,9 @@ def pq_assign(
         term = F.col(f"_d{j}")
         err = term if err is None else err + term
     return assigned.select(
-        id_col,
+        "vec_id",
         *[F.col(f"_c{j}").cast("long").alias(f"code_{j}") for j in range(m)],
-        F.round(err, ndp).alias("qerr"),
+        F.round(err, 6).alias("qerr"),
     )
 
 
@@ -1088,10 +1045,6 @@ def pq_adc_topk(
     k: int = 8,
     iters: int = 2,
     topk: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    ndp: int = 6,
 ) -> DataFrame:
     """PQ asymmetric-distance top-k (the search half of IVF-PQ, Jégou
     et al. 2011): corpus vectors are represented ONLY by their ``m``
@@ -1121,16 +1074,14 @@ def pq_adc_topk(
     convention shared with lsh/ivf_topk); a large query batch would
     broadcast-join a table of tables instead.
     """
-    books = _train_pq_codebooks(
-        embeddings, m, k, iters, id_col=id_col, vec_col=vec_col, ndp=ndp
-    )
+    books = _train_pq_codebooks(embeddings, m, k, iters)
     dsub = len(books[0][0])
-    staged = _pq_staged(embeddings, m, dsub, id_col, vec_col)
+    staged = _pq_staged(embeddings, m, dsub, "vec_id", "embedding")
     darr = staged.select(
-        F.col(id_col), *_pq_dist_arrays(books, m, ndp)
+        F.col("vec_id"), *_pq_dist_arrays(books, m, 6)
     )
     codes = darr.select(
-        F.col(id_col),
+        F.col("vec_id"),
         *[_pq_code_col(j).alias(f"code_{j}") for j in range(m)],
     )
 
@@ -1140,7 +1091,7 @@ def pq_adc_topk(
     # lsh/ivf broadcast-join formulation is the right tool past this)
     max_queries = 256
     q_rows = queries.select(
-        F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qv")
+        F.col("query_id").alias("_qid"), F.col("embedding").alias("_qv")
     ).limit(max_queries + 1).collect()
     if not q_rows:
         raise ValueError("empty query input")
@@ -1175,8 +1126,8 @@ def pq_adc_topk(
         per_query.append(
             codes.select(
                 F.lit(qr["_qid"]).alias("query_id"),
-                F.col(id_col).alias("neighbor_id"),
-                F.round(adc, ndp).alias("adc_dist"),
+                F.col("vec_id").alias("neighbor_id"),
+                F.round(adc, 6).alias("adc_dist"),
             )
         )
     scored = per_query[0]

@@ -35,12 +35,10 @@ __all__ = [
 EOW = "</w>"
 
 
-def word_counts(
-    docs: DataFrame, *, text_col: str = "text"
-) -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """``(word, n)`` for lowercase whitespace-delimited words — the
     distinct-word table every BPE pass runs over."""
-    toks = word_tokens(F.col(text_col))
+    toks = word_tokens(F.col("text"))
     return (
         docs.select(F.explode(toks).alias("word"))
         .groupBy("word")
@@ -79,7 +77,6 @@ def _pair_counts(words: DataFrame) -> DataFrame:
 def bpe_pair_counts(
     docs: DataFrame,
     *,
-    text_col: str = "text",
     min_count: int = 2,
     topk: int = 50,
 ) -> DataFrame:
@@ -94,7 +91,7 @@ def bpe_pair_counts(
     into the pair table.  The top-k is ``TakeOrderedAndProject``; no
     global sort, no join anywhere.
     """
-    words = word_counts(docs, text_col=text_col).select(
+    words = word_counts(docs).select(
         _initial_symbols(F.col("word")).alias("syms"), "n"
     )
     return (
@@ -122,13 +119,7 @@ def _merge_pair(syms: Column, a: str, b: str) -> Column:
     )
 
 
-def bpe_train(
-    docs: DataFrame,
-    *,
-    n_merges: int = 10,
-    text_col: str = "text",
-    checkpoint_every: int = 4,
-) -> list[tuple[str, str, int]]:
+def bpe_train(docs: DataFrame, *, n_merges: int = 10) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges from the corpus; returns the merge
     list ``[(a, b, pair_count), ...]`` in learned order — the training
     artifact a tokenizer ships (merges.txt).
@@ -143,15 +134,14 @@ def bpe_train(
     1-row driver collect (k-means-style, the precedent of
     :func:`~.graph.pagerank`'s dangling-mass term), and a narrow
     per-row fold rewriting symbol arrays.  Lineage is truncated with
-    ``localCheckpoint`` every ``checkpoint_every`` merges — the
-    iterative-plan precedent of ``dedup_clusters`` — so the plan stays
-    flat at merge 1000.  Nothing re-shuffles: the word table keeps its
+    ``localCheckpoint`` every 4 merges — the iterative-plan precedent of
+    ``dedup_clusters`` — so the plan stays flat at merge 1000.  Nothing re-shuffles: the word table keeps its
     initial partitioning throughout.
     """
     if n_merges < 0:
         raise ValueError(f"n_merges must be >= 0, got {n_merges}")
     words = (
-        word_counts(docs, text_col=text_col)
+        word_counts(docs)
         .select(_initial_symbols(F.col("word")).alias("syms"), "n")
         .localCheckpoint()
     )
@@ -169,19 +159,12 @@ def bpe_train(
         a, b, cnt = top[0]["a"], top[0]["b"], top[0]["pair_count"]
         merges.append((a, b, cnt))
         words = words.select(_merge_pair(F.col("syms"), a, b).alias("syms"), "n")
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % 4 == 0:
             words = words.localCheckpoint()
     return merges
 
 
-def bpe_encode_counts(
-    docs: DataFrame,
-    merges: list[tuple],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    checkpoint_every: int = 32,
-) -> DataFrame:
+def bpe_encode_counts(docs: DataFrame, merges: list[tuple]) -> DataFrame:
     """Apply a TRAINED merge list (merges.txt, the artifact
     :func:`bpe_train` produces) to every document and return
     ``(doc_id, n_tokens_bpe)`` — the tokenize-with-your-tokenizer step
@@ -195,16 +178,16 @@ def bpe_encode_counts(
     own projection boundary so whole-stage codegen depth stays flat
     (non-cheap aliases are not re-inlined by CollapseProject; see the
     :func:`~.dedup.with_shingles` perf note), with ``localCheckpoint``
-    every ``checkpoint_every`` merges to keep the plan bounded for
-    tokenizer-sized merge lists.  Per-doc totals come from one
+    every 32 merges to keep the plan bounded for tokenizer-sized merge
+    lists.  Per-doc totals come from one
     equi-join of the occurrence table with the per-word counts and a
     map-side-combined sum — the corpus text itself never re-shuffles.
 
     Documents with no words produce no output row (explode semantics),
     matching the SQL oracle's inner join.
     """
-    toks = word_tokens(F.col(text_col))
-    words = docs.select(F.col(id_col), F.explode(toks).alias("word"))
+    toks = word_tokens(F.col("text"))
+    words = docs.select(F.col("doc_id"), F.explode(toks).alias("word"))
     enc = (
         words.select("word")
         .distinct()
@@ -213,11 +196,11 @@ def bpe_encode_counts(
     for i, m in enumerate(merges):
         a, b = m[0], m[1]
         enc = enc.select("word", _merge_pair(F.col("syms"), a, b).alias("syms"))
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % 32 == 0:
             enc = enc.localCheckpoint()
     counts = enc.select("word", F.size("syms").alias("wtoks"))
     return (
         words.join(counts, "word")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("wtoks").alias("n_tokens_bpe"))
     )

@@ -73,19 +73,18 @@ class PipelineConfig:
 
 
 def discover_days(pages: DataFrame, ts_col: str = "warc_ts") -> list[str]:
-    """Work-list discovery WITHOUT a data scan of the input.
+    """Work-list discovery from one column-pruned pass over ``ts_col``.
 
     On an Iceberg/partitioned source the day list is partition metadata
     and callers should pass it to :func:`run_reduce_stage` directly via
     ``days=``.  This fallback derives the calendar-day range from
     ``min/max(ts_col)`` — a single aggregate over one column with no
-    grouping, which parquet answers from footer statistics when
-    ``spark.sql.parquet.aggregatePushDown`` is on (PushedAggregation in
-    the scan; zero data pages read) and otherwise costs one
-    column-pruned pass over the timestamp column only.  Either way the
-    full-width input is never scanned before the real work starts (the
-    round-1 plan ran groupBy(day).count() over the whole input — 2x the
-    most expensive scan at 100 TB).
+    grouping.  It reads every row of that one column: the session reads
+    parquet through the V1 source, and parquet aggregate pushdown
+    (footer statistics instead of data pages) applies only to the DSv2
+    reader.  The full-width input is still never scanned before the
+    real work starts (the round-1 plan ran groupBy(day).count() over the
+    whole input — 2x the most expensive scan at 100 TB).
 
     Days with no rows inside the range are harmless: they produce no
     output partitions and commit rows_in=0 lineage.
@@ -191,10 +190,11 @@ def run_reduce_stage(
 
     ``days``: explicit day work list (partition metadata on an Iceberg /
     day-partitioned source — the at-scale path).  When None it is derived
-    from footer-stat min/max via :func:`discover_days`; either way the
-    full-width pages input is scanned exactly once, by the parse pass,
-    and the per-day rows_in lineage metric rides that pass via
-    ``observe()`` instead of a pre-scan.
+    from min/max over ``warc_ts`` via :func:`discover_days`, one
+    column-pruned pass over that column.  Either way the full-width pages
+    input is scanned exactly once, by the parse pass, and the per-day
+    rows_in lineage metric rides that pass via ``observe()`` instead of
+    a pre-scan.
     """
     day = cfg.day_col
     all_days = discover_days(pages, "warc_ts") if days is None else sorted(days)

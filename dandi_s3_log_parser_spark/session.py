@@ -44,10 +44,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # work-list discovery (plans.pipeline.discover_days) is a bare
-        # min/max over the timestamp column: with aggregate pushdown the
-        # scan answers it from parquet footer stats (zero data pages);
-        # TIMESTAMP_MICROS (not INT96) is required for usable ts stats
+        # aggregate pushdown applies only to the DSv2 parquet reader;
+        # this session reads parquet through the V1 source, so the
+        # min/max of plans.pipeline.discover_days is one column-pruned
+        # pass over the timestamp column, not a footer-stats answer
         .config("spark.sql.parquet.aggregatePushDown", "true")
         # InferFiltersFromGenerate adds `size(e)>0 AND isnotnull(e)`
         # above every explode; predicate pushdown then substitutes the

@@ -31,20 +31,18 @@ from pyspark.sql import functions as F
 def stream_windowed_totals(
     stream: DataFrame,
     *,
-    ts_col: str = "ts",
     key_col: str | None = None,
     value_col: str | None = None,
     window: str = "1 hour",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Tumbling-window totals over an event-time stream.
 
     Returns ``(window_start, [key], n [, value_sum])`` — append-mode
-    compatible (the watermark bounds state and admits late data up to
-    ``watermark``).
+    compatible (the 2-hour watermark bounds state and admits late data up
+    to that age).
     """
-    wm = stream.withWatermark(ts_col, watermark)
-    keys = [F.window(ts_col, window).alias("w")]
+    wm = stream.withWatermark("ts", "2 hours")
+    keys = [F.window("ts", window).alias("w")]
     if key_col:
         keys.append(F.col(key_col))
     aggs = [F.count(F.lit(1)).alias("n")]
@@ -63,19 +61,17 @@ def stream_windowed_totals(
 def stream_session_stats(
     stream: DataFrame,
     *,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
     gap: str = "30 minutes",
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Gap-based session windows on a stream (late rows merge into
     their session until the watermark closes it)."""
-    wm = stream.withWatermark(ts_col, watermark)
+    wm = stream.withWatermark("ts", watermark)
     return (
-        wm.groupBy(F.session_window(ts_col, gap).alias("sw"), F.col(key_col))
+        wm.groupBy(F.session_window("ts", gap).alias("sw"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            F.col(key_col),
+            F.col("user_id"),
             F.col("sw.start").alias("session_start"),
             F.col("sw.end").alias("session_end"),
             "n_events",

@@ -35,15 +35,7 @@ from pyspark.sql.types import (
 )
 
 
-def stream_anomaly(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    min_history: int = 3,
-    z_threshold: float = 3.0,
-    ndp: int = 4,
-) -> DataFrame:
+def stream_anomaly(events: DataFrame, *, min_history: int = 3) -> DataFrame:
     """Running z-score per key over a streaming DataFrame (module doc).
 
     Output schema: input columns + ``z`` (double, NULL while ungated)
@@ -71,12 +63,12 @@ def stream_anomaly(
 
         n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
         for pdf in pdfs:
-            x = pdf[value_col].astype("float64")
+            x = pdf["value"].astype("float64")
             var = m2 / n if n > 0 else 0.0
             std = float(np.sqrt(var))
             if n >= min_history and std > 0.0:
-                z = ((x - mean) / std).round(ndp)
-                flag = z.abs() > z_threshold
+                z = ((x - mean) / std).round(4)
+                flag = z.abs() > 3.0
             else:
                 z = pd.Series([np.nan] * len(x), index=x.index)
                 flag = pd.Series([False] * len(x), index=x.index)
@@ -96,6 +88,6 @@ def stream_anomaly(
                 n = tot
         state.update((n, mean, m2))
 
-    return events.groupBy(key_col).applyInPandasWithState(
+    return events.groupBy("event_type").applyInPandasWithState(
         fn, out_schema, state_schema, "append", "NoTimeout"
     )

@@ -31,24 +31,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 
-def stream_cdc_latest(
-    changes: DataFrame,
-    *,
-    key_col: str = "id",
-    seq_col: str = "seq",
-    op_col: str = "op",
-) -> DataFrame:
+def stream_cdc_latest(changes: DataFrame) -> DataFrame:
     """Latest-wins changelog on a streaming change feed (module doc).
 
     Returns the transformed stream; the caller attaches the sink and
     checkpoint.  Exactly-once with a checkpoint: replayed microbatches
     re-derive the same state and re-emit the same deltas.
     """
-    if op_col not in changes.columns or seq_col not in changes.columns:
-        raise ValueError(f"changes must carry '{seq_col}' and '{op_col}'")
+    if "op" not in changes.columns or "seq" not in changes.columns:
+        raise ValueError("changes must carry 'seq' and 'op'")
     out_schema = changes.schema
     cols = [f.name for f in changes.schema.fields]
-    state_fields = [f for f in changes.schema.fields if f.name != key_col]
+    state_fields = [f for f in changes.schema.fields if f.name != "id"]
     state_names = [f.name for f in state_fields]
     state_schema = StructType(state_fields)
 
@@ -60,14 +54,14 @@ def stream_cdc_latest(
         for pdf in pdfs:
             if not len(pdf):
                 continue
-            row = pdf.loc[pdf[seq_col].idxmax()]
-            if best is None or row[seq_col] > best[seq_col]:
+            row = pdf.loc[pdf["seq"].idxmax()]
+            if best is None or row["seq"] > best["seq"]:
                 best = {c: row[c] for c in state_names}
                 changed = True
         if changed:
             state.update(tuple(best[c] for c in state_names))
-            yield pd.DataFrame([{key_col: key[0], **best}])[cols]
+            yield pd.DataFrame([{"id": key[0], **best}])[cols]
 
-    return changes.groupBy(key_col).applyInPandasWithState(
+    return changes.groupBy("id").applyInPandasWithState(
         fn, out_schema, state_schema, "append", "NoTimeout"
     )

@@ -27,7 +27,7 @@ known duplicate after the restart.
 
 Scale notes: the filter/scoring stage is stateless and narrow (no
 shuffle); the only exchange is the dedup's groupBy on ``source`` —
-state is bounded by ``max_state_per_key`` digests per source and fails
+state is bounded by 1,000,000 digests per source and fails
 open past the cap (see ``stream_dedup`` module docs).
 """
 
@@ -46,7 +46,6 @@ def curate_stream(
     *,
     min_score: float = 0.2,
     langs: tuple[str, ...] = ("en",),
-    max_state_per_key: int = 1_000_000,
 ) -> DataFrame:
     """Transform a streaming documents DataFrame into the kept set.
 
@@ -69,12 +68,7 @@ def curate_stream(
         F.coalesce(F.col("lang_detected").isin(*langs), F.lit(False))
         & F.coalesce(F.col("score") >= F.lit(min_score), F.lit(False))
     )
-    return stream_first_seen(
-        kept,
-        key_col="source",
-        dedup_col="text",
-        max_state_per_key=max_state_per_key,
-    )
+    return stream_first_seen(kept, key_col="source", dedup_col="text")
 
 
 def stream_curate(

@@ -15,6 +15,7 @@ from dandi_s3_log_parser_spark.operators.similarity import (
     _centroid_dist_arrow,
     _pair_dot_arrow,
     dot,
+    embedding_near_dup_pairs,
 )
 
 
@@ -114,3 +115,32 @@ def test_centroid_dists_match_sql_form(spark):
             assert got[i] == [None, None]
         else:
             assert got[i] == [r["c0"], r["c1"]], (got[i], r)
+
+
+def test_pair_dot_null_element_is_nan_and_near_dup_pairs_drop_it(spark):
+    """A NULL element inside a dim-length vector reaches numpy as NaN:
+    the kernel returns NaN where the fold returns NULL.  The vector's
+    fold norm is NULL, so every cosine it takes part in is NULL and
+    ``embedding_near_dup_pairs`` drops those pairs."""
+    df = spark.createDataFrame(
+        [(1, [1.0, None, 3.0], [4.0, 5.0, 6.0])],
+        "id long, va array<double>, vb array<double>",
+    )
+    row = df.select(
+        _pair_dot_arrow(3)("va", "vb").alias("k"),
+        dot(F.col("va"), F.col("vb")).alias("f"),
+    ).first()
+    assert row["k"] != row["k"]  # NaN
+    assert row["f"] is None
+
+    emb = spark.createDataFrame(
+        [
+            (1, [1.0, None, 0.0]),
+            (2, [1.0, None, 0.0]),  # same vector as 1: cosine would be 1
+            (3, [0.0, 1.0, 0.0]),
+            (4, [0.0, 1.0, 0.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    pairs = embedding_near_dup_pairs(emb, threshold=0.5).collect()
+    assert [(r["id_a"], r["id_b"]) for r in pairs] == [(3, 4)]
