@@ -129,10 +129,14 @@ def _grouped_summaries(a: DataFrame, keys: list[str]) -> dict[str, DataFrame]:
     Three separate groupBys would scan the (persisted) fact three
     times and schedule three full agg jobs; GROUPING SETS computes all
     three groupings in a single pass — the combined result is
-    dimension-sized, so it is eagerly ``localCheckpoint``-ed and the
-    per-summary sinks become metadata-cheap filters over materialized
-    rows.  Cuts the map stage's summary cost (scan count AND fixed
-    job-scheduling floor) in half at any scale.
+    dimension-sized, so it is eagerly ``localCheckpoint``-ed and each
+    summary is a filter over materialized rows.
+
+    Each summary is sorted inside ONE partition: a dimension-sized
+    input gains nothing from a range exchange, and a global
+    ``orderBy`` would cost each sink three jobs (range sample, shuffle,
+    write).  ``coalesce(1).sortWithinPartitions`` writes one file
+    holding the module docstring's total order in one job.
     """
     combined = (
         a.groupingSets(
@@ -153,7 +157,8 @@ def _grouped_summaries(a: DataFrame, keys: list[str]) -> dict[str, DataFrame]:
         return (
             combined.filter(F.col("_gid") == gid)
             .select(*keys, dim, "bytes_sent")
-            .orderBy(*order)
+            .coalesce(1)
+            .sortWithinPartitions(*order)
         )
 
     return {

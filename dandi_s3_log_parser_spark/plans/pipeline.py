@@ -365,6 +365,7 @@ def run_map_stage(
     hash aggregation, all joins broadcast.
     """
     from pyspark import StorageLevel
+    from pyspark import inheritable_thread_target as inherit
     from pyspark.sql import Observation
 
     if cfg.dandiset_limit is not None:
@@ -405,18 +406,24 @@ def run_map_stage(
         # partition first computes it and the others wait, so the
         # persist is still computed once.  Serially each action pays
         # its own full schedule/commit latency, the serial floor that
-        # caps N->4N scaling efficiency.
+        # caps N->4N scaling efficiency.  Every callable is wrapped by
+        # `inherit` (inheritable_thread_target) so that pool threads
+        # carry the caller's job group and description: plain pool
+        # threads start with empty Spark local properties.  Its session
+        # form would also copy job tags, but it returns the session
+        # itself when PYSPARK_PIN_THREAD=false, so the callable form is
+        # used.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=3) as pool:
             f_mapped = pool.submit(
-                catalog.write,
+                inherit(catalog.write),
                 mapped,
                 "mapped_per_asset",
                 partition_by=("dandiset_id", "version_id"),
             )
-            f_ver = pool.submit(version_summaries, activity)
-            f_dand = pool.submit(dandiset_summaries, enriched, assets)
+            f_ver = pool.submit(inherit(version_summaries), activity)
+            f_dand = pool.submit(inherit(dandiset_summaries), enriched, assets)
             f_mapped.result()
             sinks = [
                 (f"version_summary_{name}", df)
@@ -426,10 +433,11 @@ def run_map_stage(
                 for name, df in f_dand.result().items()
             ]
 
-        # the six summary sinks write pre-aggregated checkpointed rows
-        # (metadata-cheap) — still submitted concurrently
+        # the six summary sinks each sort checkpointed, dimension-sized
+        # rows in one partition and write one file: one job per sink,
+        # still submitted concurrently
         with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
-            futures = [pool.submit(catalog.write, df, name) for name, df in sinks]
+            futures = [pool.submit(inherit(catalog.write), df, name) for name, df in sinks]
             for f in futures:
                 f.result()
 

@@ -44,11 +44,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # aggregate pushdown applies only to the DSv2 parquet reader;
-        # this session reads parquet through the V1 source, so the
-        # min/max of plans.pipeline.discover_days is one column-pruned
-        # pass over the timestamp column, not a footer-stats answer
-        .config("spark.sql.parquet.aggregatePushDown", "true")
         # InferFiltersFromGenerate adds `size(e)>0 AND isnotnull(e)`
         # above every explode; predicate pushdown then substitutes the
         # generator's WHOLE expression tree (tokenize/shingle chains
@@ -67,6 +62,16 @@ def get_spark(
         )
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
+        # codegen.cache.maxEntries: Spark's generated-code cache is an
+        # LRU keyed by source text.  One pipeline pass compiles about
+        # 150 distinct sources (143-151 Janino compiles per pass
+        # measured, 15-25 ms each); with the default of 100 entries no
+        # class survives to the next pass, so every warm pass would
+        # recompile the whole pipeline.  2000 entries hold a pass many
+        # times over: re-run batches and streaming micro-batches, which
+        # re-plan the same queries, compile nothing after their first
+        # run.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # ReservedCodeCacheSize: every query plan generates fresh
         # wholestage-codegen classes; a long session (the 70-query
         # bench runs ~200 plans) fills HotSpot's default 240 MB code

@@ -226,3 +226,70 @@ def test_lineage_metrics(spark, pipeline_run):
     red = lin[lin["stage"] == "reduce"]
     assert (red["rows_in"] > 0).all()
     assert (red["rows_out"] <= red["rows_in"]).all()
+
+
+def _compile_count(spark) -> int:
+    """Janino compiles so far in this JVM (Spark's codegen metric)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_second_run_compiles_no_code(spark, tmp_path):
+    """A re-run of the same pipeline reuses every generated class: the
+    session's codegen cache holds a whole pass (about 150 sources), so
+    the second run triggers no Janino compile."""
+    pages, dims = to_spark(spark, generate(N_PAGES, SEED))
+    compiled = []
+    for i in range(2):
+        catalog = Catalog(spark, tmp_path / f"warehouse{i}")
+        before = _compile_count(spark)
+        run_pipeline(spark, catalog, pages, dims, PipelineConfig(), f"run-codegen-{i}")
+        compiled.append(_compile_count(spark) - before)
+    assert compiled[1] == 0, compiled
+
+
+def test_pipeline_jobs_carry_callers_job_group(spark, tmp_path):
+    """Every job of a run, including the ones the map stage submits from
+    its thread pools, belongs to the job group the caller set."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    pages, dims = to_spark(spark, generate(N_PAGES, SEED))
+    catalog = Catalog(spark, tmp_path / "warehouse")
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("pipeline-job-group-test", "run_pipeline under a job group")
+    try:
+        run_pipeline(spark, catalog, pages, dims, PipelineConfig(), "run-job-group")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert tracker.getJobIdsForGroup("pipeline-job-group-test")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+SUMMARY_ORDER = {
+    # table: (key columns, sort column, descending)
+    "version_summary_by_day": (["dandiset_id", "version_id"], "date", False),
+    "version_summary_by_region": (["dandiset_id", "version_id"], "bytes_sent", True),
+    "version_summary_by_asset": (["dandiset_id", "version_id"], "bytes_sent", True),
+    "dandiset_summary_by_day": (["dandiset_id"], "date", False),
+    "dandiset_summary_by_region": (["dandiset_id"], "bytes_sent", True),
+    "dandiset_summary_by_asset": (["dandiset_id"], "bytes_sent", True),
+}
+
+
+@pytest.mark.parametrize("table", sorted(SUMMARY_ORDER))
+def test_summary_sinks_keep_reference_order(pipeline_run, table):
+    """Read in part-file order, each summary follows the reference's
+    order: by_day ascending date, by_region / by_asset descending bytes,
+    each within the keys."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _, catalog, _ = pipeline_run
+    keys, col, desc = SUMMARY_ORDER[table]
+    parts = sorted(Path(catalog.path(table)).glob("part-*"))
+    assert parts
+    rows = pa.concat_tables([pq.read_table(p) for p in parts]).to_pylist()
+    assert len(rows) > 1
+    got = [(*(r[k] for k in keys), -r[col] if desc else r[col]) for r in rows]
+    assert got == sorted(got)
