@@ -64,13 +64,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # codegen.cache.maxEntries: Spark's generated-code cache is an
         # LRU keyed by source text.  One pipeline pass compiles about
-        # 150 distinct sources (143-151 Janino compiles per pass
-        # measured, 15-25 ms each); with the default of 100 entries no
-        # class survives to the next pass, so every warm pass would
-        # recompile the whole pipeline.  2000 entries hold a pass many
-        # times over: re-run batches and streaming micro-batches, which
-        # re-plan the same queries, compile nothing after their first
-        # run.
+        # 150 distinct sources (141-152 Janino compiles per pass at 10k
+        # pages, about 2.3 s of compile time); the default of 100 entries
+        # keeps none of them for the next pass.  2000 entries hold a
+        # pass many times over, so a session that runs the same plans
+        # again (a second pipeline run, repeated corpus queries)
+        # compiles almost nothing the second time.  A session that runs
+        # the pipeline once, as each CLI invocation does, compiles the
+        # same ~140 sources either way and gains nothing measurable.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         # ReservedCodeCacheSize: every query plan generates fresh
         # wholestage-codegen classes; a long session (the 70-query

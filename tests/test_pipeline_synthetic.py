@@ -234,10 +234,16 @@ def _compile_count(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def test_second_run_compiles_no_code(spark, tmp_path):
-    """A re-run of the same pipeline reuses every generated class: the
-    session's codegen cache holds a whole pass (about 150 sources), so
-    the second run triggers no Janino compile."""
+def test_second_run_reuses_compiled_code(spark, tmp_path):
+    """A re-run of the same pipeline reuses its generated classes: the
+    session's codegen cache holds a whole pass (about 140 sources), so
+    the second run compiles almost nothing.
+
+    Not exactly nothing: about 1 run in 10 builds a physical plan that
+    differs from the earlier runs' (other codegen stage ids, another
+    broadcast-join stage), and such a variant compiles 7-11 new sources
+    the first time it appears.  A cache smaller than a pass recompiles
+    all of them on every run (about 140 here)."""
     pages, dims = to_spark(spark, generate(N_PAGES, SEED))
     compiled = []
     for i in range(2):
@@ -245,7 +251,7 @@ def test_second_run_compiles_no_code(spark, tmp_path):
         before = _compile_count(spark)
         run_pipeline(spark, catalog, pages, dims, PipelineConfig(), f"run-codegen-{i}")
         compiled.append(_compile_count(spark) - before)
-    assert compiled[1] == 0, compiled
+    assert compiled[1] <= 25, compiled
 
 
 def test_pipeline_jobs_carry_callers_job_group(spark, tmp_path):
