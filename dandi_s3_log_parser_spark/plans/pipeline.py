@@ -346,6 +346,25 @@ def run_bin_stage(
     return days
 
 
+def thread_inheritor(spark: SparkSession):
+    """A wrapper for pool-thread callables that copies the calling
+    thread's Spark local properties (job group, description) and the
+    session's job tags into the thread that runs them.
+
+    In pinned-thread mode (the default; each Python thread has its own
+    JVM thread) plain pool threads start with neither, so this is the
+    session form of ``inheritable_thread_target``: its callable form
+    drops the tags and warns about it.  Unpinned, Python threads share
+    JVM threads and there is nothing to copy, so the wrapper is the
+    identity (the session form would return the session itself)."""
+    from py4j.clientserver import ClientServer
+    from pyspark import SparkContext, inheritable_thread_target
+
+    if isinstance(SparkContext._gateway, ClientServer):
+        return inheritable_thread_target(spark)
+    return lambda f: f
+
+
 def run_map_stage(
     spark: SparkSession,
     catalog: Catalog,
@@ -365,7 +384,6 @@ def run_map_stage(
     hash aggregation, all joins broadcast.
     """
     from pyspark import StorageLevel
-    from pyspark import inheritable_thread_target as inherit
     from pyspark.sql import Observation
 
     if cfg.dandiset_limit is not None:
@@ -407,13 +425,11 @@ def run_map_stage(
         # persist is still computed once.  Serially each action pays
         # its own full schedule/commit latency, the serial floor that
         # caps N->4N scaling efficiency.  Every callable is wrapped by
-        # `inherit` (inheritable_thread_target) so that pool threads
-        # carry the caller's job group and description: plain pool
-        # threads start with empty Spark local properties.  Its session
-        # form would also copy job tags, but it returns the session
-        # itself when PYSPARK_PIN_THREAD=false, so the callable form is
-        # used.
+        # `inherit` so that pool threads carry the caller's job group,
+        # description and job tags.
         from concurrent.futures import ThreadPoolExecutor
+
+        inherit = thread_inheritor(spark)
 
         with ThreadPoolExecutor(max_workers=3) as pool:
             f_mapped = pool.submit(

@@ -16,7 +16,11 @@ from dandi_s3_log_parser_spark import datagen
 from dandi_s3_log_parser_spark.config import TEST_IP_HASH_SALT
 from dandi_s3_log_parser_spark.datagen import generate, sha1_ip_hash, to_spark
 from dandi_s3_log_parser_spark.functions.parsing import parse_line_to_fields
-from dandi_s3_log_parser_spark.plans.pipeline import PipelineConfig, run_pipeline
+from dandi_s3_log_parser_spark.plans.pipeline import (
+    PipelineConfig,
+    run_pipeline,
+    thread_inheritor,
+)
 from dandi_s3_log_parser_spark.plans.lineage import LineageLog
 from dandi_s3_log_parser_spark.sources.tables import Catalog
 
@@ -270,6 +274,33 @@ def test_pipeline_jobs_carry_callers_job_group(spark, tmp_path):
             sc.setLocalProperty(key, None)
     assert tracker.getJobIdsForGroup("pipeline-job-group-test")
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+def test_pool_threads_inherit_job_tags(spark):
+    """A job tag the caller added before the wrap is on the jobs a pool
+    thread submits (pinned-thread mode, the default)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    spark.addTag("pool-thread-tag-test")
+    try:
+        wrapped = thread_inheritor(spark)(spark.getTags)
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            assert "pool-thread-tag-test" in pool.submit(wrapped).result()
+    finally:
+        spark.removeTag("pool-thread-tag-test")
+
+
+def test_pipeline_run_warns_nothing_about_tags(spark, tmp_path):
+    """The map stage's pool threads get the session's tags, so PySpark
+    has no "Tags will not be inherited" warning to give."""
+    import warnings
+
+    pages, dims = to_spark(spark, generate(N_PAGES, SEED))
+    catalog = Catalog(spark, tmp_path / "warehouse")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        run_pipeline(spark, catalog, pages, dims, PipelineConfig(), "run-no-warning")
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
 
 
 SUMMARY_ORDER = {

@@ -1,0 +1,117 @@
+"""The session's local filesystem: permissions are set inside the JVM.
+
+``session.get_spark`` swaps in ``jvm/NioLocalFileSystem`` (a stock
+``LocalFileSystem`` whose ``setPermission`` is a ``java.nio`` call, not
+a forked ``chmod``) when it launches the driver JVM itself.  These tests
+pin that the committed jar is built from the committed source, that the
+swap happens only when the jar can be on the classpath, that a write
+leaves the modes the stock filesystem would, and that a pipeline run
+forks no process.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import os
+import zipfile
+from pathlib import Path
+
+from dandi_s3_log_parser_spark.datagen import generate, to_spark
+from dandi_s3_log_parser_spark.plans.pipeline import PipelineConfig, run_pipeline
+from dandi_s3_log_parser_spark.session import NIO_FS_CLASS, NIO_FS_JAR, local_fs_conf
+from dandi_s3_log_parser_spark.sources.tables import Catalog
+
+CLASSPATH_KEYS = ("spark.driver.extraClassPath", "spark.executor.extraClassPath")
+
+
+def _manifest(jar: Path) -> dict[str, str]:
+    with zipfile.ZipFile(jar) as z:
+        text = z.read("META-INF/MANIFEST.MF").decode()
+    # manifest lines wrap at 72 bytes; a continuation starts with a space
+    attrs = {}
+    for line in text.replace("\r\n", "\n").replace("\n ", "").splitlines():
+        if ": " in line:
+            k, v = line.split(": ", 1)
+            attrs[k] = v
+    return attrs
+
+
+def test_jar_is_built_from_committed_source():
+    source = NIO_FS_JAR.with_name("NioLocalFileSystem.java")
+    assert _manifest(NIO_FS_JAR)["Source-SHA-256"] == hashlib.sha256(
+        source.read_bytes()
+    ).hexdigest()
+    with zipfile.ZipFile(NIO_FS_JAR) as z:
+        assert NIO_FS_CLASS.replace(".", "/") + ".class" in z.namelist()
+
+
+def test_local_fs_conf_only_when_launching_the_jvm(tmp_path):
+    conf = local_fs_conf(False, {}, NIO_FS_JAR, {})
+    assert conf["spark.hadoop.fs.file.impl"] == NIO_FS_CLASS
+    for key in CLASSPATH_KEYS:
+        assert conf[key] == str(NIO_FS_JAR)
+    # spark-submit launched the JVM, or an earlier session did
+    assert local_fs_conf(False, {"PYSPARK_GATEWAY_PORT": "12345"}, NIO_FS_JAR, {}) == {}
+    assert local_fs_conf(True, {}, NIO_FS_JAR, {}) == {}
+    assert local_fs_conf(False, {}, tmp_path / "absent.jar", {}) == {}
+
+
+def test_local_fs_conf_keeps_callers_classpath():
+    extra = {key: f"other-{i}.jar" for i, key in enumerate(CLASSPATH_KEYS)}
+    conf = local_fs_conf(False, {}, NIO_FS_JAR, extra)
+    for key in CLASSPATH_KEYS:
+        assert conf[key] == os.pathsep.join((str(NIO_FS_JAR), extra[key]))
+
+
+def test_partitioned_overwrite_keeps_stock_modes(spark, tmp_path):
+    """Every directory, data file and ``.crc`` sidecar of a dynamic
+    partition overwrite has the stock filesystem's mode: Hadoop's dir /
+    file default with the session umask applied."""
+    jvm = spark._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    local = jvm.org.apache.hadoop.fs.FileSystem.getLocal(hconf)
+    assert local.getClass().getName() == NIO_FS_CLASS
+
+    perm = jvm.org.apache.hadoop.fs.permission.FsPermission
+    umask = perm.getUMask(hconf)
+    want_dir = perm.getDirDefault().applyUMask(umask).toShort()
+    want_file = perm.getFileDefault().applyUMask(umask).toShort()
+
+    catalog = Catalog(spark, tmp_path / "warehouse")
+    df = spark.range(40).selectExpr("id", "id % 4 AS part")
+    catalog.write(df, "t", partition_by=("part",))
+    catalog.write(df.where("part < 2"), "t", partition_by=("part",))
+
+    kinds = {"dir": 0, "data": 0, "crc": 0}
+    for root, dirs, files in os.walk(catalog.path("t")):
+        for name in dirs:
+            assert os.stat(os.path.join(root, name)).st_mode & 0o7777 == want_dir, name
+            kinds["dir"] += 1
+        for name in files:
+            assert os.stat(os.path.join(root, name)).st_mode & 0o7777 == want_file, name
+            kinds["crc" if name.endswith(".crc") else "data"] += 1
+    assert os.stat(catalog.path("t")).st_mode & 0o7777 == want_dir
+    assert kinds["dir"] == 4 and kinds["data"] >= 5 and kinds["crc"] > 0, kinds
+
+
+def _reaped_cpu_ticks(pid: int) -> int:
+    """cutime + cstime (fields 16-17 of /proc/<pid>/stat): the CPU of
+    every child the process has waited for."""
+    with open(f"/proc/{pid}/stat") as f:
+        raw = f.read()
+    fields = raw[raw.rindex(")") + 2 :].split()  # fields 3.. after comm
+    return int(fields[13]) + int(fields[14])
+
+
+def test_pipeline_run_forks_no_process(spark, tmp_path):
+    """Without libhadoop, the stock local filesystem forks a ``chmod``
+    for every file, ``.crc`` and directory a write creates (40-60 ticks
+    of reaped-child CPU for this run); a run now reaps none."""
+    from pyspark import SparkContext
+
+    pid = SparkContext._gateway.proc.pid
+    pages, dims = to_spark(spark, generate(1500, 7))
+    catalog = Catalog(spark, tmp_path / "warehouse")
+    before = _reaped_cpu_ticks(pid)
+    run_pipeline(spark, catalog, pages, dims, PipelineConfig(), "run-no-fork")
+    assert _reaped_cpu_ticks(pid) == before
