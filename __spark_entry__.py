@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from dandi_s3_log_parser_spark.functions.hashing import md5_prefix  # noqa: E402
 from dandi_s3_log_parser_spark.functions.text import (  # noqa: E402
     DE_STOPWORDS,
     EN_STOPWORDS,
@@ -1573,8 +1574,7 @@ def q_encode_tokens(spark, sf):
             # % 999999 + 1 (same mapping as cli.py --encode-vocab): id 0
             # stays reserved for OOV so a real token can never collide
             # with <unk> (round-4 ADVICE)
-            F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10)
-            .cast("long") % 999999 + 1
+            md5_prefix(F.col("w"), 8).cast("long") % 999999 + 1
         ).alias("token_id"),
     )
     out = encode_tokens(docs, vocab, oov_id=0)
@@ -3846,7 +3846,7 @@ def q_pii_redact(spark, sf):
             "doc_id",
             pii_email_count(planted).cast("long").alias("email_count"),
             pii_phone_count(planted).cast("long").alias("phone_count"),
-            F.conv(F.substring(F.md5(redacted), 1, 4), 16, 10)
+            md5_prefix(redacted, 4)
             .cast("int")
             .alias("redacted_h16"),
         )

@@ -6,13 +6,15 @@ pipeline on a deterministic synthetic pages table (the BASELINE.json
 north-star metric, reported as docs/sec), and (b) per-query seconds for
 the headline operator queries on $SPARK_GRAFT_SF_DIR.
 
-Protocol (round 4): min-of-K trials per measurement with per-trial
-executor-CPU seconds from the REST status API.  This box carries a
-documented 5-15-core external background load, so a single trial
-cannot distinguish a regression from noise: wall clock inflates under
-load, executor CPU does not (±JIT) — `queries` reports the min trial,
-`trials`/`cpu_s` report every trial so a drift can be adjudicated from
-the recorded data instead of re-run folklore.
+Protocol: min-of-K trials per measurement.  Each trial is a span of
+perfbench's tracer (``perfbench/tracing.py``): wall time, plus the
+JIT-free CPU of the process tree.  ``cpu_s`` is each trial's executor
+CPU, read from Spark's own event log (``EventLoggingListener``,
+attached to the session for the whole run): the task CPU of the jobs
+submitted while the trial ran.  No Spark UI is needed.  External load
+on a shared box inflates wall clock, not executor CPU (±JIT), so
+`queries` reports the min trial and `trials`/`cpu_s` report every trial:
+a drift can be adjudicated from the recorded data instead of a re-run.
 
 Env:
   SPARK_GRAFT_SF_DIR   default /root/testdata/sf0.1
@@ -20,23 +22,60 @@ Env:
   BENCH_PAGES          synthetic pages row count (default 200000)
   BENCH_TRIALS         trials per query / steady pipeline pass (default 3)
 
-Scaling evidence (N vs 4N parallelism) lives in bench_scaling.py and
-BENCH.md; this script is the driver-facing single-line benchmark.
+Scaling evidence (N vs 4N parallelism) lives in bench_scaling.py; this
+script is the driver-facing single-line benchmark.  bench_extra.py and
+bench_scaling.py measure through the same helpers (`measurement`,
+`time_leaf`, `time_pipeline`).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import sys
+import tempfile
 import time
+from contextlib import contextmanager
 from pathlib import Path
-
-sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 REPO = Path(__file__).resolve().parent
 WORK = REPO / "_work"
+sys.path.insert(0, str(REPO))
+sys.path.append(str(REPO / "perfbench"))
+
+from tracing import EventLog, SparkEventLog, Tracer  # noqa: E402
+
+
+def bench_session(app_name: str, cpus: int, **kw):
+    """``get_spark`` with one shuffle partition per core and JIT
+    compiler threads that never exit, which keeps the spans' JIT split
+    exact (as ``perfbench/run.py`` starts its JVM)."""
+    from dandi_s3_log_parser_spark.session import get_spark
+
+    os.environ["JAVA_TOOL_OPTIONS"] = "-XX:-UseDynamicNumberOfCompilerThreads"
+    return get_spark(app_name, cpus=cpus, shuffle_partitions=cpus, **kw)
+
+
+@contextmanager
+def measurement(spark):
+    """A tracer whose spans are on for the body, under one Spark event
+    log.  On exit every span also carries ``executor_cpu_s``: the task
+    CPU of the jobs submitted while it was open (``EventLog.window``)."""
+    tracer = Tracer()
+    with tempfile.TemporaryDirectory(prefix="bench_eventlog_") as tmp:
+        log = SparkEventLog(spark, Path(tmp))
+        try:
+            with log.tracing(tracer):
+                yield tracer
+        finally:
+            path = log.close()
+        events = EventLog(path)
+    for s in tracer.spans:
+        s["executor_cpu_s"] = round(
+            events.window(s["start"], s["end"])["executor_cpu_s"], 3
+        )
 
 
 def _ensure_bench_pages(spark, n_pages: int, seed: int = 42):
@@ -75,35 +114,6 @@ def _ensure_bench_pages(spark, n_pages: int, seed: int = 42):
     return spark.read.parquet(str(path)), dims
 
 
-def _executor_totals(spark) -> tuple[float, float]:
-    """(executor CPU s, executor run s) summed over completed stages (REST
-    status API).  Requires spark.ui.enabled=true and a raised
-    spark.ui.retainedStages (stage eviction shrinks the sums); returns
-    (-1.0, -1.0) if the API is unreachable so a UI hiccup never kills the
-    benchmark line."""
-    import urllib.request
-
-    try:
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete",
-            timeout=10,
-        ) as resp:
-            stages = json.load(resp)
-    except Exception:
-        return -1.0, -1.0
-    cpu_ns = sum(s.get("executorCpuTime", 0) for s in stages)
-    run_ms = sum(s.get("executorRunTime", 0) for s in stages)
-    return cpu_ns / 1e9, run_ms / 1e3
-
-
-def _delta(before: float, after: float) -> float:
-    """Growth of a cumulative executor sum; -1.0 when either read failed
-    or the sum shrank (stage eviction) — unusable, not zero-cost."""
-    return round(after - before, 3) if 0 <= before <= after else -1.0
-
-
 def _between_query_cleanup(spark) -> None:
     """Drop leftover cached/localCheckpoint blocks between bench queries.
 
@@ -127,33 +137,54 @@ def _between_query_cleanup(spark) -> None:
         pass
 
 
-def bench_pipeline(spark, n_pages: int, trials: int):
-    """(cold_sec, steady_secs[], steady_cpu_s[]): the first pass pays
-    JIT/codegen/Python-worker startup; the steady passes are the regime
-    a long-lived cluster runs in, measured `trials` times."""
-    import shutil
+def time_leaf(spark, tracer: Tracer, name: str, fn, sf_dir: str,
+              trials: int) -> list[dict]:
+    """Spans of `trials` runs of the registered query `fn` to the noop
+    sink.  Construction is timed with execution: iterative operators
+    (dedup_clusters' label propagation) do their real work while the
+    DataFrame is built.  Storage state is reset before every trial, not
+    only per query: each dedup_clusters trial leaked its localCheckpoint
+    blocks into the next (8.9 -> 11.1 s over three trials)."""
+    spans = []
+    for t in range(trials):
+        _between_query_cleanup(spark)
+        spark.sparkContext.setJobDescription(f"{name} trial {t}")
+        with tracer.span(name):
+            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        spark.sparkContext.setJobDescription(None)
+        spans.append(tracer.last(name))
+    return spans
 
-    from dandi_s3_log_parser_spark.plans.pipeline import PipelineConfig, run_pipeline
+
+def time_pipeline(spark, tracer: Tracer, pages, dims, warehouse: Path,
+                  trials: int, stage: str = "all") -> list[dict]:
+    """Spans of 1 + `trials` pipeline passes, each into a fresh
+    `warehouse`.  The first pass pays JIT, codegen and Python-worker
+    startup; the rest are the steady state a long-lived cluster runs
+    in.  ``stage="reduce"`` runs the reduce stage alone."""
+    from dandi_s3_log_parser_spark.plans.lineage import LineageLog
+    from dandi_s3_log_parser_spark.plans.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+        run_reduce_stage,
+    )
     from dandi_s3_log_parser_spark.sources.tables import Catalog
 
-    pages, dims = _ensure_bench_pages(spark, n_pages)
-
-    def one_pass(tag):
-        wh = WORK / "bench_warehouse"
-        shutil.rmtree(wh, ignore_errors=True)
-        catalog = Catalog(spark, wh)
-        cpu0, _ = _executor_totals(spark)
-        t0 = time.perf_counter()
-        run_pipeline(
-            spark, catalog, pages, dims, PipelineConfig(), f"bench-{tag}", resume=False
-        )
-        wall = time.perf_counter() - t0
-        cpu1, _ = _executor_totals(spark)
-        return round(wall, 3), _delta(cpu0, cpu1)
-
-    cold_sec, _ = one_pass("cold")
-    steady = [one_pass(f"steady{i}") for i in range(trials)]
-    return cold_sec, [s for s, _ in steady], [c for _, c in steady]
+    spans = []
+    for t in range(trials + 1):
+        shutil.rmtree(warehouse, ignore_errors=True)
+        catalog = Catalog(spark, warehouse)
+        lineage = LineageLog(catalog, "lineage")
+        with tracer.span("pass"):
+            if stage == "reduce":
+                run_reduce_stage(spark, catalog, pages, PipelineConfig(),
+                                 lineage, f"bench-{t}", resume=False)
+            else:
+                run_pipeline(spark, catalog, pages, dims, PipelineConfig(),
+                             f"bench-{t}", resume=False)
+        spans.append(tracer.last("pass"))
+    shutil.rmtree(warehouse, ignore_errors=True)
+    return spans
 
 
 HEADLINE_QUERIES = (
@@ -236,57 +267,27 @@ def main() -> None:
     n_pages = int(os.environ.get("BENCH_PAGES", "200000"))
     n_trials = int(os.environ.get("BENCH_TRIALS", "3"))
 
-    from dandi_s3_log_parser_spark.session import get_spark
-
     import __spark_entry__ as entrymod
 
-    spark = get_spark(
-        "bench", cpus=cpus, shuffle_partitions=cpus,
-        extra_conf={
-            "spark.ui.enabled": "true",
-            # the CPU accounting sums executorCpuTime over COMPLETED
-            # stages; at the default retainedStages=1000 the UI evicts
-            # old stages mid-benchmark and the cumulative sum shrinks,
-            # yielding negative per-trial deltas
-            "spark.ui.retainedStages": "100000",
-        },
-    )
-
-    queries: dict[str, float] = {}
-    trials: dict[str, list[float]] = {}
-    cpu_s: dict[str, list[float]] = {}
-
-    cold_sec, steady_secs, steady_cpu = bench_pipeline(spark, n_pages, n_trials)
-    queries["pipeline_e2e"] = cold_sec
-    queries["pipeline_e2e_steady"] = min(steady_secs)
-    trials["pipeline_e2e_steady"] = steady_secs
-    cpu_s["pipeline_e2e_steady"] = steady_cpu
-
+    spark = bench_session("bench", cpus)
     registry = entrymod.queries()
-    for name in HEADLINE_QUERIES:
-        fn = registry[name]
-        # time construction + execution: iterative operators (e.g.
-        # dedup_clusters' label-propagation loop) do their real work at
-        # construction, so timing only the final action would underreport
-        # them; for pure-lazy plans construction adds only milliseconds
-        ts, cs = [], []
-        for _ in range(n_trials):
-            # cleanup per TRIAL, not per query: round-4 driver trials for
-            # dedup_clusters got slower across its own trials
-            # (8.9 -> 11.1 s) — each trial leaks that trial's
-            # localCheckpoint blocks into the next, so only the first
-            # trial ran from the storage state an isolated run sees
-            _between_query_cleanup(spark)
-            cpu0, _ = _executor_totals(spark)
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            ts.append(round(time.perf_counter() - t0, 3))
-            cpu1, _ = _executor_totals(spark)
-            cs.append(_delta(cpu0, cpu1))
-        queries[name] = min(ts)
-        trials[name] = ts
-        cpu_s[name] = cs
+    pages, dims = _ensure_bench_pages(spark, n_pages)
+    with measurement(spark) as tracer:
+        passes = time_pipeline(spark, tracer, pages, dims,
+                               WORK / "bench_warehouse", n_trials)
+        spans = {"pipeline_e2e_steady": passes[1:]}
+        for name in HEADLINE_QUERIES:
+            spans[name] = time_leaf(spark, tracer, name, registry[name],
+                                    sf_dir, n_trials)
+
+    queries = {"pipeline_e2e": round(passes[0]["wall_s"], 3)}
+    trials, cpu_s, tree_cpu_s = {}, {}, {}
+    for key, ss in spans.items():
+        trials[key] = [round(s["wall_s"], 3) for s in ss]
+        cpu_s[key] = [s["executor_cpu_s"] for s in ss]
+        tree_cpu_s[key] = [round(s["cpu_s"], 3) for s in ss]
+        queries[key] = min(trials[key])
+    steady_secs = trials["pipeline_e2e_steady"]
 
     total = round(sum(queries.values()), 3)
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -303,15 +304,16 @@ def main() -> None:
         "n_trials": n_trials,
     }
 
-    # Full per-trial payload (trials + executor-CPU per trial) goes to a
-    # file: in round 4 it rode the stdout line and outgrew the driver's
-    # tail capture, making the official BENCH_r04.json unparseable
-    # ("parsed": null).  The LAST stdout line must stay compact.
+    # The full per-trial payload goes to a file: in round 4 it rode the
+    # stdout line and outgrew the driver's tail capture, making the
+    # official BENCH_r04.json unparseable ("parsed": null).  The LAST
+    # stdout line must stay compact.  `tree_cpu_s` is each trial's
+    # JIT-free CPU of the driver, JVM and Python workers together.
     bench_dir = REPO / "bench_results"
     bench_dir.mkdir(exist_ok=True)
     stamp = time.strftime("%Y%m%dT%H%M%S")
     full_path = bench_dir / f"bench_full_{stamp}_sf{sf}.json"
-    full_payload = dict(summary, trials=trials, cpu_s=cpu_s)
+    full_payload = dict(summary, trials=trials, cpu_s=cpu_s, tree_cpu_s=tree_cpu_s)
     full_path.write_text(json.dumps(full_payload, indent=1))
     (bench_dir / "bench_full_latest.json").write_text(json.dumps(full_payload, indent=1))
     summary["full_results"] = str(full_path.relative_to(REPO))

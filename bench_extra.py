@@ -13,6 +13,10 @@ Usage:
   --explain after    -> writes _work/plans/<query>_after.txt
   no query names     -> every registered query
 
+Prints one JSON line per timed query (min and per-trial wall seconds),
+then `CPU` (per-trial executor CPU, from Spark's event log) and `TOTAL`
+(min wall per query).
+
 The dumped plans mask what differs between two constructions of the same
 query (expression ids, lambda-variable suffixes, RDD ids and call sites,
 exchange plan ids, temporary directories), so comparing a query's
@@ -25,14 +29,9 @@ import argparse
 import json
 import os
 import re
-import sys
 import tempfile
-import time
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
-
-REPO = Path(__file__).resolve().parent
+from bench import REPO, bench_session, measurement, time_leaf
 
 _PLAN_MASKS = (
     (re.compile(r"#\d+"), "#N"),
@@ -61,45 +60,39 @@ def main() -> None:
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
-    from bench import _between_query_cleanup
-    from dandi_s3_log_parser_spark.session import get_spark
-
     import __spark_entry__ as entrymod
 
     cpus = args.cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("bench_extra", cpus=cpus, shuffle_partitions=cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    spark = bench_session("bench_extra", cpus)
     registry = entrymod.queries()
 
-    out = {}
-    for name in args.queries or registry:
-        fn = registry[name]
-        if args.explain:
-            plans_dir = REPO / "_work" / "plans"
-            plans_dir.mkdir(parents=True, exist_ok=True)
-            df = fn(spark, args.sf)
-            txt = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
+    timed = {}
+    with measurement(spark) as tracer:
+        for name in args.queries or registry:
+            fn = registry[name]
+            if args.explain:
+                plans_dir = REPO / "_work" / "plans"
+                plans_dir.mkdir(parents=True, exist_ok=True)
+                df = fn(spark, args.sf)
+                txt = df._jdf.queryExecution().explainString(
+                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                        "formatted"
+                    )
                 )
-            )
-            (plans_dir / f"{name}_{args.explain}.txt").write_text(_masked(txt))
-        ts = []
-        for t in range(args.trials):
-            _between_query_cleanup(spark)
-            spark.sparkContext.setJobDescription(f"{name} trial {t}")
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf)
-            df.write.mode("overwrite").format("noop").save()
-            ts.append(round(time.perf_counter() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
-        if not ts:
-            continue
-        out[name] = {"min": min(ts), "trials": ts}
-        print(json.dumps({name: out[name]}), flush=True)
+                (plans_dir / f"{name}_{args.explain}.txt").write_text(_masked(txt))
+            spans = time_leaf(spark, tracer, name, fn, args.sf, args.trials)
+            if spans:
+                timed[name] = spans
+                ts = [round(s["wall_s"], 3) for s in spans]
+                print(json.dumps({name: {"min": min(ts), "trials": ts}}), flush=True)
 
-    print("TOTAL " + json.dumps({k: v["min"] for k, v in out.items()}))
-
+    # executor CPU per trial is known once the event log is closed
+    print("CPU " + json.dumps(
+        {k: [s["executor_cpu_s"] for s in v] for k, v in timed.items()}
+    ))
+    print("TOTAL " + json.dumps(
+        {k: round(min(s["wall_s"] for s in v), 3) for k, v in timed.items()}
+    ))
 
 if __name__ == "__main__":
     main()

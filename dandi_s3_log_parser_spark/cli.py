@@ -164,6 +164,7 @@ def cmd_curate(args) -> int:
     conventions, drivable under spark-submit with --py-files."""
     from pyspark.sql import functions as F
 
+    from .functions.hashing import md5_prefix
     from .functions.text import quality_score
     from .operators.curation import corpus_line_dedup, curation_funnel
     from .operators.dedup import exact_dedup
@@ -256,9 +257,7 @@ def cmd_curate(args) -> int:
                 # oov/<unk> id); rare in-vocab collisions are the
                 # hashing-trick trade, same as the quality classifier
                 (
-                    F.conv(
-                        F.substring(F.md5(F.col("token")), 1, 8), 16, 10
-                    ).cast("long") % 999999 + 1
+                    md5_prefix(F.col("token"), 8).cast("long") % 999999 + 1
                 ).alias("token_id"),
             )
         )

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_prefix
 from .dedup import word_tokens
 
 
@@ -33,7 +34,7 @@ def feature_bucket(tok, n_buckets: int):
     mod ``n_buckets``.  md5 (not Spark's ``hash``) so any SQL engine —
     and the DuckDB oracle — reproduces the identical bucketing."""
     return (
-        F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long")
+        md5_prefix(tok, 8).cast("long")
         % n_buckets
     )
 
@@ -46,13 +47,7 @@ def hash_weights(spark, n_buckets: int) -> DataFrame:
     ``bucket long, weight double``)."""
     b = F.col("id")
     w = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("w|"), b.cast("string"))), 1, 6
-            ),
-            16,
-            10,
-        ).cast("double")
+        md5_prefix(F.concat(F.lit("w|"), b.cast("string")), 6).cast("double")
         / F.lit(float(16**6))
         * 2
         - 1

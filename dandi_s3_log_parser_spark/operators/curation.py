@@ -30,6 +30,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_prefix
 from ..functions.text import tokens
 from .dedup import word_tokens
 
@@ -143,7 +144,7 @@ def hash_split(docs: DataFrame) -> DataFrame:
     all: this is a projection.
     """
     bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
+        md5_prefix(F.col("doc_id").cast("string"), 4)
         .cast("int")
         % 100
     )
@@ -178,14 +179,8 @@ def stratified_sample(
         if not 0.0 <= r <= 1.0:
             raise ValueError(f"rate for {s!r} must be in [0,1], got {r}")
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", F.lit(salt), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
+        md5_prefix(
+            F.concat_ws("|", F.lit(salt), F.col("doc_id").cast("string")), 8
         ).cast("double")
         / F.lit(4294967296.0)
     )
@@ -284,14 +279,8 @@ def upsample_corpus(
         if w < 0:
             raise ValueError(f"weight for {s!r} must be >= 0, got {w}")
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", F.lit(salt), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
+        md5_prefix(
+            F.concat_ws("|", F.lit(salt), F.col("doc_id").cast("string")), 8
         ).cast("double")
         / F.lit(4294967296.0)
     )
@@ -712,18 +701,8 @@ def corpus_shuffle(
         F.concat(F.lit(f"order|{salt}|"), F.col("doc_id").cast("string"))
     )
     shard = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"shard|{salt}|"), F.col("doc_id").cast("string")
-                    )
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
+        md5_prefix(
+            F.concat(F.lit(f"shard|{salt}|"), F.col("doc_id").cast("string")), 4
         ).cast("int")
         % n_shards
     )
@@ -775,9 +754,7 @@ def pack_sequences(
     from ..functions.text import token_count
 
     if bucket_fn == "md5":
-        raw = F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-        ).cast("int")
+        raw = md5_prefix(F.col("doc_id").cast("string"), 4).cast("int")
     else:
         raw = F.xxhash64(F.col("doc_id").cast("string"))
     w = Window.partitionBy("bucket").orderBy("doc_id")
@@ -913,18 +890,8 @@ def cms_frequency_check(
         F.sequence(F.lit(0), F.lit(depth - 1))
     ).alias("_d")
     bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("_d").cast("string"), F.lit("|"), F.col("_v")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
+        md5_prefix(
+            F.concat(F.col("_d").cast("string"), F.lit("|"), F.col("_v")), 8
         ).cast("long")
         % width
     )
@@ -1299,16 +1266,8 @@ def gumbel_topk(scored: DataFrame, k: int, *, salt: str = "gumbel-v1") -> DataFr
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    x = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws("|", F.lit(salt), F.col("doc_id").cast("string"))
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
+    x = md5_prefix(
+        F.concat_ws("|", F.lit(salt), F.col("doc_id").cast("string")), 8
     ).cast("double")
     u = (x + 0.5) / F.lit(4294967296.0)
     key = F.round(F.col("logratio") + -F.log(-F.log(u)), 6)
@@ -2201,7 +2160,7 @@ def group_split(docs: DataFrame, *, group_col: str = "source") -> DataFrame:
     it back on ``doc_id`` to recover full rows.
     """
     bucket = (
-        F.conv(F.substring(F.md5(F.col(group_col).cast("string")), 1, 4), 16, 10)
+        md5_prefix(F.col(group_col).cast("string"), 4)
         .cast("int")
         % 100
     )

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.hashing import md5_prefix
 from ..functions.text import tokens
 
 
@@ -673,7 +674,7 @@ def md5_token_hash_60(tok: Column) -> Column:
     mechanically verify the whole SimHash pipeline; xxhash64 (the
     default family, ~3x faster) has no portable SQL equivalent.  15 hex
     chars keep the value inside a signed 64-bit long."""
-    return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
+    return md5_prefix(tok, 15).cast("long")
 
 
 def simhash(df: DataFrame, *, token_hash=None) -> Column:

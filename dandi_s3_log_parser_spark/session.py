@@ -17,8 +17,9 @@ overrides only ``setPermission`` with the ``chmod`` syscall through
 ``java.nio``; Hadoop still computes each mode (defaults with the umask
 applied) and writes the ``.crc`` files, so the warehouse is
 byte-for-byte and mode-for-mode the one the stock filesystem writes.
-Streaming checkpoints go through ``FileContext``
-(``fs.AbstractFileSystem.file.impl``, ``LocalFs``) and still fork.
+Streaming checkpoints and sink logs would go through ``FileContext``
+(``LocalFs``, which forks as well); the same settings point Spark's
+checkpoint file manager at ``FileSystem``, and so at this class.
 """
 
 from __future__ import annotations
@@ -32,6 +33,10 @@ from pyspark.sql import SparkSession
 
 NIO_FS_JAR = Path(__file__).resolve().parent / "jvm" / "nio-local-fs.jar"
 NIO_FS_CLASS = "dandi_s3_log_parser_spark.jvm.NioLocalFileSystem"
+CHECKPOINT_FS_CLASS = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def local_fs_conf(
@@ -50,7 +55,14 @@ def local_fs_conf(
     passes in ``extra_conf`` are kept after the jar."""
     if gateway_live or "PYSPARK_GATEWAY_PORT" in env or not jar.is_file():
         return {}
-    conf = {"spark.hadoop.fs.file.impl": NIO_FS_CLASS}
+    conf = {
+        "spark.hadoop.fs.file.impl": NIO_FS_CLASS,
+        # streaming checkpoints and sink logs write through FileContext
+        # (LocalFs, which still forks) unless told to use FileSystem;
+        # both commit a file by rename, but FileSystem overwrites an
+        # existing one (a retried batch's state file) as delete + rename
+        "spark.sql.streaming.checkpointFileManagerClass": CHECKPOINT_FS_CLASS,
+    }
     for key in ("spark.driver.extraClassPath", "spark.executor.extraClassPath"):
         conf[key] = os.pathsep.join(filter(None, (str(jar), extra_conf.get(key))))
     return conf
