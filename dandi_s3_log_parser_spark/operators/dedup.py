@@ -30,17 +30,6 @@ from ..functions.hashing import md5_prefix
 from ..functions.text import tokens
 
 
-def _shuffle_partitions(spark) -> int:
-    """``spark.sql.shuffle.partitions`` as an int, falling back to the
-    cluster's default parallelism when the conf is non-numeric ('auto'
-    on AQE-managed platforms) or unset — a repartition width hint must
-    never crash the operator (round-4 ADVICE)."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism
-
-
 def word_tokens(text: Column) -> Column:
     return tokens(F.lower(text))
 

@@ -20,7 +20,8 @@ one-file-per-key layout is a *partitioned table*, not 250k tiny files:
   ``pmod(xxhash64(timestamp, ip), salt_buckets)`` so a hot key spreads
   over ``salt_buckets`` tasks/files while remaining colocated by
   partition directory (the north rule's explicit salted-repartition
-  requirement).
+  requirement).  The repartition takes no partition count, so AQE
+  coalesces it when the batch is small.
 
 Column order inside the binned table matches the reference golden:
 ``timestamp, bytes_sent, ip_address``
@@ -66,8 +67,14 @@ def route_binned(
     hidden partitioning).
 
     ``extra_cluster_cols`` (e.g. the day column) join the salted
-    repartition key so each shuffle task holds few output partitions —
-    file count stays ~(partitions x salt), not (partitions x tasks).
+    repartition key so each shuffle task holds few output partitions.
+
+    The repartition names columns but no count, so AQE sizes it from
+    the bytes it measures: at scale it starts at
+    ``spark.sql.shuffle.partitions`` tasks and the hot key spreads over
+    ``salt_buckets`` of them; on a small batch the tiny partitions
+    coalesce, and each (day, key_parent) directory gets one file
+    instead of one per salt value.
     """
     df = reduced.withColumns(
         {
@@ -78,9 +85,7 @@ def route_binned(
             ),
         }
     )
-    from .dedup import _shuffle_partitions
-
-    df = df.repartition(_shuffle_partitions(df.sparkSession), *extra_cluster_cols, "key_parent", "_salt")
+    df = df.repartition(*extra_cluster_cols, "key_parent", "_salt")
     df = df.sortWithinPartitions("object_key", "timestamp")
     return df.select(
         "timestamp", "bytes_sent", "ip_address", "object_key", "key_parent", "key_shard",

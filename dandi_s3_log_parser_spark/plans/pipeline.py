@@ -11,8 +11,9 @@ Physical plan intent per stage (verify with ``.explain("formatted")``):
   projections/filters -> one ArrowEvalPython (the status/bytes UDF) ->
   dynamic-overwrite day-partitioned write.  No shuffle at all.
 * bin: day-pruned scan of reduced -> one salted repartition (the only
-  shuffle, skew-spread) -> partitioned write by (key_parent, key_shard,
-  day).
+  shuffle, skew-spread; no partition count, so AQE sizes it from the
+  bytes: full width at scale, a few tasks on a daily batch) ->
+  partitioned write by (key_parent, key_shard, day).
 * map: binned scan -> broadcast joins (assets dim, distinct-IP region
   map) -> partial+final hash aggregations for the summaries.  The fact
   table never shuffles for joins; only the final groupBys exchange
@@ -404,7 +405,9 @@ def run_map_stage(
     # the enrich chain (hash + broadcast joins over the full fact) feeds
     # SEVEN sink actions below; persist computes it once and spills to
     # local disk at scale — without it every summary re-scans the binned
-    # table and re-runs the joins (measured 33s -> ~8s at 5k docs)
+    # table and re-runs the joins (measured 33s -> ~8s at 5k docs).
+    # AQE sizes the shuffles inside the cached plan from the data, as
+    # in any other (session.get_spark: canChangeCachedPlanOutputPartitioning)
     enriched = enrich_with_region(
         binned, ip_region_cache, cidr_ranges, geo_fallback, salt=cfg.ip_hash_salt
     ).persist(StorageLevel.MEMORY_AND_DISK)

@@ -1,7 +1,5 @@
 """Round-5 hardening: pins for the round-4 ADVICE fixes.
 
-- ``_shuffle_partitions`` must not crash when the conf is 'auto'/unset
-  (AQE-managed platforms);
 - the curate CLI's --encode-vocab stage must survive input parquet that
   already carries ``n_tokens``/``ids`` columns (duplicate-name join);
 - the bench's ``encode_tokens`` query must reserve token id 0 for OOV
@@ -17,37 +15,6 @@ from pathlib import Path
 import pytest
 
 REPO = Path(__file__).resolve().parents[1]
-
-
-class _FakeConf:
-    def __init__(self, value):
-        self._value = value
-
-    def get(self, key):
-        if isinstance(self._value, Exception):
-            raise self._value
-        return self._value
-
-
-class _FakeSC:
-    defaultParallelism = 12
-
-
-class _FakeSpark:
-    sparkContext = _FakeSC()
-
-    def __init__(self, conf_value):
-        self.conf = _FakeConf(conf_value)
-
-
-def test_shuffle_partitions_fallback():
-    from dandi_s3_log_parser_spark.operators.dedup import _shuffle_partitions
-
-    assert _shuffle_partitions(_FakeSpark("32")) == 32
-    # 'auto' (Databricks-style AQE conf) -> defaultParallelism, no crash
-    assert _shuffle_partitions(_FakeSpark("auto")) == 12
-    # unset -> conf.get returns None -> TypeError -> fallback
-    assert _shuffle_partitions(_FakeSpark(None)) == 12
 
 
 def test_encode_tokens_query_reserves_oov_zero(spark):

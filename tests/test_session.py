@@ -142,3 +142,22 @@ def test_streaming_checkpoint_forks_no_process(spark, tmp_path):
     query.awaitTermination()
     assert _reaped_cpu_ticks(pid) == before
     assert spark.read.parquet(str(tmp_path / "sink")).count() == 100
+
+
+def test_cached_plans_coalesce(spark):
+    """``get_spark`` lets AQE resize the shuffles inside a persisted
+    plan: a cached aggregate of three groups reads back in fewer
+    partitions than ``spark.sql.shuffle.partitions`` (at Spark's default
+    it keeps all of them)."""
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    ) == "true"
+    df = spark.range(1000).groupBy((F.col("id") % 3).alias("k")).count().persist()
+    try:
+        assert df.count() == 3
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert df.rdd.getNumPartitions() < width
+    finally:
+        df.unpersist()
