@@ -2695,7 +2695,8 @@ def q_score_percentile(spark, sf):
     mean the same selection pressure on every crawl slice.  Exact
     percent_rank semantics WITHOUT a corpus-scale window: strictly-
     below counts ride a (source, score) histogram cumulated over the
-    dimension-sized histogram only, broadcast-joined back."""
+    dimension-sized histogram only, joined back (broadcast by AQE when
+    a side measures small)."""
     from dandi_s3_log_parser_spark.operators.curation import (
         score_percentile_by_source,
     )

@@ -2236,10 +2236,13 @@ def score_percentile_by_source(docs: DataFrame, *, score_col: str) -> DataFrame:
     bounded by sources x distinct score values, i.e. dimension-sized
     for the integer/rounded scores quality pipelines use — cumulated
     with a window over THAT histogram (partitioned by source, tiny),
-    then broadcast-joined back onto the documents.  The corpus itself
-    is touched by exactly one partial-aggregate exchange and one
-    broadcast-hash join: no sort, no skew hazard from corpus-scale
-    sources.
+    then joined back onto the documents on ``(source, score)``.  The
+    join carries no broadcast hint: it is planned as a sort-merge join,
+    and AQE replaces it with a broadcast-hash join at runtime once one
+    side measures under the broadcast threshold (the histogram, for
+    integer/rounded scores; on a small input it may be the documents).
+    A corpus-sized histogram of continuous scores stays a shuffle join.
+    The result is sorted by ``doc_id`` (one range-partitioned sort).
     """
     s, src = F.col(score_col), F.col("source")
     base = docs.filter(s.isNotNull()).select(

@@ -26,9 +26,9 @@ for repo1.maven.org — no route to vendor the jar): no
 (``/opt/spark/jars`` and the pyspark wheel both lack it) and the box has
 no network route (DNS resolution fails for both the pip index and
 repo1.maven.org), so the jar cannot be vendored in.  The Iceberg branch is therefore verified by recorder-mock
-call-sequence tests (``tests/test_round2_scale_fixes.py``,
-``tests/test_round3_hardening.py``) plus a gated integration test
-(``tests/test_iceberg_integration.py``, ``@pytest.mark.iceberg``) that
+call-sequence tests (``tests/test_catalog.py``,
+``tests/test_iceberg_merge_retry.py``) plus a gated integration
+test (``tests/test_iceberg_integration.py``, ``@pytest.mark.iceberg``) that
 executes the full catalog round-trip — create partitioned, dynamic
 overwrite one day, other days survive, cache MERGE INTO — whenever a
 runtime jar is supplied via ``SPARK_ICEBERG_JAR``.

@@ -47,16 +47,12 @@ def value_hash(df: pd.DataFrame) -> str:
 
 def main() -> int:
     from __spark_entry__ import oracle_sql, queries
-    from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "8g")
-        .appName("parity")
-        .getOrCreate()
-    )
+    from dandi_s3_log_parser_spark.session import get_spark
+
+    # the engine's own session: the settings every query runs under in
+    # the pipeline, the CLI and the tests
+    spark = get_spark("parity", cpus=8, shuffle_partitions=8, driver_memory="8g")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

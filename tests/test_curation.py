@@ -1,5 +1,5 @@
-"""Curation operators: repetition metrics, hash split, source stats,
-sequence packing.
+"""Curation operators (``operators/curation.py``): quality signals,
+dedup, sampling, splitting, chunking and corpus statistics.
 
 Tiny hand-built corpora with hand-computed expectations; the sf0.01
 DuckDB parity gate covers the same operators at corpus scale.
@@ -171,27 +171,33 @@ def test_corpus_line_dedup_preserves_line_order(spark):
 
 def test_corpus_line_dedup_df_exchange_carries_digest_not_line(spark):
     """The document-frequency aggregation must shuffle the sha2 digest,
-    never the line bytes (the corpus-scale contract)."""
+    never the line bytes (the corpus-scale contract).  The digest is
+    computed once into a localCheckpoint, so this plan reads the
+    checkpointed ``_digest`` column instead of a sha2 expression."""
     import re
 
     from dandi_s3_log_parser_spark.operators.curation import corpus_line_dedup
 
     df = spark.createDataFrame([(1, "a\nb")], "doc_id long, text string")
-    plan = (
+    lines = (
         corpus_line_dedup(df, max_doc_freq=1)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
+        .splitlines()
     )
-    for exch in [
-        ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln
-    ]:
-        assert not re.search(r"hashpartitioning\(line", exch)
-    # the digest is now computed once into a localCheckpoint (the sha2
-    # lives in the materialization job, not this plan); the checkpointed
-    # `_digest` column standing in every downstream scan is the evidence
-    # the shuffles carry the digest
-    assert "sha2" in plan or "_digest" in plan
+    # the exchange under the document-frequency aggregate (the final
+    # count(distinct doc_id) per digest) is keyed on the digest alone
+    (df_agg,) = [
+        i for i, ln in enumerate(lines)
+        if "HashAggregate" in ln and "functions=[count(distinct doc_id" in ln
+    ]
+    assert re.search(
+        r"Exchange hashpartitioning\(_digest#\d+, \d+\)", lines[df_agg + 1]
+    ), lines[df_agg + 1]
+    # and no exchange anywhere is keyed on the line text
+    for exch in [ln for ln in lines if "Exchange hashpartitioning" in ln]:
+        assert not re.search(r"hashpartitioning\([^)]*\bline#", exch), exch
 
 
 # ---------------------------------------------------------------------------
@@ -1260,3 +1266,92 @@ def test_encode_tokens_vocab_is_broadcast(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+# ---------------------------------------------------------------------------
+# per_key_cap (hot-key-safe per-key top-k) and oov_rate
+# ---------------------------------------------------------------------------
+
+
+def test_per_key_cap_keeps_topk_per_key(spark):
+    """The cap keeps exactly the top-k rows per key under the total
+    order, including a hot key with far more rows than the cap."""
+    from dandi_s3_log_parser_spark.operators.curation import per_key_cap
+
+    rows = [(i, "hot" if i % 5 else f"cold{i}", (i * 13) % 97) for i in range(200)]
+    df = spark.createDataFrame(rows, "doc_id long, source string, n_chars long")
+    order = [F.desc("n_chars"), F.asc("doc_id")]
+    got = {
+        tuple(r)
+        for r in per_key_cap(df, "source", k=3, order_by=order).select(
+            "doc_id", "source"
+        ).collect()
+    }
+    hot = sorted(
+        ((i, (i * 13) % 97) for i in range(200) if i % 5),
+        key=lambda t: (-t[1], t[0]),
+    )[:3]
+    assert {(i, "hot") for i, _ in hot} <= got
+    assert sum(1 for _, s in got if s == "hot") == 3
+    assert sum(1 for _, s in got if s.startswith("cold")) == 40  # 1 each
+
+
+def test_per_key_cap_plan_has_partial_group_limit(spark):
+    """The scale property per_key_cap relies on: Spark's
+    WindowGroupLimit rewrite must put a PARTIAL per-key top-k below the
+    exchange, so a hot key ships <= k rows per input partition through
+    the shuffle rather than its full row count."""
+    from dandi_s3_log_parser_spark.operators.curation import per_key_cap
+
+    df = spark.range(1000).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 7).cast("string").alias("source"),
+        (F.col("id") * 13 % 97).alias("n_chars"),
+    )
+    plan = (
+        per_key_cap(
+            df, "source", k=5, order_by=[F.desc("n_chars"), F.asc("doc_id")]
+        )
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    partial = plan.find("WindowGroupLimit")
+    assert partial != -1 and "Partial" in plan
+    # the Partial limit must sit BELOW the source-hash exchange
+    assert "Exchange hashpartitioning(source" in plan
+    assert plan.find("Partial") > plan.find("Exchange hashpartitioning(source")
+
+
+def test_oov_rate_empty_and_null_text(spark):
+    """Degenerate docs: empty text has zero tokens (oov_rate pinned at
+    1.0 by the greatest(n,1) guard — 'nothing in vocabulary'), and the
+    operator must not throw on them."""
+    from dandi_s3_log_parser_spark.operators.curation import oov_rate
+
+    df = spark.createDataFrame(
+        [(1, "a a b"), (2, ""), (3, "   ")], "doc_id long, text string"
+    )
+    got = {r["doc_id"]: (r["n_tokens"], r["oov_rate"]) for r in
+           oov_rate(df, vocab_k=10).collect()}
+    assert got[1] == (3, 0.0)
+    assert got[2] == (0, 1.0)
+    assert got[3] == (0, 1.0)
+
+
+def test_oov_rate_vocab_join_is_broadcast(spark):
+    """The vocabulary membership probe must be a broadcast join — a
+    shuffled join here would re-exchange the full token explosion."""
+    from dandi_s3_log_parser_spark.operators.curation import oov_rate
+
+    df = spark.createDataFrame(
+        [(1, "a a b"), (2, "b c zz")], "doc_id long, text string"
+    )
+    out = oov_rate(df, vocab_k=2)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    got = {r["doc_id"]: r["oov_rate"] for r in out.collect()}
+    # vocab (count desc, tok asc) = {a:2, b:2} -> doc1 all in-vocab,
+    # doc2 has 2 of 3 occurrences out of vocab (c, zz)
+    assert got[1] == 0.0
+    assert abs(got[2] - 2 / 3) < 1e-6

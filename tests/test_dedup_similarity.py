@@ -716,3 +716,24 @@ def test_pq_adc_topk_caps_query_batch(spark):
     q = emb.withColumnRenamed("vec_id", "query_id")  # 300 > 256 cap
     with _pytest.raises(ValueError, match="at most 256"):
         pq_adc_topk(emb, q, m=1, k=2, iters=0, topk=1)
+
+
+# ---------------------------------------------------------------------------
+# exact_dedup narrow shuffle
+# ---------------------------------------------------------------------------
+
+
+def test_exact_dedup_exchange_carries_digest_not_text(spark):
+    import re
+
+    df = spark.createDataFrame(
+        [(1, "aa"), (2, "aa"), (3, "bb")], "doc_id long, text string"
+    )
+    out = exact_dedup(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # the exchange key is the sha2 digest expression, never the text col
+    (exch,) = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+    assert not re.search(r"hashpartitioning\(text", exch)
+    assert "sha2" in plan and "partial_min" in plan  # map-side combine
+    got = {r["doc_id"]: r["dup_count"] for r in out.collect()}
+    assert got == {1: 2, 3: 1}

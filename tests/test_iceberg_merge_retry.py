@@ -1,55 +1,12 @@
-"""Iceberg MERGE commit-conflict retry (optimistic concurrency).
-
-The sandbox has no Iceberg runtime jar (dated attempts logged in
-``sources/tables.py`` module docs), so the concurrent-writer contract
-is pinned with recorder mocks: a ``CommitFailedException`` from a
-losing snapshot race must re-issue the whole statement (re-planning
-from the new snapshot), an unknown-state commit must be retried only
-for statements the caller declared idempotent, and anything else must
-propagate untouched.  The jar-gated suite
-(``tests/test_iceberg_integration.py``) executes the real MERGE when a
-runtime jar is supplied.
+"""Iceberg MERGE commit-conflict retry (optimistic concurrency), pinned
+with the recorder of ``iceberg_recorder.py``.
 """
-
-from pathlib import Path
 
 import pytest
 
 from dandi_s3_log_parser_spark.operators.enrich import merge_region_cache
-from dandi_s3_log_parser_spark.sources.tables import Catalog
 
-
-class _FlakySqlRecorder:
-    """SparkSession stand-in whose ``sql`` raises a scripted exception
-    per call (None = succeed), recording every statement."""
-
-    class _Cat:
-        def __init__(self, outer):
-            self._outer = outer
-
-        def dropTempView(self, name):
-            self._outer.dropped.append(name)
-
-    def __init__(self, script):
-        self.script = list(script)
-        self.statements = []
-        self.dropped = []
-        self.catalog = self._Cat(self)
-
-    def sql(self, stmt):
-        self.statements.append(stmt)
-        exc = self.script.pop(0) if self.script else None
-        if exc is not None:
-            raise exc
-
-
-def _iceberg_catalog(recorder, exists=True):
-    cat = Catalog.__new__(Catalog)
-    cat.spark = recorder
-    cat.root = Path("/nonexistent")
-    cat.iceberg_catalog = "ice"
-    cat.exists = lambda name: exists
-    return cat
+from .iceberg_recorder import IcebergRecorder, iceberg_catalog
 
 
 _CONFLICT = Exception(
@@ -62,42 +19,46 @@ _UNKNOWN = Exception(
 )
 
 
+# ---------------------------------------------------------------------------
+# commit retry (optimistic concurrency): a CommitFailedException from a
+# losing snapshot race re-issues the whole statement (Iceberg re-plans it
+# from the new snapshot); an unknown-state commit is retried only for
+# statements declared idempotent; anything else propagates untouched
+# ---------------------------------------------------------------------------
+
+
 def test_commit_conflict_retries_same_statement():
-    rec = _FlakySqlRecorder([_CONFLICT, _CONFLICT, None])
-    cat = _iceberg_catalog(rec)
-    cat.sql_with_commit_retry("MERGE INTO ice.db.t ...")
+    rec = IcebergRecorder([_CONFLICT, _CONFLICT, None])
+    iceberg_catalog(rec).sql_with_commit_retry("MERGE INTO ice.db.t ...")
     assert rec.statements == ["MERGE INTO ice.db.t ..."] * 3
 
 
 def test_commit_conflict_exhausted_raises():
-    rec = _FlakySqlRecorder([_CONFLICT] * 4)
-    cat = _iceberg_catalog(rec)
+    rec = IcebergRecorder([_CONFLICT] * 4)
     with pytest.raises(Exception, match="CommitFailedException"):
-        cat.sql_with_commit_retry("MERGE INTO ice.db.t ...", retries=3)
+        iceberg_catalog(rec).sql_with_commit_retry(
+            "MERGE INTO ice.db.t ...", retries=3
+        )
     assert len(rec.statements) == 4  # initial + 3 retries, then give up
 
 
 def test_non_conflict_error_propagates_immediately():
-    boom = Exception("AnalysisException: table not found")
-    rec = _FlakySqlRecorder([boom])
-    cat = _iceberg_catalog(rec)
+    rec = IcebergRecorder([Exception("AnalysisException: table not found")])
     with pytest.raises(Exception, match="table not found"):
-        cat.sql_with_commit_retry("MERGE INTO ice.db.t ...")
+        iceberg_catalog(rec).sql_with_commit_retry("MERGE INTO ice.db.t ...")
     assert len(rec.statements) == 1
 
 
 def test_unknown_state_not_retried_by_default():
-    rec = _FlakySqlRecorder([_UNKNOWN, None])
-    cat = _iceberg_catalog(rec)
+    rec = IcebergRecorder([_UNKNOWN, None])
     with pytest.raises(Exception, match="CommitStateUnknownException"):
-        cat.sql_with_commit_retry("UPDATE ice.db.t SET ...")
+        iceberg_catalog(rec).sql_with_commit_retry("UPDATE ice.db.t SET ...")
     assert len(rec.statements) == 1
 
 
 def test_unknown_state_retried_when_declared_idempotent():
-    rec = _FlakySqlRecorder([_UNKNOWN, None])
-    cat = _iceberg_catalog(rec)
-    cat.sql_with_commit_retry(
+    rec = IcebergRecorder([_UNKNOWN, None])
+    iceberg_catalog(rec).sql_with_commit_retry(
         "MERGE INTO ice.db.t ...", retry_unknown_state=True
     )
     assert len(rec.statements) == 2
@@ -108,12 +69,9 @@ def test_merge_region_cache_survives_one_conflict(spark):
     re-issued verbatim (same temp view — its contents are unchanged;
     re-planning happens inside Iceberg from the new snapshot), and the
     temp view is dropped exactly once afterwards."""
-    rec = _FlakySqlRecorder([_CONFLICT, None])
-    cat = _iceberg_catalog(rec)
-    ip_map = spark.createDataFrame(
-        [("h1", "eu")], "ip_hash string, region string"
-    )
-    merge_region_cache(cat, ip_map)
+    rec = IcebergRecorder([_CONFLICT, None])
+    ip_map = spark.createDataFrame([("h1", "eu")], "ip_hash string, region string")
+    merge_region_cache(iceberg_catalog(rec), ip_map)
     assert len(rec.statements) == 2
     assert rec.statements[0] == rec.statements[1]
     assert rec.statements[0].startswith("MERGE INTO ice.db.ip_region_cache")
@@ -121,12 +79,9 @@ def test_merge_region_cache_survives_one_conflict(spark):
 
 
 def test_merge_region_cache_conflict_exhaustion_still_drops_view(spark):
-    rec = _FlakySqlRecorder([_CONFLICT] * 4)
-    cat = _iceberg_catalog(rec)
-    ip_map = spark.createDataFrame(
-        [("h1", "eu")], "ip_hash string, region string"
-    )
+    rec = IcebergRecorder([_CONFLICT] * 4)
+    ip_map = spark.createDataFrame([("h1", "eu")], "ip_hash string, region string")
     with pytest.raises(Exception, match="CommitFailedException"):
-        merge_region_cache(cat, ip_map)
+        merge_region_cache(iceberg_catalog(rec), ip_map)
     assert len(rec.statements) == 4
     assert len(rec.dropped) == 1  # finally-block hygiene holds on failure

@@ -1,5 +1,8 @@
-"""Round-5 operators: HITS hubs/authorities and asymmetric containment
-near-dup."""
+"""Corpus operators: HITS hubs/authorities, containment near-dup,
+repeated-span removal, winnowing, fixed-window chunking, byte-pair
+encoding, CCNet buckets and the per-source corpus statistics
+(divergence, vocabulary growth, Zipf fit, overlap, grouped split,
+duplicate flow, score percentiles)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -974,9 +977,12 @@ def test_score_percentile_hand_computed(spark):
 
 
 def test_score_percentile_no_corpus_window(spark):
-    """The window runs over the (source, score) histogram only: every
-    Window node in the plan sits above an aggregate, and no exchange
-    carries the doc_id column (the corpus side is join-probe only)."""
+    """The window runs over the (source, score) histogram only: no
+    Window node carries the doc_id column.  The histogram join is not
+    hinted (a broadcast hint on a corpus-sized histogram of continuous
+    scores would bypass the broadcast threshold); it is planned as a
+    sort-merge join, and AQE turns it into a broadcast-hash join once
+    it has measured a side under the threshold (both, on this input)."""
     from dandi_s3_log_parser_spark.operators.curation import (
         score_percentile_by_source,
     )
@@ -986,14 +992,19 @@ def test_score_percentile_no_corpus_window(spark):
         "doc_id long, source string, n_chars long",
     )
     out = score_percentile_by_source(df, score_col="n_chars")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the histogram join is no longer FORCED broadcast (round-5 advice:
-    # a corpus-sized histogram for continuous scores would OOM instead
-    # of degrading); the invariant that survives is that no Window node
-    # runs over per-document rows
-    for line in plan.splitlines():
-        if "Window" in line:
-            assert "doc_id#" not in line
+    qe = out._jdf.queryExecution()
+    static = qe.executedPlan().toString()
+    assert "SortMergeJoin [source#" in static
+    out.collect()
+    final = qe.executedPlan().toString()
+    assert "isFinalPlan=true" in final
+    final_plan = final.split("== Initial Plan ==")[0]
+    assert "BroadcastHashJoin [source#" in final_plan
+    assert "SortMergeJoin" not in final_plan
+    for plan in (static, final_plan):
+        for line in plan.splitlines():
+            if "Window" in line:
+                assert "doc_id#" not in line
 
 
 def test_score_percentile_threshold_equalizes_sources(spark):

@@ -16,6 +16,8 @@ import os
 import zipfile
 from pathlib import Path
 
+import pytest
+
 from dandi_s3_log_parser_spark.datagen import generate, to_spark
 from dandi_s3_log_parser_spark.plans.pipeline import PipelineConfig, run_pipeline
 from dandi_s3_log_parser_spark.session import NIO_FS_CLASS, NIO_FS_JAR, local_fs_conf
@@ -106,32 +108,40 @@ def _reaped_cpu_ticks(pid: int) -> int:
     return int(fields[13]) + int(fields[14])
 
 
-def test_pipeline_run_forks_no_process(spark, tmp_path):
+@pytest.fixture
+def jvm_pid(spark):
+    """The gateway JVM's pid, with Spark's one fork per JVM lifetime
+    already behind it.  The executor's first heartbeat (10-20 s after
+    the session starts) builds ``ProcfsMetricsGetter``, whose
+    constructor runs ``getconf PAGESIZE``: 1-3 ticks of reaped-child CPU
+    that land inside a test's window when the session is young.  Build
+    it here, before any window opens."""
+    from pyspark import SparkContext
+
+    spark._jvm.org.apache.spark.executor.ProcfsMetricsGetter.pTreeInfo()
+    return SparkContext._gateway.proc.pid
+
+
+def test_pipeline_run_forks_no_process(spark, jvm_pid, tmp_path):
     """Without libhadoop, the stock local filesystem forks a ``chmod``
     for every file, ``.crc`` and directory a write creates (40-60 ticks
     of reaped-child CPU for this run); a run now reaps none."""
-    from pyspark import SparkContext
-
-    pid = SparkContext._gateway.proc.pid
     pages, dims = to_spark(spark, generate(1500, 7))
     catalog = Catalog(spark, tmp_path / "warehouse")
-    before = _reaped_cpu_ticks(pid)
+    before = _reaped_cpu_ticks(jvm_pid)
     run_pipeline(spark, catalog, pages, dims, PipelineConfig(), "run-no-fork")
-    assert _reaped_cpu_ticks(pid) == before
+    assert _reaped_cpu_ticks(jvm_pid) == before
 
 
-def test_streaming_checkpoint_forks_no_process(spark, tmp_path):
+def test_streaming_checkpoint_forks_no_process(spark, jvm_pid, tmp_path):
     """A streaming query's checkpoint and sink metadata logs are written
     through the session's checkpoint file manager; with the stock
     ``FileContext`` one they fork a ``chmod`` per file (13 ticks of
     reaped-child CPU for this query); now they fork none."""
-    from pyspark import SparkContext
-
-    pid = SparkContext._gateway.proc.pid
     src = tmp_path / "src"
     spark.range(100).selectExpr("id", "id % 7 AS k").write.parquet(str(src))
     stream = spark.readStream.schema("id long, k long").parquet(str(src))
-    before = _reaped_cpu_ticks(pid)
+    before = _reaped_cpu_ticks(jvm_pid)
     query = (
         stream.writeStream.format("parquet")
         .option("path", str(tmp_path / "sink"))
@@ -140,7 +150,7 @@ def test_streaming_checkpoint_forks_no_process(spark, tmp_path):
         .start()
     )
     query.awaitTermination()
-    assert _reaped_cpu_ticks(pid) == before
+    assert _reaped_cpu_ticks(jvm_pid) == before
     assert spark.read.parquet(str(tmp_path / "sink")).count() == 100
 
 
