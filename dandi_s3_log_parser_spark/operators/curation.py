@@ -2242,7 +2242,6 @@ def score_percentile_by_source(docs: DataFrame, *, score_col: str) -> DataFrame:
     side measures under the broadcast threshold (the histogram, for
     integer/rounded scores; on a small input it may be the documents).
     A corpus-sized histogram of continuous scores stays a shuffle join.
-    The result is sorted by ``doc_id`` (one range-partitioned sort).
     """
     s, src = F.col(score_col), F.col("source")
     base = docs.filter(s.isNotNull()).select(
@@ -2279,5 +2278,4 @@ def score_percentile_by_source(docs: DataFrame, *, score_col: str) -> DataFrame:
                 6,
             ).alias("pct_in_source"),
         )
-        .orderBy("doc_id")
     )

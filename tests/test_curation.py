@@ -1355,3 +1355,25 @@ def test_oov_rate_vocab_join_is_broadcast(spark):
     # doc2 has 2 of 3 occurrences out of vocab (c, zz)
     assert got[1] == 0.0
     assert abs(got[2] - 2 / 3) < 1e-6
+
+
+def test_score_percentile_has_no_global_sort(spark):
+    """The per-document output is not sorted: no caller reads its row
+    order, so neither the static nor the final adaptive plan carries a
+    range-partitioned exchange (with its sampling job) on ``doc_id``."""
+    from dandi_s3_log_parser_spark.operators.curation import (
+        score_percentile_by_source,
+    )
+
+    df = spark.createDataFrame(
+        [(i, f"s{i % 3}", i * 7 % 50) for i in range(60)],
+        "doc_id long, source string, n_chars long",
+    )
+    out = score_percentile_by_source(df, score_col="n_chars")
+    qe = out._jdf.queryExecution()
+    static = qe.executedPlan().toString()
+    assert len(out.collect()) == 60
+    final = qe.executedPlan().toString()
+    assert "isFinalPlan=true" in final
+    for plan in (static, final):
+        assert "rangepartitioning(doc_id" not in plan

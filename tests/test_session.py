@@ -6,13 +6,19 @@ a forked ``chmod``) when it launches the driver JVM itself.  These tests
 pin that the committed jar is built from the committed source, that the
 swap happens only when the jar can be on the classpath, that a write
 leaves the modes the stock filesystem would, and that a pipeline run
-forks no process.
+forks no process.  They also pin that a session skips Spark ML's
+classpath session extension, and that the engine calls nothing it
+registers.
 """
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import os
+import re
+import subprocess
+import sys
 import zipfile
 from pathlib import Path
 
@@ -24,6 +30,9 @@ from dandi_s3_log_parser_spark.session import NIO_FS_CLASS, NIO_FS_JAR, local_fs
 from dandi_s3_log_parser_spark.sources.tables import Catalog
 
 CLASSPATH_KEYS = ("spark.driver.extraClassPath", "spark.executor.extraClassPath")
+ROOT = Path(__file__).resolve().parents[1]
+# the SQL functions spark-mllib's InternalFunctionRegistration provides
+ML_FUNCTIONS = {"vector_to_array", "array_to_vector"}
 
 
 def _manifest(jar: Path) -> dict[str, str]:
@@ -171,3 +180,77 @@ def test_cached_plans_coalesce(spark):
         assert df.rdd.getNumPartitions() < width
     finally:
         df.unpersist()
+
+
+def test_session_skips_ml_session_extension(tmp_path):
+    """A session does not load spark-mllib's ``InternalFunctionRegistration``,
+    the one ``SparkSessionExtensionsProvider`` on the classpath (2-2.5 s
+    of every session start).  Spark's own class-load log of a
+    fresh driver JVM that starts ``get_spark`` and runs one action
+    names none of its classes (at Spark's default it loads 11)."""
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_GATEWAY_PORT"}
+    env["JAVA_TOOL_OPTIONS"] = " ".join(
+        filter(None, (env.get("JAVA_TOOL_OPTIONS"),
+                      f"-Xlog:class+load=info:file={tmp_path}/classes-%p.log"))
+    )
+    script = (
+        "from dandi_s3_log_parser_spark.session import get_spark\n"
+        "spark = get_spark('ml-probe', cpus=2, shuffle_partitions=2,"
+        " driver_memory='1g')\n"
+        "assert spark.range(10).count() == 10\n"
+        "spark.stop()\n"
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", script], cwd=ROOT, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    loaded = "".join(p.read_text() for p in tmp_path.glob("classes-*.log"))
+    assert "] org.apache.spark.sql.SparkSessionExtensions " in loaded
+    assert "org.apache.spark.sql.ml.InternalFunctionRegistration" not in loaded
+
+
+def _ml_references(path: Path) -> list[str]:
+    """``pyspark.ml`` imports and attribute chains, and uses of the ML
+    SQL functions as Python names or inside strings (``F.expr``)."""
+    found = []
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            names = [f"{node.module}.{a.name}" for a in node.names]
+        elif isinstance(node, (ast.Name, ast.Attribute)):
+            names = [ast.unparse(node)]
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            names = re.findall(r"\w+", node.value)
+        else:
+            continue
+        found += [
+            n for n in names
+            if n.startswith("pyspark.ml") or n.rsplit(".", 1)[-1] in ML_FUNCTIONS
+        ]
+    return found
+
+
+def test_engine_calls_no_ml_session_function(tmp_path):
+    """What the skipped ML registration provides is unused: no engine
+    module (the CLI included) nor ``__spark_entry__.py`` imports
+    ``pyspark.ml`` or names one of its SQL functions."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "from pyspark.ml.functions import vector_to_array\n"
+        "import pyspark\n"
+        "pyspark.ml.linalg\n"
+        "F.expr('array_to_vector(v)')\n"
+    )
+    assert set(_ml_references(probe)) == {
+        "pyspark.ml.functions.vector_to_array",
+        "pyspark.ml.linalg",
+        "pyspark.ml",
+        "array_to_vector",
+    }
+    sources = [*sorted((ROOT / "dandi_s3_log_parser_spark").rglob("*.py")),
+               ROOT / "__spark_entry__.py"]
+    assert ROOT / "dandi_s3_log_parser_spark" / "cli.py" in sources
+    assert {str(p.relative_to(ROOT)): refs for p in sources
+            if (refs := _ml_references(p))} == {}
