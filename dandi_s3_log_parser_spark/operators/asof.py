@@ -22,8 +22,8 @@ Scale shape (the 100 TB argument):
   For a pathological single hot key, the bucketed carry-forward
   variant applies (rank within (key, coarse ts bucket), prefix the
   tiny per-bucket "last value" table, broadcast it back — the same
-  two-phase trick ``sessionize``/W1 use); not implemented until a
-  workload needs it.
+  two-phase trick ``aggregate.mapped_per_asset`` uses); not
+  implemented until a workload needs it.
 
 Semantics match DuckDB ``ASOF LEFT JOIN`` (the oracle for the
 registered query): for each left row, the right row with the greatest

@@ -421,8 +421,8 @@ def per_key_cap(
     partition contributes at most ``k`` rows per key, a local sort with
     no key grouping), so a 10^9-row hot domain ships ``<= k * num_input_
     partitions`` rows through the shuffle instead of 10^9.  A hand-salted
-    two-phase rank (as ``sessionize``/W1 need for their unlimited
-    windows) would pay a SECOND exchange for nothing here —
+    two-phase rank (as ``aggregate.mapped_per_asset`` needs for its
+    unlimited window) would pay a SECOND exchange for nothing here —
     ``test_per_key_cap_plan_has_partial_group_limit`` pins the rewrite
     so a regression (e.g. an order expression the optimizer can't match)
     fails loudly instead of silently reintroducing the hot-key sort.

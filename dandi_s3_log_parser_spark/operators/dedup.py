@@ -941,6 +941,13 @@ def containment_near_dup(
       and the true intersection over the FULL sets — common grams
       included — is computed with one ``array_intersect`` per pair,
       so the reported containment is exact, never an estimate.
+
+    Eager materialization: the shingle table is ``localCheckpoint``-ed
+    when this function is CALLED, so building the result runs a Spark
+    job even if it is never consumed.  Local checkpoint blocks live
+    only on the executor that computed them (not replicated, no
+    lineage kept): if that executor is lost before the result is
+    consumed, the query fails instead of recomputing the shingles.
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"need 0 < threshold <= 1; got {threshold}")

@@ -44,6 +44,14 @@ def join_size_estimate(
     broadcasts the smaller), a scalar total via broadcast cross join,
     and a ``topn``-sized TakeOrdered — the window for ``cum_share``
     runs over the ``topn``-row result only.
+
+    Eager materialization: the joined count table is
+    ``localCheckpoint``-ed when this function is CALLED, so building
+    the result runs both count aggregates and their join even if it is
+    never consumed.  Local checkpoint blocks live only on the executor
+    that computed them (not replicated, no lineage kept): if that
+    executor is lost before the result is consumed, the query fails
+    instead of recomputing the counts.
     """
     if topn < 1:
         raise ValueError("topn must be >= 1")

@@ -5,124 +5,32 @@ The classic log-analytics operator over the reference's request stream
 (the reference's per-asset activity logs are exactly per-key ordered
 event sequences — ``_map_binned_s3_logs_to_dandisets.py`` materializes
 them; sessionization is the aggregation a traffic analyst runs on them
-next).  Also the batch twin of Structured Streaming's session windows:
-the same (key, session) grouping computed incrementally by
-``F.session_window`` shows up in ``streaming/stream_aggregate.py``.
+next).  Built on Spark's own ``F.session_window``, the operator
+``streaming/stream_aggregate.stream_session_stats`` runs on a stream.
 
-Formulation (pure window functions, no Python, no self-join):
+Formulation (two levels, no Python, no join):
 
-1. ``lag(ts) over (partition by key order by ts)``;
-2. new-session flag = gap > threshold (interval comparison — exact
-   microsecond arithmetic, identical across engines);
-3. session ordinal = running sum of flags;
-4. one hash aggregate keyed (key, session ordinal).
+1. ``groupBy(key, date_trunc("day", ts), session_window(ts, gap))``
+   finds the sessions inside each (key, day) and aggregates them to one
+   row each (count, first and last event);
+2. over those per-day sessions, partitioned by key and ordered by
+   start, ``lag(end)`` flags a session as new when its start lies more
+   than the gap after the previous session's end, a running sum of the
+   flags numbers the sessions, and one aggregate keyed (key, session
+   ordinal) merges the per-day pieces of a session that crosses
+   midnight.
 
-Scale: the window shuffle partitions by key — the same partitioning the
-per-key sinks already need, so on the real pipeline this reuses the
-route exchange.  Skewed hot keys funnel one task each; the two-phase
-time-bucketed rank implemented in ``aggregate.mapped_per_asset``
-applies unchanged (session flags only need lag(1), which the bucket
-boundary provides via the previous bucket's max ts).
+Scale: the first shuffle is hash-partitioned on (key, day), so a hot
+key's events spread over its days instead of funnelling into one task;
+the per-key window of level 2 only sees one row per per-day session.
+The level-2 aggregate reuses the window's key partitioning (no third
+shuffle).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def sessionize(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-    skew_bucket: str | None = "day",
-) -> DataFrame:
-    """Assign each event a per-key session ordinal (0-based).
-
-    Adds ``session_id``; keeps all input columns.
-
-    Skew design (same shape as ``aggregate.mapped_per_asset``): a
-    single per-key window funnels a hot key's whole history into one
-    task.  With ``skew_bucket`` set, the computation is two-phase over
-    ``date_trunc`` buckets:
-
-    1. per (key, bucket): lag within the bucket; the FIRST row of each
-       bucket compares against the previous non-empty bucket's max ts,
-       carried over on the tiny (key, bucket, max_ts, flag_count)
-       side table;
-    2. session ordinal = per-bucket running flag count + the running
-       sum of prior buckets' flag totals (offsets joined back without
-       a broadcast hint — the fact side is already partitioned on the
-       join key).
-
-    Buckets partition event-time order by construction, so the result
-    is row-identical to the single-window formulation (A/B-tested).
-    ``skew_bucket=None`` keeps the one-window path.
-    """
-    gap = F.expr(f"INTERVAL {int(gap_minutes)} MINUTES")
-    if skew_bucket is None:
-        w = Window.partitionBy(key_col).orderBy(ts_col)
-        prev = F.lag(ts_col).over(w)
-        new_sess = (prev.isNull() | (F.col(ts_col) > prev + gap)).cast("long")
-        return events.withColumn(
-            "session_id",
-            F.sum(new_sess).over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            - 1,
-        )
-
-    bucketed = events.withColumn("_bkt", F.date_trunc(skew_bucket, F.col(ts_col)))
-    w_in = Window.partitionBy(key_col, "_bkt").orderBy(ts_col)
-    prev_in = F.lag(ts_col).over(w_in)
-    # rows after the first in their bucket resolve locally; first rows
-    # get a placeholder and resolve against the carried-over prev-bucket
-    # max ts below
-    flagged = bucketed.withColumn("_prev_in", prev_in)
-    # tiny per-(key, bucket) table: last event ts + how many sessions
-    # OPEN within the bucket given a fully-local view (first row counts
-    # as a new session iff its local prev is null — corrected later)
-    per_bkt = (
-        bucketed.groupBy(key_col, "_bkt")
-        .agg(F.max(ts_col).alias("_last_ts"))
-        .withColumn(
-            "_prev_last",
-            F.lag("_last_ts").over(Window.partitionBy(key_col).orderBy("_bkt")),
-        )
-        .drop("_last_ts")
-    )
-    joined = flagged.join(per_bkt, on=[key_col, "_bkt"])
-    prev_eff = F.coalesce(F.col("_prev_in"), F.col("_prev_last"))
-    new_sess = (prev_eff.isNull() | (F.col(ts_col) > prev_eff + gap)).cast("long")
-    with_flag = joined.withColumn("_flag", new_sess)
-    # per-bucket running flag sum + cross-bucket offsets (tiny table)
-    local_cum = F.sum("_flag").over(
-        w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    flagged2 = with_flag.withColumn("_lcum", local_cum)
-    offsets = (
-        with_flag.groupBy(key_col, "_bkt")
-        .agg(F.sum("_flag").alias("_bflags"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_bflags").over(
-                    Window.partitionBy(key_col)
-                    .orderBy("_bkt")
-                    .rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .drop("_bflags")
-    )
-    return (
-        flagged2.join(offsets, on=[key_col, "_bkt"])
-        .withColumn("session_id", F.col("_off") + F.col("_lcum") - 1)
-        .select(*events.columns, "session_id")
-    )
 
 
 def session_stats(
@@ -132,24 +40,45 @@ def session_stats(
     ts_col: str = "ts",
     gap_minutes: int = 30,
 ) -> DataFrame:
-    """One row per (key, session): event count, span, start/end.
+    """One row per (key, session): ``session_id`` (0-based per key, in
+    time order), event count, start/end.
 
-    Timestamps are emitted as microsecond ISO strings so downstream
-    sinks (and cross-engine oracles) are byte-stable.
+    Two consecutive events of a key share a session when the second
+    lies at most ``gap_minutes`` after the first (a gap exactly equal
+    to the threshold does not split).  Events with a NULL timestamp
+    belong to no session and are dropped (``session_window`` filters
+    them).  Timestamps are emitted as microsecond ISO strings so
+    downstream sinks (and cross-engine oracles) are byte-stable.
     """
-    s = sessionize(
-        events, key_col=key_col, ts_col=ts_col, gap_minutes=gap_minutes
+    gap = f"{int(gap_minutes)} minutes"
+    per_day = events.groupBy(
+        F.col(key_col),
+        F.date_trunc("day", ts_col).alias("_day"),
+        F.session_window(ts_col, gap).alias("_sw"),
+    ).agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.min(ts_col).alias("_start"),
+        F.max(ts_col).alias("_end"),
     )
-    aggs = [
-        F.count(F.lit(1)).alias("n_events"),
-        F.date_format(F.min(ts_col), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias(
-            "session_start"
-        ),
-        F.date_format(F.max(ts_col), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias(
-            "session_end"
-        ),
-    ]
-    return s.groupBy(key_col, "session_id").agg(*aggs)
+    w = Window.partitionBy(key_col).orderBy("_start")
+    # a key's first session has no previous end: it opens a session
+    new_sess = F.coalesce(
+        F.col("_start") > F.lag("_end").over(w) + F.expr(f"INTERVAL {gap}"),
+        F.lit(True),
+    ).cast("long")
+    numbered = per_day.withColumn("_new", new_sess).withColumn(
+        "session_id",
+        F.sum("_new").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        - 1,
+    )
+    iso = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
+    return numbered.groupBy(key_col, "session_id").agg(
+        F.sum("_n").alias("n_events"),
+        F.date_format(F.min("_start"), iso).alias("session_start"),
+        F.date_format(F.max("_end"), iso).alias("session_end"),
+    )
 
 
 def event_funnel(events: DataFrame, steps: list[str]) -> DataFrame:

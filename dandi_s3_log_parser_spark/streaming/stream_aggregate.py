@@ -13,8 +13,9 @@ continuous queries:
   bound are dropped deterministically (the reference's batch re-run
   semantics, made incremental).
 - :func:`stream_session_stats` — ``F.session_window`` gap sessions,
-  the streaming twin of ``operators.sessionize`` (same (key, gap)
-  semantics; the batch window-function formulation is the DuckDB-
+  the streaming twin of ``operators.sessionize.session_stats`` (same
+  (key, gap) semantics; the batch operator, ``session_window`` within
+  each (key, day) plus a per-key merge across midnight, is the DuckDB-
   oracled one).
 
 Both are pure built-in operators — watermark + window state lives in

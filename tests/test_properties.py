@@ -27,7 +27,7 @@ PROP = settings(
 T0 = datetime.datetime(2024, 3, 1)
 
 # (user, minute-offset) event sets: few keys -> dense per-key streams,
-# offsets spanning multiple days so the two-phase day buckets engage
+# offsets spanning multiple days so sessions cross the day buckets
 events_strategy = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=3),
@@ -41,22 +41,17 @@ events_strategy = st.lists(
 @pytest.mark.slow
 @PROP
 @given(rows=events_strategy)
-def test_sessionize_two_phase_equals_single_window_property(spark, rows):
-    """The skew-proof two-phase (day-bucketed) sessionize is row-for-row
-    identical to the single-window formulation on ANY event set."""
-    from dandi_s3_log_parser_spark.operators.sessionize import sessionize
+def test_session_stats_matches_gap_reference_property(spark, rows):
+    """The day-bucketed session_stats equals a pure-Python gap-session
+    reference on ANY event set."""
+    from dandi_s3_log_parser_spark.operators.sessionize import session_stats
 
-    df = spark.createDataFrame(
-        [(u, T0 + datetime.timedelta(minutes=m)) for u, m in rows],
-        "user_id long, ts timestamp",
-    )
-    kw = dict(key_col="user_id", ts_col="ts", gap_minutes=90)
-    two_phase = sessionize(df, skew_bucket="day", **kw)
-    single = sessionize(df, skew_bucket=None, **kw)
-    cols = ["user_id", "ts", "session_id"]
-    a = sorted(map(tuple, two_phase.select(*cols).collect()))
-    b = sorted(map(tuple, single.select(*cols).collect()))
-    assert a == b
+    from .test_sessionize_streaming_agg import gap_sessions
+
+    events = [(u, T0 + datetime.timedelta(minutes=m)) for u, m in rows]
+    df = spark.createDataFrame(events, "user_id long, ts timestamp")
+    got = session_stats(df, key_col="user_id", ts_col="ts", gap_minutes=90)
+    assert sorted(map(tuple, got.collect())) == gap_sessions(events, 90)
 
 
 docs_strategy = st.lists(

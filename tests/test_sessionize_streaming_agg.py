@@ -1,5 +1,5 @@
-"""Sessionization (batch window-function + streaming session_window)
-and watermarked streaming windowed totals."""
+"""Sessionization (batch and streaming ``session_window``) and
+watermarked streaming windowed totals."""
 
 from __future__ import annotations
 
@@ -9,10 +9,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from dandi_s3_log_parser_spark.operators.sessionize import (
-    session_stats,
-    sessionize,
-)
+from dandi_s3_log_parser_spark.operators.sessionize import session_stats
 from dandi_s3_log_parser_spark.streaming.stream_aggregate import (
     stream_session_stats,
     stream_windowed_totals,
@@ -21,6 +18,31 @@ from dandi_s3_log_parser_spark.streaming.stream_aggregate import (
 
 def _ts(h, m=0, s=0):
     return dt.datetime(2024, 1, 1, h, m, s)
+
+
+def _iso(t):
+    return t.isoformat(timespec="microseconds")
+
+
+def gap_sessions(rows, gap_minutes):
+    """Pure-Python gap sessions of ``(key, ts)`` rows: the
+    ``(key, session_id, n_events, session_start, session_end)`` rows
+    ``session_stats`` must return, sorted."""
+    by_key = {}
+    for k, t in rows:
+        by_key.setdefault(k, []).append(t)
+    gap = dt.timedelta(minutes=gap_minutes)
+    out = []
+    for k, ts in by_key.items():
+        ts.sort()
+        sessions = [[ts[0]]]
+        for prev, t in zip(ts, ts[1:]):
+            if t - prev > gap:
+                sessions.append([])
+            sessions[-1].append(t)
+        out += [(k, i, len(s), _iso(s[0]), _iso(s[-1]))
+                for i, s in enumerate(sessions)]
+    return sorted(out)
 
 
 @pytest.fixture(scope="module")
@@ -37,12 +59,15 @@ def events(spark):
 
 
 def test_sessionize_assigns_gap_sessions(events):
-    got = sessionize(events, gap_minutes=30).collect()
-    sess = {(r["user_id"], r["ts"].hour, r["ts"].minute): r["session_id"]
-            for r in got}
-    assert sess[(1, 9, 0)] == sess[(1, 9, 10)] == sess[(1, 9, 25)] == 0
-    assert sess[(1, 11, 0)] == sess[(1, 11, 5)] == 1
-    assert sess[(2, 9, 30)] == 0
+    got = {
+        (r["user_id"], r["session_id"]): (r["n_events"], r["session_start"])
+        for r in session_stats(events, gap_minutes=30).collect()
+    }
+    assert got == {
+        (1, 0): (3, _iso(_ts(9, 0))),
+        (1, 1): (2, _iso(_ts(11, 0))),
+        (2, 0): (1, _iso(_ts(9, 30))),
+    }
 
 
 def test_session_stats_boundary_is_strict(spark):
@@ -53,6 +78,51 @@ def test_session_stats_boundary_is_strict(spark):
     assert sorted((r["session_id"], r["n_events"]) for r in out) == [
         (0, 2), (1, 1),
     ]
+
+
+def test_session_stats_drops_null_timestamps(spark):
+    # session_window filters NULL event times: such an event belongs to
+    # no session and leaves its key's other sessions untouched
+    rows = [(1, _ts(9, 0)), (1, None), (1, _ts(9, 10)), (2, None)]
+    d = spark.createDataFrame(rows, "user_id long, ts timestamp")
+    got = sorted(map(tuple, session_stats(d, gap_minutes=30).collect()))
+    assert got == [(1, 0, 2, _iso(_ts(9, 0)), _iso(_ts(9, 10)))]
+
+
+def test_session_stats_plan_shuffles_key_and_day_first(events):
+    """The skew bound: the first shuffle is keyed (key, day bucket), so
+    a hot key's events spread over its days, and every Window runs
+    above an aggregate, over sessions, not events."""
+    import re
+
+    plan = session_stats(events, gap_minutes=30)._jdf.queryExecution()
+    lines = plan.executedPlan().toString().splitlines()
+    # (depth, node) per line; a node's subtree is the lines after it
+    # down to the next one at its depth or shallower
+    nodes = [(len(x) - len(x.lstrip(" :+-")), x.lstrip(" :+-")) for x in lines]
+
+    def below(i):
+        for depth, node in nodes[i + 1:]:
+            if depth <= nodes[i][0]:
+                return
+            yield node
+
+    def is_exchange(node):
+        return node.startswith("Exchange ")
+
+    first = [n for i, (_, n) in enumerate(nodes)
+             if is_exchange(n) and not any(map(is_exchange, below(i)))]
+    assert first, lines
+    for node in first:
+        m = re.match(r"Exchange hashpartitioning\(user_id#\d+L, (\w+#\d+), \d+\)", node)
+        assert m, node
+        day = re.escape(m.group(1))
+        assert any(re.search(rf"date_trunc\(day, ts#\d+.*\) AS {day}\b", x)
+                   for x in lines), lines
+    windows = [i for i, (_, n) in enumerate(nodes) if n.startswith("Window ")]
+    assert windows, lines
+    for i in windows:
+        assert any(n.startswith("HashAggregate") for n in below(i)), lines
 
 
 def test_sessionize_deterministic_under_repartition(events):
@@ -112,19 +182,21 @@ def test_stream_windowed_totals_matches_batch(spark, tmp_path):
 
 
 def test_stream_session_window_matches_batch_sessionize(spark, tmp_path):
-    # session_window on a drained stream == batch window-function
-    # sessionization (same gap), for sessions the watermark closed
+    # session_window on a drained stream == batch session_stats on the
+    # same rows (same gap), for every session the watermark closed
     src = str(tmp_path / "sess_src")
     rows = [
         (1, _ts(9, 0)), (1, _ts(9, 10)), (1, _ts(9, 25)),
         (1, _ts(11, 0)), (1, _ts(11, 5)),
         (2, _ts(9, 30)),
+        # a session across midnight, then one 31 min later
+        (3, _ts(23, 50)), (3, dt.datetime(2024, 1, 2, 0, 10)),
+        (3, dt.datetime(2024, 1, 2, 0, 41)),
         # a late sentinel far ahead so the watermark passes the others
         (99, dt.datetime(2024, 1, 2, 23, 0)),
     ]
-    spark.createDataFrame(rows, "user_id long, ts timestamp").write.mode(
-        "overwrite"
-    ).parquet(src)
+    batch_src = spark.createDataFrame(rows, "user_id long, ts timestamp")
+    batch_src.write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
     out = stream_session_stats(stream, gap="30 minutes", watermark="1 hour")
     sink = str(tmp_path / "sess_sink")
@@ -137,19 +209,35 @@ def test_stream_session_window_matches_batch_sessionize(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
+    iso = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
+    # a streaming session ends one gap after its last event
     got = {
-        (r["user_id"], r["session_start"], r["n_events"])
-        for r in spark.read.parquet(sink).collect()
+        tuple(r)
+        for r in spark.read.parquet(sink).select(
+            "user_id",
+            F.date_format("session_start", iso),
+            F.date_format(
+                F.col("session_end") - F.expr("INTERVAL 30 MINUTES"), iso
+            ),
+            "n_events",
+        ).collect()
     }
-    assert (1, _ts(9, 0), 3) in got
-    assert (1, _ts(11, 0), 2) in got
-    assert (2, _ts(9, 30), 1) in got
+    # closed: last event + gap lies before the final watermark
+    # (max ts - 1 hour)
+    horizon = max(t for _, t in rows) - dt.timedelta(hours=1, minutes=30)
+    want = {
+        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
+        for r in session_stats(batch_src, gap_minutes=30).collect()
+        if dt.datetime.fromisoformat(r["session_end"]) < horizon
+    }
+    assert len(want) == 5
+    assert got == want
 
 
-def test_sessionize_two_phase_equals_single_window(spark):
-    """Bucketed two-phase sessionization must be row-identical to the
-    single-window formulation, including sessions spanning bucket
-    boundaries and multi-bucket-gap silences."""
+def test_session_stats_matches_gap_reference(spark):
+    """session_stats equals a pure-Python gap-session reference on a
+    hot key's long history (sessions across midnight, multi-day
+    silences) and at a midnight boundary."""
     import random
 
     rng = random.Random(7)
@@ -167,13 +255,14 @@ def test_sessionize_two_phase_equals_single_window(spark):
              (2, dt.datetime(2024, 1, 2, 0, 10)),
              (2, dt.datetime(2024, 1, 2, 0, 41))]
     d = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    a = sorted(map(tuple, sessionize(d, gap_minutes=30, skew_bucket="day").collect()))
-    b = sorted(map(tuple, sessionize(d, gap_minutes=30, skew_bucket=None).collect()))
-    assert a == b
+    got = sorted(map(tuple, session_stats(d, gap_minutes=30).collect()))
+    assert got == gap_sessions(rows, 30)
     # midnight-crossing pair stays one session; 0:41 (31min gap) splits
-    got = {(r[0], r[1]): r[2] for r in a}
-    assert got[(2, dt.datetime(2024, 1, 1, 23, 50))] == got[(2, dt.datetime(2024, 1, 2, 0, 10))]
-    assert got[(2, dt.datetime(2024, 1, 2, 0, 41))] == got[(2, dt.datetime(2024, 1, 2, 0, 10))] + 1
+    user2 = [r[1:] for r in got if r[0] == 2]
+    assert user2 == [
+        (0, 2, "2024-01-01T23:50:00.000000", "2024-01-02T00:10:00.000000"),
+        (1, 1, "2024-01-02T00:41:00.000000", "2024-01-02T00:41:00.000000"),
+    ]
 
 
 # ---------------------------------------------------------------------------
